@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from data_ingest_utils_spark.operators.relational import ensure_parallelism
-from data_ingest_utils_spark.operators.text import distinct_shingles, shingles, tokens
+from data_ingest_utils_spark.operators.text import shingles, tokens
 
 
 def exact_dedup(
@@ -284,10 +284,9 @@ def _shingle_hash_arrays(
     the filtered frame computes and persists exactly the partitions
     the old ``eager=True`` checkpoint did (Spark's eager local
     checkpoint is itself an internal ``rdd.count()``), so the corpus
-    size every auto-gate downstream needs (collision-verify floor,
-    future broadcast ceilings) comes out of the job the caller was
-    already paying for, and the former per-call ``limit().count()``
-    gate-probe job is gone.
+    size :func:`ngram_jaccard_banded`'s collision-verify floor needs
+    comes out of the job the caller was already paying for, and the
+    former per-call ``limit().count()`` gate-probe job is gone.
 
     The checkpoint serves both callers
     (:func:`minhash_jaccard_verified`, :func:`ngram_jaccard_banded`)
@@ -310,10 +309,10 @@ def _shingle_hash_arrays(
       trade (executor loss ⇒ stage retry from the checkpoint's
       parents) is the standard one for LSH materialization.
 
-    Timing note: the eager checkpoint runs its job at plan-CONSTRUCTION
-    time; bench.py and the sweep both start their timers before the
-    ``QUERIES[key](...)`` call, so the cost stays inside the measured
-    window."""
+    Timing note: the lazy checkpoint's ``count()`` below runs its job
+    at plan-CONSTRUCTION time; bench.py and the sweep both start their
+    timers before the ``QUERIES[key](...)`` call, so the cost stays
+    inside the measured window."""
     hv = ensure_parallelism(df, id_col).select(
         id_col,
         *keep_cols,  # pass-through tags (e.g. the incremental probe's
@@ -326,8 +325,7 @@ def _shingle_hash_arrays(
     out = hv.localCheckpoint(eager=False).filter(F.size("hv") > 0)
     # the count action materializes the lazy checkpoint (all
     # partitions — count has no limit short-circuit) and returns the
-    # FILTERED doc count, the same population the collision gate's old
-    # probe counted
+    # FILTERED doc count
     return out, out.count()
 
 
@@ -339,9 +337,8 @@ def _verify_pairs_array(
     ``array_intersect`` shape: attach both docs' DISTINCT shingle-hash
     arrays, score inside one codegen stage, no exploded pair × shingle
     intermediate.  ``inter > 0`` is unconditional — zero-overlap
-    band-collision pairs must never surface (the exploded twin's inner
-    intersection join can't emit them, and at threshold=0.0 they would
-    otherwise appear with jaccard=0.0).  Shared by
+    band-collision pairs must never surface (at threshold=0.0 they
+    would otherwise appear with jaccard=0.0).  Shared by
     :func:`ngram_jaccard_banded` and :func:`minhash_jaccard_verified`
     so the two verify stages can't drift.
 
@@ -364,8 +361,8 @@ def _verify_pairs_array(
       broadcast memory is ~2× the table size: ~2 KB/doc at the 3-gram
       default ⇒ 1 M docs ≈ 2 GB serialized ≈ 4 GB of broadcast state,
       inside the per-broadcast 8 GB cap and comfortable on this
-      128 GB driver; tune ``broadcast_max_docs`` down on smaller
-      drivers.  At 100 TB corpus scale the gate fails
+      128 GB driver; tune ``BROADCAST_VERIFY_MAX_DOCS`` down on
+      smaller drivers.  At 100 TB corpus scale the gate fails
       closed to the shuffle shape, whose candidate-bounded asymptotics
       are the scale story.  On a single-host local master the
       exchange it saves is not a network hop, and the broadcast build
@@ -467,19 +464,20 @@ def _verify_pairs_collision(
 
     Each doc's distinct shingle-hash array rides the band explode
     (``signatures*4`` copies, ~1.6 KB each — docs×bands volume), the
-    band self-join emits collisions WITH both arrays already in the
-    row, and the exact score + threshold filter run inside the same
-    stage — so the candidate set never materializes, never dedups
-    pre-verify, and never re-shuffles with array payloads.  Multi-band
-    collisions are scored redundantly and deduped by the final
-    ``distinct`` over survivors only (tiny).  Shuffle volume is
-    O(docs × bands × array) instead of O(candidates × array × 2):
-    with collisions-per-doc ≈ 130–160 on this corpus class, that is
-    ~30–40× less through the exchange — decisive once the attach
-    volume is disk-bound, irrelevant while it fits the page cache.
-    Output is byte-identical to the attach shapes at every threshold
-    (zero-intersection collisions are filtered before scoring, same
-    contract)."""
+    band self-join on (band_idx, band_val) emits collisions WITH both
+    arrays already in the row, and the exact score + threshold filter
+    run inside the same stage — so the candidate set never
+    materializes, never dedups pre-verify, and never re-shuffles with
+    array payloads.  Multi-band collisions are scored redundantly and
+    deduped by the final ``distinct`` over survivors only (tiny).
+    Shuffle volume is O(docs × bands × array) instead of
+    O(candidates × array × 2): with collisions-per-doc ≈ 130–160 on
+    this corpus class, that is ~30–40× less through the exchange —
+    decisive once the attach volume is disk-bound, irrelevant while it
+    fits the page cache.  The scoring expressions are the exact ones
+    :func:`_verify_pairs_array` applies (``inter > 0`` unconditional,
+    4-dp round), so output is byte-identical to the attach shape at
+    every threshold."""
     # INVARIANT (VERDICT r17 #3): this simhash64 call replaces the
     # candidate path entirely — when the collision shape is chosen,
     # simhash_band_candidates never runs, so signatures are computed
@@ -496,36 +494,15 @@ def _verify_pairs_collision(
             "band_idx", "band_val"
         ),
     )
-    return _collision_score(bands, id_col, threshold)
-
-
-def _collision_score(
-    bands: DataFrame, id_col: str, threshold: float,
-    val_col: str = "band_val",
-) -> DataFrame:
-    """Score every band collision IN PLACE — the shared self-join +
-    exact-Jaccard half of the collision verify shape: ``bands`` is
-    ``(id, hv, band_idx, <val_col>)`` rows whose arrays already ride
-    the band shuffle, the self-join on (band_idx, value) emits
-    collisions with both arrays in the row, and score + threshold run
-    inside the same stage.  Multi-band collisions are scored
-    redundantly and deduped by the final ``distinct`` over survivors
-    only (tiny).  Shared by the simhash pipeline
-    (:func:`_verify_pairs_collision`) and the MinHash pipeline
-    (:func:`minhash_jaccard_verified` with ``verify="collision"``) so
-    the two collision scorers cannot drift; the scoring expressions
-    are the exact ones :func:`_verify_pairs_array` applies
-    (``inter > 0`` unconditional, 4-dp round), so output is
-    byte-identical to the attach shapes at every threshold."""
     a = bands.select(
         F.col(id_col).alias("doc_a"), F.col("hv").alias("hva"),
-        "band_idx", val_col,
+        "band_idx", "band_val",
     )
     b = bands.select(
         F.col(id_col).alias("doc_b"), F.col("hv").alias("hvb"),
-        "band_idx", val_col,
+        "band_idx", "band_val",
     )
-    coll = a.join(b, ["band_idx", val_col]).filter(
+    coll = a.join(b, ["band_idx", "band_val"]).filter(
         F.col("doc_a") < F.col("doc_b")
     )
     inter = F.size(F.array_intersect("hva", "hvb"))
@@ -547,11 +524,10 @@ def _collision_score(
 
 
 def _resolve_broadcast_verify(
-    df: DataFrame, flag: bool | None, max_docs: int, id_col: str,
-    master: str | None = None,
+    df: DataFrame, id_col: str, master: str | None = None,
 ) -> bool:
-    """``flag`` if explicit, else auto: broadcast iff the session is
-    DISTRIBUTED and the doc count fits ``max_docs``.
+    """Broadcast the verify attach iff the session is DISTRIBUTED and
+    the doc count fits ``BROADCAST_VERIFY_MAX_DOCS``.
 
     The broadcast attach exists to save a network exchange (the
     per-pair array re-shuffle); on a ``local[*]`` master there is no
@@ -575,8 +551,6 @@ def _resolve_broadcast_verify(
     best 7.57 s vs broadcast arm 3×BroadcastHashJoin best 4.33 s,
     rows identical (2357) — the inversion this gate predicts on
     multi-executor masters."""
-    if flag is not None:
-        return flag
     master = master or df.sparkSession.sparkContext.master
     # local[N] / local[*] / local are single-JVM (no serialized
     # exchange to save); local-cluster[n,c,m] spawns REAL executor
@@ -585,57 +559,12 @@ def _resolve_broadcast_verify(
     # uses to exercise it (VERDICT r8 #5).
     if master.startswith("local") and not master.startswith("local-cluster"):
         return False
+    max_docs = BROADCAST_VERIFY_MAX_DOCS
+    # probes the UNFILTERED df on purpose (errs scale-safe): never reuse filtered n_docs
     # limit(max_docs + 1) bounds the probe's work by the GATE, not the
     # corpus: a plain count would scan the full id column at exactly
     # the 100 TB scale where the answer is a foregone "too big".
     return df.select(id_col).limit(max_docs + 1).count() <= max_docs
-
-
-def _verify_pairs_explode(
-    cands: DataFrame, df: DataFrame, n: int, id_col: str, threshold: float
-) -> DataFrame:
-    """Exact-Jaccard confirmation via the candidate-bounded
-    two-equi-join EXPLODE shape: join candidates to doc_a's distinct
-    shingles, match on (doc_b, shingle), hash-agg the intersection —
-    per-row state O(1), the fallback for UNBOUNDED documents where
-    collected shingle arrays could not sit in a row.  Shared by
-    :func:`ngram_jaccard_length_blocked` and
-    :func:`ngram_jaccard_banded` (``verify="explode"``) so the two
-    explode-verify stages can't drift — the twin of
-    :func:`_verify_pairs_array`, byte-identical output at every
-    threshold (zero-intersection pairs never survive the inner join).
-    """
-    sh = distinct_shingles(df.select(id_col, "text"), n, id_col)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("n_sh"))
-    inter = (
-        cands.join(sh.select(F.col(id_col).alias("doc_a"), "shingle"), "doc_a")
-        .join(sh.select(F.col(id_col).alias("doc_b"), "shingle"), ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return _jaccard_from_inter(inter, sizes, id_col, threshold)
-
-
-def _jaccard_from_inter(inter: DataFrame, sizes: DataFrame, id_col: str,
-                        threshold: float) -> DataFrame:
-    """J = inter / (|A|+|B|-inter) for (doc_a, doc_b, inter) rows,
-    4-dp rounded (contract), filtered to >= threshold."""
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("inter")),
-                4,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 def ngram_jaccard_pairs(
@@ -644,7 +573,6 @@ def ngram_jaccard_pairs(
     block_cols: str | Sequence[str] = ("lang",),
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    block_col: str | Sequence[str] | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity over blocked candidate pairs.
 
@@ -658,21 +586,7 @@ def ngram_jaccard_pairs(
     For unbounded-cardinality blocking the scale path is
     :func:`ngram_jaccard_banded` (SimHash bands keep candidates
     near-linear regardless of corpus shape).
-
-    ``block_col`` is a deprecated alias for ``block_cols`` (the
-    pre-multi-column keyword), kept for external callers of the
-    library surface advertised in README.
     """
-    if block_col is not None:
-        import warnings
-
-        warnings.warn(
-            "ngram_jaccard_pairs(block_col=...) is deprecated; "
-            "use block_cols",
-            DeprecationWarning,
-            stacklevel=2,
-        )
-        block_cols = block_col
     blocks = [block_cols] if isinstance(block_cols, str) else list(block_cols)
     # block cols are functionally dependent on id_col, so carrying them
     # through the explode+distinct costs nothing — and saves the
@@ -701,7 +615,22 @@ def ngram_jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("inter"))
     )
-    return _jaccard_from_inter(inter, sizes, id_col, threshold)
+    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_sh").alias("na"))
+    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_sh").alias("nb"))
+    return (
+        inter.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .withColumn(
+            "jaccard",
+            F.round(
+                F.col("inter").cast("double")
+                / (F.col("na") + F.col("nb") - F.col("inter")),
+                4,
+            ),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("doc_a", "doc_b", "jaccard")
+    )
 
 
 def ngram_jaccard_length_blocked(
@@ -718,9 +647,8 @@ def ngram_jaccard_length_blocked(
     ``{len//w, len//w + 1}``, so any pair within ``bucket_chars`` of
     each other shares a bucket — no boundary stragglers, unlike naive
     same-bucket blocking.  Candidates are DISTINCT doc pairs (a pair
-    can share two buckets), then scored with the candidate-bounded
-    two-equi-join intersection (same shape as
-    :func:`ngram_jaccard_banded`), which cannot double-count.
+    can share two buckets), then scored once each by
+    :func:`_verify_pairs_array`, so no pair is double-counted.
 
     NOTE (eager side effect, ADVICE r9): building this plan runs a
     Spark job — the shingle-array signature table is materialized
@@ -785,10 +713,7 @@ def simhash_band_candidates(
     id_col: str = "doc_id",
     unit: str = "token",
     n: int = 3,
-    hamming_max: int | None = None,
     signatures: int = 2,
-    size_frame: DataFrame | None = None,
-    size_threshold: float | None = None,
 ) -> DataFrame:
     """Candidate pairs from SimHash band collisions: docs sharing ANY
     of the ``signatures * 4`` 16-bit bands.  Near-linear at scale —
@@ -818,30 +743,6 @@ def simhash_band_candidates(
     ``signatures`` 8-byte words per doc vs 16 minhash values over
     every shingle.  ``signatures=1`` restores the pre-round-16 4-band
     geometry exactly.
-
-    ``hamming_max`` adds a full-signature prefilter: candidate pairs
-    whose signatures differ in more than ``signatures * hamming_max``
-    bits TOTAL are cut BEFORE any downstream (expensive) exact
-    verification — one ``bit_count(xor)`` JVM expression per signature
-    per collision, no extra shuffle beyond the two narrow
-    signature-attach joins.  A J ≥ 0.5 shingle pair has cosine ≈
-    2J/(1+J) = 2/3 ⇒ expected Hamming ≈ 64·θ/π ≈ 17 per 64-bit
-    signature (σ ≈ 3.5, and summing over signatures halves the
-    relative σ), so ``hamming_max=28`` keeps ≥ 3σ of recall headroom
-    while discarding the band-collision background (E[H] = 32/64).
-
-    ``size_frame`` + ``size_threshold`` (round 17, VERDICT r16 #4) add
-    a LOSSLESS size prefilter: ``size_frame`` is ``(id_col, _n)`` with
-    ``_n`` each doc's verify-feature count (distinct shingle hashes —
-    free as ``size(hv)`` off the verify stage's already-materialized
-    array table), and for exact Jaccard ≥ τ it must hold that
-    ``min(|A|,|B|) ≥ τ·max(|A|,|B|)`` (since |A∩B| ≤ min and
-    |A∪B| ≥ max) — so cutting pairs outside that band removes ZERO
-    true pairs by construction, unlike the recall-bearing
-    ``hamming_max``.  The two int counts ride the band explode
-    (+8 B/row on the wide shuffle) and the cut applies BEFORE the
-    pair ``distinct`` and the array-attach joins.  Measured A/B:
-    SIZEFILTER_AB_r17.json.
     """
     # Materialize the signature table ONCE before the band self-join:
     # both sides of the (band_idx, band_val) join consume `bands`, and
@@ -855,62 +756,20 @@ def simhash_band_candidates(
     sig = simhash64(
         df, text_col, id_col, unit, n, signatures=signatures
     ).localCheckpoint(eager=True)
-    n_bands = signatures * 4
-    sig_names = ["simhash"] + [f"simhash{s}" for s in range(1, signatures)]
-    # Ship the full 64-bit signatures through the band-collision
-    # shuffle ONLY when the Hamming prefilter will consume them — dead
-    # payload on the job's widest exchange otherwise.  Same rule for
-    # the size prefilter's feature count (one int per row).
-    sig_cols = list(sig_names) if hamming_max is not None else []
-    if size_frame is not None:
-        if size_threshold is None:
-            raise ValueError("size_frame requires size_threshold")
-        # one-row-per-doc ⋈ one-row-per-doc on the id — doc-count
-        # sized, negligible next to the band explode it feeds
-        sig = sig.join(size_frame.select(id_col, "_n"), id_col)
-        sig_cols = sig_cols + ["_n"]
     bands = sig.select(
         id_col,
-        *sig_cols,
-        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(n_bands)])).alias(
-            "band_idx", "band_val"
-        ),
+        F.posexplode(
+            F.array(*[F.col(f"band{b}") for b in range(signatures * 4)])
+        ).alias("band_idx", "band_val"),
     )
-    a = bands.select(
-        F.col(id_col).alias("doc_a"),
-        *[F.col(c).alias(f"_sa{i}") for i, c in enumerate(sig_cols)],
-        "band_idx",
-        "band_val",
+    a = bands.select(F.col(id_col).alias("doc_a"), "band_idx", "band_val")
+    b = bands.select(F.col(id_col).alias("doc_b"), "band_idx", "band_val")
+    return (
+        a.join(b, ["band_idx", "band_val"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
     )
-    b = bands.select(
-        F.col(id_col).alias("doc_b"),
-        *[F.col(c).alias(f"_sb{i}") for i, c in enumerate(sig_cols)],
-        "band_idx",
-        "band_val",
-    )
-    pairs = a.join(b, ["band_idx", "band_val"]).filter(F.col("doc_a") < F.col("doc_b"))
-    if size_frame is not None:
-        # Lossless for exact Jaccard ≥ τ: |A∩B| ≤ min(|A|,|B|) and
-        # |A∪B| ≥ max(|A|,|B|), so J ≥ τ ⟹ min ≥ τ·max.  The 1e-9
-        # slack absorbs the float product at the boundary (min and
-        # max are exact ints).  Applied BEFORE the distinct so cut
-        # collisions never reach the dedup agg either.
-        i_n = len(sig_cols) - 1
-        na, nb = F.col(f"_sa{i_n}"), F.col(f"_sb{i_n}")
-        pairs = pairs.filter(
-            F.least(na, nb).cast("double")
-            >= F.lit(size_threshold) * F.greatest(na, nb) - F.lit(1e-9)
-        )
-    if hamming_max is not None:
-        total_hamming = sum(
-            (
-                F.bit_count(F.col(f"_sa{i}").bitwiseXOR(F.col(f"_sb{i}")))
-                for i in range(1, len(sig_names))
-            ),
-            start=F.bit_count(F.col("_sa0").bitwiseXOR(F.col("_sb0"))),
-        )
-        pairs = pairs.filter(total_hamming <= signatures * hamming_max)
-    return pairs.select("doc_a", "doc_b").distinct()
 
 
 def ngram_jaccard_banded(
@@ -919,125 +778,64 @@ def ngram_jaccard_banded(
     id_col: str = "doc_id",
     threshold: float = 0.5,
     unit: str = "token",
-    hamming_max: int | None = None,
-    verify: str = "auto",
-    broadcast_verify: bool | None = None,
-    broadcast_max_docs: int = BROADCAST_VERIFY_MAX_DOCS,
     signatures: int = 2,
-    size_prefilter: bool = False,
 ) -> DataFrame:
     """Exact n-gram Jaccard scored ONLY over SimHash-band candidate
     pairs — the 100 TB shape of :func:`ngram_jaccard_pairs`.
 
     Candidates come from :func:`simhash_band_candidates` (near-dups
-    collide in a band w.h.p.; ``unit``/``hamming_max``/``signatures``
-    expose the blocking dials — see that docstring's measured
-    trade-offs; the ``signatures=2`` 8×16-band default landed round 16
-    lifts candidate recall 0.887 → 0.965 at sf0.1 for ~1.9× candidate
+    collide in a band w.h.p.; ``unit``/``signatures`` expose the
+    blocking dials — see that docstring's measured trade-offs; the
+    ``signatures=2`` 8×16-band default landed round 16 lifts
+    candidate recall 0.887 → 0.965 at sf0.1 for ~1.9× candidate
     volume); the exact score then confirms, so precision is always 1
     and only candidate recall is approximate.  Rows-only key (xxhash64
     has no DuckDB twin); recall/precision invariants asserted in
     tests/test_invariants.py and tools/rowsonly_certificate.py
     (recall ≥ 0.95 vs the exact-verify reference).
 
-    Three verify shapes (``verify=``; default ``"auto"`` resolves to
-    ``"array"`` below COLLISION_VERIFY_MIN_DOCS docs and
-    ``"collision"`` at/above — both measured, see the constant; the
-    doc count comes out of the array table's own materialization job,
-    so the gate costs no extra action at all — round 18):
+    The corpus size picks the verify shape: below
+    COLLISION_VERIFY_MIN_DOCS docs the array shape, at/above it the
+    collision shape — both measured, see the constant.  The doc count
+    comes out of the array table's own materialization job, so the
+    choice costs no extra action (round 18).  Both shapes produce
+    byte-identical output at EVERY threshold including 0.0.
 
-    - ``"array"``: each candidate pair is joined to the two
-      docs' DISTINCT-shingle-hash arrays and scored per-row with
+    - Array shape: each candidate pair is joined to the two docs'
+      DISTINCT-shingle-hash arrays and scored per-row with
       ``size(array_intersect(...))`` — no exploded intermediate at
       all.  Cost is O(|cand| · shingles/doc) inside one codegen stage;
       the per-row payload is bounded by shingles/doc (~8 B each), the
       right shape whenever docs are bounded (web/LLM corpora).
       Measured round 6 on the sf1.0 bench corpus (3.47 M candidates):
-      18.5 s vs 35.7 s for the explode shape in the same session, at
-      byte-identical output — the explode shape shuffles a 700 M-row
-      (pair × shingle) intermediate through two joins and a hash agg.
-      Intersections compare xxhash64 values, not strings: a cross-doc
-      collision inflates one intersection count with p ≈ s²/2⁶⁴ per
-      pair (s ≈ shingles/doc — vanishing at any real s).
-    - ``"explode"``: the candidate-bounded two-equi-join shape (join
-      candidates to doc_a's shingles, match on (doc_b, shingle), hash
-      agg).  Keeps per-row state O(1) — the fallback for UNBOUNDED
-      documents where collected shingle arrays could not sit in a row.
-    - ``"collision"`` (round 17): arrays ride the band shuffle and
+      18.5 s vs 35.7 s for an exploded pair × shingle formulation in
+      the same session, at byte-identical output.  Intersections
+      compare xxhash64 values, not strings: a cross-doc collision
+      inflates one intersection count with p ≈ s²/2⁶⁴ per pair
+      (s ≈ shingles/doc — vanishing at any real s).  On DISTRIBUTED
+      masters within ``BROADCAST_VERIFY_MAX_DOCS`` the per-doc array
+      table is broadcast into both attach joins, so the pair stream
+      never re-shuffles; local masters keep the shuffle attach
+      (measured faster — no network to save; see
+      :func:`_resolve_broadcast_verify`).
+    - Collision shape (round 17): arrays ride the band shuffle and
       every collision is scored in-place — no candidate
       materialization, no per-pair array re-shuffle; shuffle volume
       O(docs × bands × array) instead of O(candidates × array × 2).
       The 100 TB shape once candidates × array leave the page cache:
-      measured 1.73× over "array" at 500 k docs / 78.9 M candidates
-      (SCALE10_r17.json), slower below the gate where the attach
-      exchange is a memcpy.  See :func:`_verify_pairs_collision`.
-
-    Both shapes drop zero-intersection candidate pairs (the explode
-    shape's inner join can never see them; the array shape filters
-    ``inter > 0`` explicitly), so the outputs are byte-identical at
-    EVERY threshold including 0.0.
-
-    ``broadcast_verify`` (array shape only): ``None`` auto-broadcasts
-    the per-doc hash-array table into both attach joins on DISTRIBUTED
-    masters when the doc count is within ``broadcast_max_docs`` — the
-    pair stream then never re-shuffles, replacing the per-pair array
-    network exchange with one per-executor array ship.  Local masters
-    keep the shuffle attach (measured faster — no network to save; see
-    :func:`_resolve_broadcast_verify` for the A/B numbers).
-    ``True``/``False`` force the choice (and skip the count probe).
+      measured 1.73× over the array shape at 500 k docs / 78.9 M
+      candidates (SCALE10_r17.json), slower below the gate where the
+      attach exchange is a memcpy.  See :func:`_verify_pairs_collision`.
     """
-    if verify not in ("auto", "array", "explode", "collision"):
-        raise ValueError(
-            f"verify={verify!r} must be 'auto', 'array', 'explode' or "
-            "'collision'"
-        )
-    if size_prefilter and verify not in ("array", "auto"):
-        # the explode path never materializes the per-doc arrays the
-        # counts come from — adding them would cost the tokenize pass
-        # the filter is meant to save; the collision path has no
-        # separate candidate stage to prefilter
-        raise ValueError("size_prefilter requires the array verify shape")
-    if hamming_max is not None and verify == "collision":
-        # the collision rows carry arrays, not the 64-bit signatures
-        # the Hamming cut needs — and the exact score they do carry is
-        # strictly stronger, so the prefilter has nothing to add
-        raise ValueError("hamming_max requires a candidate-stage shape")
-    hv, n_docs = (
-        _shingle_hash_arrays(df, n, id_col)
-        if verify in ("auto", "array", "collision") else (None, None)
-    )
-    if verify == "auto":
-        # Prefilter dials force the candidate-stage (array) shape —
-        # they exist to thin ITS pair stream; otherwise pick by
-        # corpus size.  The count comes out of the hv materialization
-        # job itself (round 18, VERDICT r17 #4) — no separate probe
-        # job runs.
-        if size_prefilter or hamming_max is not None:
-            verify = "array"
-        else:
-            verify = (
-                "collision" if n_docs >= COLLISION_VERIFY_MIN_DOCS
-                else "array"
-            )
-    if verify == "collision":
+    hv, n_docs = _shingle_hash_arrays(df, n, id_col)
+    if n_docs >= COLLISION_VERIFY_MIN_DOCS:
         return _verify_pairs_collision(
             df, hv, n, id_col, threshold, unit, signatures
         )
     cands = simhash_band_candidates(
-        df, id_col=id_col, unit=unit, n=n, hamming_max=hamming_max,
-        signatures=signatures,
-        # LOSSLESS candidate cut (see simhash_band_candidates): the
-        # counts are size(hv) off the verify stage's own checkpoint,
-        # so no extra tokenize pass
-        size_frame=(
-            hv.select(id_col, F.size("hv").alias("_n"))
-            if size_prefilter else None
-        ),
-        size_threshold=threshold if size_prefilter else None,
+        df, id_col=id_col, unit=unit, n=n, signatures=signatures
     )
-    if verify == "explode":
-        return _verify_pairs_explode(cands, df, n, id_col, threshold)
-    bcast = _resolve_broadcast_verify(df, broadcast_verify, broadcast_max_docs, id_col)
+    bcast = _resolve_broadcast_verify(df, id_col)
     return _verify_pairs_array(cands, hv, id_col, threshold, broadcast_arrays=bcast)
 
 
@@ -1235,7 +1033,6 @@ def minhash_band_candidates(
 
 def _signatures_from_hash_arrays(
     hv: DataFrame, id_col: str, num_perm: int, hv_col: str = "hv",
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """MinHash signatures derived from a precomputed per-doc feature-
     hash array instead of raw text: permutation *i* is ``min`` over
@@ -1244,12 +1041,9 @@ def _signatures_from_hash_arrays(
     set equals min over the shingle multiset), but reads ~1.6 KB/doc
     of longs instead of re-running tokenize → shingle → hash, so a
     pipeline that already built the verify arrays gets its candidate
-    signatures nearly for free.  ``keep_cols`` pass through unchanged
-    (the collision verify shape carries ``hv`` itself alongside the
-    signatures so the arrays ride the band shuffle)."""
+    signatures nearly for free."""
     return hv.select(
         id_col,
-        *keep_cols,
         *[
             F.array_min(
                 F.transform(hv_col, lambda h: F.xxhash64(F.lit(i), h))
@@ -1261,7 +1055,6 @@ def _signatures_from_hash_arrays(
 
 def _banded_rows(
     sig: DataFrame, id_col: str, num_perm: int, bands: int, out_id: str,
-    keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """``(out_id, band_idx, band_hash)`` rows from a ``mh0..mh{n-1}``
     signature frame — one row per (doc, band), hash over the band's
@@ -1281,7 +1074,6 @@ def _banded_rows(
     ]
     return sig.select(
         F.col(id_col).alias(out_id),
-        *keep_cols,  # e.g. the collision verify's hv array rides here
         F.posexplode(F.array(*band_hashes)).alias("band_idx", "band_hash"),
     )
 
@@ -1312,43 +1104,21 @@ def minhash_jaccard_verified(
     num_perm: int = 16,
     bands: int = 16,
     shingle_n: int = 3,
-    broadcast_verify: bool | None = None,
-    broadcast_max_docs: int = BROADCAST_VERIFY_MAX_DOCS,
-    verify: str = "auto",
 ) -> DataFrame:
     """Two-stage near-dedup mirroring production stacks: banded-MinHash
     candidate pairs (cheap, near-linear, recall dialed by bands/rows)
     → EXACT shingle-Jaccard confirmation (no false positives survive).
 
     The verify stage is candidate-bounded and uses the per-pair
-    ``array_intersect`` shape (see :func:`ngram_jaccard_banded` — no
+    ``array_intersect`` shape (:func:`_verify_pairs_array` — no
     exploded pair × shingle intermediate; byte-identical scores), with
-    the same ``broadcast_verify`` auto-gate: small-corpus runs attach
-    the arrays via broadcast-hash joins (no per-pair re-shuffle),
-    100 TB corpora fail the gate closed to the shuffle attach.
-    Output is (doc_a, doc_b, jaccard ≥ threshold) with exact 4-dp
-    scores — downstream ``connected_components`` + keep-min-id
+    the same broadcast auto-gate as :func:`ngram_jaccard_banded`
+    (:func:`_resolve_broadcast_verify`): small corpora on distributed
+    masters attach the arrays via broadcast-hash joins (no per-pair
+    re-shuffle), 100 TB corpora fail the gate closed to the shuffle
+    attach.  Output is (doc_a, doc_b, jaccard ≥ threshold) with exact
+    4-dp scores — downstream ``connected_components`` + keep-min-id
     completes the dedup.
-
-    ``verify`` (round 18, VERDICT r17 #3 — the same two shapes and the
-    same measured gate as :func:`ngram_jaccard_banded`):
-
-    - ``"array"``: candidates materialize from band collisions, then
-      two attach joins ship each doc's array per CANDIDATE PAIR — the
-      small-corpus winner (the attach exchange is a page-cache memcpy
-      below the gate).
-    - ``"collision"``: each doc's array rides the band explode itself
-      (``bands`` copies — docs×bands volume, the b=16/r=1 default puts
-      16 array copies through the one band shuffle) and every band
-      collision is scored in place by the SHARED
-      :func:`_collision_score` — no candidate materialization, no
-      per-pair array re-shuffle.  Shuffle volume O(docs × bands ×
-      array) instead of O(candidates × array × 2); byte-identical
-      output (zero-intersection collisions filtered before scoring,
-      survivors deduped at the end).
-    - ``"auto"``: ``"collision"`` at/above COLLISION_VERIFY_MIN_DOCS
-      docs, ``"array"`` below — the doc count comes out of the hv
-      materialization job itself, so the gate costs no extra action.
 
     Sub-shingle docs (fewer than ``shingle_n`` tokens) never reach
     signature computation: the materialized shingle-hash-array frame
@@ -1369,29 +1139,11 @@ def minhash_jaccard_verified(
     """
     if num_perm % bands:
         raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
-    if verify not in ("auto", "array", "collision"):
-        raise ValueError(
-            f"verify={verify!r} must be 'auto', 'array' or 'collision'"
-        )
     base = df.select(id_col, F.col(text_col).alias("text"))
-    hv, n_docs = _shingle_hash_arrays(base, shingle_n, id_col)
-    if verify == "auto":
-        verify = (
-            "collision" if n_docs >= COLLISION_VERIFY_MIN_DOCS else "array"
-        )
-    if verify == "collision":
-        # hv itself rides the band explode: signatures AND the array
-        # come off the one checkpoint, map-only until the band shuffle
-        bands_hv = _banded_rows(
-            _signatures_from_hash_arrays(hv, id_col, num_perm,
-                                         keep_cols=("hv",)),
-            id_col, num_perm, bands, id_col, keep_cols=("hv",),
-        )
-        return _collision_score(bands_hv, id_col, threshold,
-                                val_col="band_hash")
+    hv, _ = _shingle_hash_arrays(base, shingle_n, id_col)
     sig = _signatures_from_hash_arrays(hv, id_col, num_perm)
     cands = _band_pairs_from_signatures(sig, id_col, num_perm, bands)
-    bcast = _resolve_broadcast_verify(df, broadcast_verify, broadcast_max_docs, id_col)
+    bcast = _resolve_broadcast_verify(df, id_col)
     return _verify_pairs_array(cands, hv, id_col, threshold, broadcast_arrays=bcast)
 
 

@@ -75,77 +75,17 @@ def test_banded_jaccard_matches_exact_survivors(spark, planted_docs):
     assert len(banded) >= 0.8 * len(exact), (len(banded), len(exact))
 
 
-def test_banded_size_prefilter_lossless(spark, planted_docs):
-    """Round 17 (VERDICT r16 #4): the size prefilter is LOSSLESS by
-    construction — J ≥ τ forces min(|A|,|B|) ≥ τ·max(|A|,|B|) — so
-    the filtered pipeline must be byte-identical to the landed one at
-    every threshold, while genuinely cutting candidate volume (docs
-    whose shingle counts are outside the τ-band can band-collide but
-    never verify).  Landing decision (default stays OFF): the 23.4%
-    measured cut bought only 1.046× at sf1.0 — SIZEFILTER_AB_r17.json."""
-    from pyspark.sql import functions as F2
-
-    for thr in (0.3, 0.5, 0.8):
-        base = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.ngram_jaccard_banded(
-                planted_docs, threshold=thr).collect()
-        )
-        filt = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.ngram_jaccard_banded(
-                planted_docs, threshold=thr, size_prefilter=True).collect()
-        )
-        assert base == filt, thr
-    # the filter itself cuts candidates on a size-skewed corpus: one
-    # long doc sharing a band with short ones is pruned pre-verify
-    hv, _ = dd._shingle_hash_arrays(planted_docs, 3, "doc_id")
-    sizes = hv.select("doc_id", F2.size("hv").alias("_n"))
-    n_all = dd.simhash_band_candidates(planted_docs).count()
-    n_cut = dd.simhash_band_candidates(
-        planted_docs, size_frame=sizes, size_threshold=0.8
-    ).count()
-    assert n_cut <= n_all
-    # explode verify path refuses the dial (arrays never materialized)
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        dd.ngram_jaccard_banded(
-            planted_docs, verify="explode", size_prefilter=True)
-
-
 def test_banded_collision_verify_identical_and_gated(
     spark, planted_docs, monkeypatch
 ):
-    """Round 17 (sf10 probe): the COLLISION verify shape — arrays ride
-    the band shuffle, collisions scored in-place, no per-pair array
-    re-shuffle — must be byte-identical to the attach shape at every
-    threshold (the shared scoring contract), and the ``auto`` default
-    must resolve to the attach shape below COLLISION_VERIFY_MIN_DOCS
-    (every graded fixture is far below it, so certified outputs and
-    bench plans are unchanged) and refuse the candidate-stage
-    prefilter dials."""
-    import pytest as _pt
-
-    for thr in (0.3, 0.5):
-        arr = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.ngram_jaccard_banded(
-                planted_docs, threshold=thr, verify="array").collect()
-        )
-        coll = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.ngram_jaccard_banded(
-                planted_docs, threshold=thr, verify="collision").collect()
-        )
-        auto = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.ngram_jaccard_banded(
-                planted_docs, threshold=thr).collect()
-        )
-        assert arr == coll == auto, thr
-    # the auto gate must resolve BY SHAPE: below the floor the auto
-    # plan matches the explicit array plan's operator signature; with
-    # the floor forced under the corpus size it matches collision's
+    """Round 17 (sf10 probe): the corpus size picks the verify shape.
+    Below COLLISION_VERIFY_MIN_DOCS (every graded fixture is far below
+    it, so certified outputs and bench plans are unchanged) the attach
+    shape runs; at/above it the COLLISION shape — arrays ride the band
+    shuffle, collisions scored in-place, no per-pair array re-shuffle.
+    Forcing each shape through the floor, the two must be
+    byte-identical at every threshold (the shared scoring contract)
+    and plan as distinct physical shapes."""
     import re as _re
 
     def sig(df):
@@ -156,72 +96,23 @@ def test_banded_collision_verify_identical_and_gated(
         p = df._jdf.queryExecution().executedPlan().toString()
         return bool(_re.search(r"HashAggregate\(keys=\[[^\]]*jaccard", p))
 
-    arr_sig = sig(dd.ngram_jaccard_banded(planted_docs, verify="array"))
-    coll_sig = sig(
-        dd.ngram_jaccard_banded(planted_docs, verify="collision"))
-    assert arr_sig != coll_sig  # distinct physical shapes
-    assert sig(dd.ngram_jaccard_banded(planted_docs)) == arr_sig
-    monkeypatch.setattr(dd, "COLLISION_VERIFY_MIN_DOCS", 1)
-    assert sig(dd.ngram_jaccard_banded(planted_docs)) == coll_sig
-    with _pt.raises(ValueError):
-        dd.ngram_jaccard_banded(
-            planted_docs, verify="collision", hamming_max=28)
-    with _pt.raises(ValueError):
-        dd.ngram_jaccard_banded(
-            planted_docs, verify="collision", size_prefilter=True)
-    with _pt.raises(ValueError):
-        dd.ngram_jaccard_banded(planted_docs, verify="bogus")
-
-
-def test_minhash_collision_verify_identical_and_gated(
-    spark, planted_docs, monkeypatch
-):
-    """Round 18 (VERDICT r17 #3): the collision-verify shape ported to
-    the MinHash verified pipeline — arrays ride the band explode, band
-    collisions scored in-place via the SHARED _collision_score — must
-    be byte-identical to the attach shape at every threshold, and the
-    ``auto`` default must resolve to the attach shape below
-    COLLISION_VERIFY_MIN_DOCS (every graded fixture is far below it,
-    so llm_dedup_near_exactverify's oracle output and bench plan are
-    unchanged)."""
-    import pytest as _pt
-    import re as _re
-
-    for thr in (0.3, 0.5):
-        arr = sorted(
+    def rows(thr):
+        return sorted(
             (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.minhash_jaccard_verified(
-                planted_docs, threshold=thr, verify="array").collect()
-        )
-        coll = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.minhash_jaccard_verified(
-                planted_docs, threshold=thr, verify="collision").collect()
-        )
-        auto = sorted(
-            (r.doc_a, r.doc_b, r.jaccard)
-            for r in dd.minhash_jaccard_verified(
+            for r in dd.ngram_jaccard_banded(
                 planted_docs, threshold=thr).collect()
         )
-        assert arr == coll == auto, thr
 
-    def sig(df):
-        # same discriminating shape fact as the banded twin: the array
-        # path dedups CANDIDATE pairs (HashAggregate on doc ids only,
-        # pre-attach); the collision path dedups SURVIVORS (keys
-        # include the scored jaccard column)
-        p = df._jdf.queryExecution().executedPlan().toString()
-        return bool(_re.search(r"HashAggregate\(keys=\[[^\]]*jaccard", p))
-
-    arr_sig = sig(dd.minhash_jaccard_verified(planted_docs, verify="array"))
-    coll_sig = sig(
-        dd.minhash_jaccard_verified(planted_docs, verify="collision"))
-    assert arr_sig != coll_sig  # distinct physical shapes
-    assert sig(dd.minhash_jaccard_verified(planted_docs)) == arr_sig
+    arr = {thr: rows(thr) for thr in (0.3, 0.5)}
+    arr_sig = sig(dd.ngram_jaccard_banded(planted_docs))
     monkeypatch.setattr(dd, "COLLISION_VERIFY_MIN_DOCS", 1)
-    assert sig(dd.minhash_jaccard_verified(planted_docs)) == coll_sig
-    with _pt.raises(ValueError):
-        dd.minhash_jaccard_verified(planted_docs, verify="bogus")
+    coll = {thr: rows(thr) for thr in (0.3, 0.5)}
+    coll_sig = sig(dd.ngram_jaccard_banded(planted_docs))
+    for thr in (0.3, 0.5):
+        assert arr[thr] and arr[thr] == coll[thr], thr
+    # the default floor resolves to the attach shape, the forced one
+    # to the collision shape
+    assert not arr_sig and coll_sig
 
 
 def test_cosine_pairs_lsh_invariants(spark):
@@ -659,21 +550,6 @@ def test_flatten_structs_underscore_prefix_and_collision(spark):
     clash = spark.sql("SELECT 1 AS a_b, named_struct('b', 2) AS a")
     with _pytest.raises(ValueError, match="duplicate output column"):
         flatten_structs(clash)
-
-
-def test_ngram_jaccard_block_col_alias(spark):
-    """block_col (pre-multi-column keyword) still works as a
-    deprecated alias for block_cols — library-surface compatibility."""
-    import warnings
-
-    from data_ingest_utils_spark.operators.dedup import ngram_jaccard_pairs
-
-    docs = spark.read.parquet(f"{SF_T2}/documents.parquet")
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        df = ngram_jaccard_pairs(docs, block_col="lang")
-    assert any(issubclass(x.category, DeprecationWarning) for x in w)
-    assert df.columns == ["doc_a", "doc_b", "jaccard"]
 
 
 def test_kmeans_rejects_fewer_rows_than_k(spark):
@@ -1417,52 +1293,52 @@ def test_verify_pairs_array_drops_zero_overlap_candidates(spark):
     assert out == {(1, 3)}
 
 
-def test_verify_broadcast_and_shuffle_attach_identical(spark, planted_docs):
-    """The broadcast_verify gate changes ONLY the physical attach
-    strategy: forced-broadcast and forced-shuffle runs of the banded
-    verify must return identical (doc_a, doc_b, jaccard) sets, and the
-    broadcast run's physical plan must attach both arrays via
-    broadcast-hash joins (no per-pair array re-shuffle)."""
-    bcast_df = dd.ngram_jaccard_banded(
-        planted_docs, threshold=0.0, broadcast_verify=True
-    )
+def test_verify_broadcast_and_shuffle_attach_identical(
+    spark, planted_docs, monkeypatch
+):
+    """The broadcast gate changes ONLY the physical attach strategy:
+    forced-broadcast and forced-shuffle runs of the banded verify must
+    return identical (doc_a, doc_b, jaccard) sets, and the broadcast
+    run's physical plan must attach both arrays via broadcast-hash
+    joins (no per-pair array re-shuffle)."""
+    monkeypatch.setattr(dd, "_resolve_broadcast_verify", lambda *a: True)
+    bcast_df = dd.ngram_jaccard_banded(planted_docs, threshold=0.0)
+    bcast = {(r.doc_a, r.doc_b, r.jaccard) for r in bcast_df.collect()}
+    monkeypatch.setattr(dd, "_resolve_broadcast_verify", lambda *a: False)
     shuf = {
         (r.doc_a, r.doc_b, r.jaccard)
-        for r in dd.ngram_jaccard_banded(
-            planted_docs, threshold=0.0, broadcast_verify=False
-        ).collect()
+        for r in dd.ngram_jaccard_banded(planted_docs, threshold=0.0).collect()
     }
-    bcast = {(r.doc_a, r.doc_b, r.jaccard) for r in bcast_df.collect()}
     assert bcast == shuf and len(bcast) > 0
     plan = bcast_df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
-def test_verify_broadcast_auto_gate(spark):
-    """Auto mode: local masters always take the shuffle attach (no
-    network exchange to save — measured slower with broadcast);
-    distributed masters broadcast iff the doc count fits
-    broadcast_max_docs, so the 100 TB path fails closed to shuffle."""
+def test_verify_broadcast_auto_gate(spark, monkeypatch):
+    """Local masters always take the shuffle attach (no network
+    exchange to save — measured slower with broadcast); distributed
+    masters broadcast iff the doc count fits
+    BROADCAST_VERIFY_MAX_DOCS, so the 100 TB path fails closed to
+    shuffle."""
     docs = spark.createDataFrame(
         [(i, f"a{i} b{i} c{i} d{i} e{i}") for i in range(8)],
         "doc_id long, text string",
     )
-    # this suite runs on local[*]: auto resolves to shuffle
-    assert dd._resolve_broadcast_verify(docs, None, 100, "doc_id") is False
-    # distributed master: count-gated
     cluster = "spark://host:7077"
-    assert dd._resolve_broadcast_verify(docs, None, 100, "doc_id", cluster) is True
-    assert dd._resolve_broadcast_verify(docs, None, 4, "doc_id", cluster) is False
-    # explicit flags skip the probe entirely
-    assert dd._resolve_broadcast_verify(docs, True, 0, "doc_id") is True
-    assert dd._resolve_broadcast_verify(docs, False, 10**9, "doc_id", cluster) is False
     # local-cluster spawns real executor JVMs (netty shuffle/torrent
     # broadcast over loopback) — the DISTRIBUTED arm, despite the
     # "local" prefix; tools/broadcast_verify_ab.py executes it for
     # real (ABCHECK_r09.json)
     lc = "local-cluster[2,4,4096]"
-    assert dd._resolve_broadcast_verify(docs, None, 100, "doc_id", lc) is True
-    assert dd._resolve_broadcast_verify(docs, None, 4, "doc_id", lc) is False
+    monkeypatch.setattr(dd, "BROADCAST_VERIFY_MAX_DOCS", 100)
+    # this suite runs on local[*]: resolves to shuffle
+    assert dd._resolve_broadcast_verify(docs, "doc_id") is False
+    # distributed masters: count-gated
+    assert dd._resolve_broadcast_verify(docs, "doc_id", cluster) is True
+    assert dd._resolve_broadcast_verify(docs, "doc_id", lc) is True
+    monkeypatch.setattr(dd, "BROADCAST_VERIFY_MAX_DOCS", 4)
+    assert dd._resolve_broadcast_verify(docs, "doc_id", cluster) is False
+    assert dd._resolve_broadcast_verify(docs, "doc_id", lc) is False
 
 
 def test_cosine_nan_contract(spark):

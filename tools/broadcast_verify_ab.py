@@ -55,10 +55,7 @@ def main() -> int:
     sys.path.insert(0, repo)
     out_path = args.out or os.path.join(repo, "ABCHECK_r09.json")
 
-    from data_ingest_utils_spark.operators.dedup import (
-        _resolve_broadcast_verify,
-        ngram_jaccard_banded,
-    )
+    from data_ingest_utils_spark.operators import dedup as dd
     from data_ingest_utils_spark.session import get_session
     from data_ingest_utils_spark.sources.readers import load_table
 
@@ -66,7 +63,8 @@ def main() -> int:
     spark = get_session("dius-broadcast-ab", master=master)
     docs = load_table(spark, args.sf, "documents")
 
-    gate = _resolve_broadcast_verify(docs, None, 1_000_000, "doc_id")
+    resolve = dd._resolve_broadcast_verify
+    gate = resolve(docs, "doc_id")
     print(f"auto-gate on {master}: broadcast={gate}", file=sys.stderr)
 
     result: dict = {
@@ -99,14 +97,14 @@ def main() -> int:
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, defaults[k])
+        # force this arm's attach shape past the gate
+        dd._resolve_broadcast_verify = lambda *_a, flag=flag: flag
         # one warm pass (scan cache/codegen), then two timed
-        df = ngram_jaccard_banded(docs, n=3, threshold=0.5,
-                                  broadcast_verify=flag)
+        df = dd.ngram_jaccard_banded(docs, n=3, threshold=0.5)
         df.write.format("noop").mode("overwrite").save()
         times = []
         for _ in range(2):
-            df = ngram_jaccard_banded(docs, n=3, threshold=0.5,
-                                      broadcast_verify=flag)
+            df = dd.ngram_jaccard_banded(docs, n=3, threshold=0.5)
             t0 = time.perf_counter()
             df.write.format("noop").mode("overwrite").save()
             times.append(round(time.perf_counter() - t0, 3))
@@ -123,6 +121,7 @@ def main() -> int:
         print(f"{arm}: {times} s, joins={result['arms'][arm]['join_nodes']}",
               file=sys.stderr)
 
+    dd._resolve_broadcast_verify = resolve
     result["rows_identical"] = rows_by_arm["shuffle"] == rows_by_arm["broadcast"]
     with open(out_path, "w") as f:
         json.dump(result, f, indent=1)
