@@ -819,74 +819,50 @@ def binary_sign_codes(
     return df.select(id_col, bits.alias("_bits"))
 
 
+def _checked_queries(
+    queries: Sequence[tuple[int, Sequence[float]]], dim: int | None, fn: str
+) -> list[tuple[int, list[float]]]:
+    """The one query contract of every retrieval rung: a non-empty
+    batch of ``(query_id, vector)`` pairs with distinct ids, every
+    vector ``dim`` long (``None``: the batch's first vector sets it)
+    with a positive finite norm.  Returns them as plain ints and
+    doubles.  A zero-norm, NaN or infinite query has no cosine ranking
+    and would otherwise return 0 rows through the NaN-sim filter; a
+    query longer than a PQ index would otherwise feed its LUT only the
+    first m·ds dims; a repeated id would merge two queries' candidates
+    under one window."""
+    qlist = [(int(qid), [float(v) for v in vec]) for qid, vec in queries]
+    if not qlist:
+        raise ValueError(f"{fn}: empty query batch")
+    if len({qid for qid, _ in qlist}) != len(qlist):
+        raise ValueError(f"{fn}: duplicate query ids in one batch")
+    want = len(qlist[0][1]) if dim is None else dim
+    for qid, vec in qlist:
+        if len(vec) != want:
+            raise ValueError(
+                f"{fn}: query {qid} has dim {len(vec)}, index dim is {want}"
+            )
+        # `not 0 < norm < inf`, not `norm == 0`: a NaN element makes
+        # the norm NaN, which must trip the guard too (code-review r14)
+        if not 0 < math.sqrt(sum(v * v for v in vec)) < math.inf:
+            raise ValueError(
+                f"{fn}: zero-norm, NaN or infinite query {qid} has no "
+                "cosine ranking"
+            )
+    return qlist
+
+
+def _query_frame(spark, rows: list, **cols: T.DataType) -> DataFrame:
+    """Broadcast ``(query_id, *cols)`` frame of per-query driver data —
+    |Q| small rows, attached by broadcast joins only."""
+    schema = T.StructType(
+        [T.StructField("query_id", T.LongType())]
+        + [T.StructField(name, dtype) for name, dtype in cols.items()]
+    )
+    return F.broadcast(spark.createDataFrame(rows, schema))
+
+
 def binary_hamming_topk(
-    df: DataFrame,
-    query: Sequence[float],
-    k: int = 5,
-    coarse_k: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: int = 4,
-) -> DataFrame:
-    """Two-stage binary-quantization retrieval: sign-bit codes +
-    Hamming distance prune to ``coarse_k`` candidates, exact float
-    cosine reranks those to the final ``k``.
-
-    The retrieval ladder's cheapest coarse rung (vs int8's 4× and
-    PQ-ADC's LUT folds): the full scan is ``ceil(dim/64)`` XOR +
-    popcount JVM long ops per row over an 8-byte-per-64-dims index —
-    at 100 TB the codes frame IS the index (store it like the packed
-    PQ codes; here it is derived in-plan), the coarse top-``coarse_k``
-    finishes as TakeOrdered (per-partition heads, no global sort), and
-    only ``coarse_k`` rows are joined back (broadcast) for the exact
-    rerank.  Deterministic end to end: Hamming ties break by id, the
-    rerank orders by rounded sim then id — so a SQL oracle can
-    recompute the WHOLE pipeline (sign disagreement count ==
-    Hamming distance on the packed codes, by construction) and
-    hash-certify it at any scale.  Recall-vs-exact is asserted in
-    tests/test_invariants.py, same protocol as the int8 and PQ rungs.
-    """
-    q = [float(v) for v in query]
-    # Same bad-input contract as the batch twin (ADVICE r13): an
-    # empty, zero-norm or NaN-poisoned query has no cosine ranking —
-    # fail loudly instead of silently returning 0 rows through the
-    # NaN-sim filter.  `not norm > 0` (not `norm == 0`) so a NaN norm
-    # trips the guard too (code-review r14).
-    if not q or not math.sqrt(sum(v * v for v in q)) > 0:
-        raise ValueError(
-            "binary_hamming_topk: empty, zero-norm or NaN query has "
-            "no cosine ranking"
-        )
-    words = (len(q) + 63) // 64
-    qbits = pack_sign_bits(q, words)
-    qlit = F.array(*[F.lit(int(b)).cast("long") for b in qbits])
-
-    codes = binary_sign_codes(df, dim=len(q), vec_col=vec_col, id_col=id_col)
-    hd = _hamming_words_expr(F.col("_bits"), qlit, words)
-    coarse = (
-        codes.select(id_col, hd.alias("_hd"))
-        # NULLS LAST explicitly (code-review r13): a NULL-embedding
-        # row has NULL codes ⇒ NULL hd, and Spark's ASC default is
-        # nulls FIRST — it would consume coarse_k slots and diverge
-        # from both the DuckDB oracle (nulls last) and the batch
-        # rung's negated-desc ordering (nulls last).
-        .orderBy(F.col("_hd").asc_nulls_last(), F.col(id_col))
-        .limit(coarse_k)
-    )
-    # 100-row coarse side broadcast into the vector join-back: the
-    # corpus frame never re-shuffles and the rerank touches coarse_k
-    # rows only.
-    candidates = df.select(id_col, vec_col).join(F.broadcast(coarse), id_col)
-    sim = F.round(cosine_to_query(candidates, vec_col, query), round_dp)
-    return (
-        candidates.select(id_col, sim.alias("sim"))
-        .filter(F.col("sim").isNotNull() & ~F.isnan("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def binary_hamming_batch_topk(
     df: DataFrame,
     queries: Sequence[tuple[int, Sequence[float]]],
     k: int = 5,
@@ -895,58 +871,47 @@ def binary_hamming_batch_topk(
     id_col: str = "vec_id",
     round_dp: int = 4,
 ) -> DataFrame:
-    """BATCHED binary-quantization serving: top-``k`` for MANY queries
-    through ONE sign-bit encode pass of the corpus — the batch rung of
-    the binary ladder, mirroring :func:`pq_batch_topk`'s shape with an
-    8-byte-per-64-dims index instead of PQ codes.
+    """Binary-quantization retrieval for a batch of ``(query_id,
+    vector)`` queries: sign-bit codes + Hamming distance prune each
+    query to ``coarse_k`` candidates, exact float cosine reranks those
+    to its final ``k``.  Returns ``(query_id, id, sim)``.
 
-    The query batch rides ONE broadcast frame of packed sign words
-    (|Q| rows × ceil(dim/64) longs); the coarse stage is a broadcast
-    nested-loop over it — ceil(dim/64) XOR+popcount long ops per
-    (query, vector), the cheapest batch scan any rung offers — and the
-    shared :func:`_batch_coarse_topk_rerank` tail takes each query's
-    Hamming top-``coarse_k`` (lower distance = better, negated into
-    the helper's desc ordering; ties by id) and exact-reranks
-    |Q|·coarse_k rows.  Deterministic end to end, so a SQL oracle can
-    recompute the whole per-query pipeline (sign-disagreement count ≡
-    packed-word Hamming) and hash-certify it at any scale.
-    Returns ``(query_id, vec_id, sim)``."""
-    qlist = [(int(qid), [float(v) for v in vec]) for qid, vec in queries]
-    if not qlist:
-        raise ValueError("binary_hamming_batch_topk: empty query batch")
+    The retrieval ladder's cheapest coarse rung (vs int8's 4× and
+    PQ-ADC's LUT folds): the corpus is sign-encoded ONCE for the whole
+    batch, and the coarse scan is ``ceil(dim/64)`` XOR + popcount JVM
+    long ops per (query, row) against a broadcast |Q|-row frame of
+    packed query words — at 100 TB the codes frame IS the index (store
+    it like the packed PQ codes; here it is derived in-plan).  The
+    shared :func:`_coarse_topk_rerank` tail takes each query's Hamming
+    top-``coarse_k`` (lower distance first, ties by id, NULL codes
+    last) and reranks only those rows; with one query both cuts are
+    TakeOrderedAndProject and the survivors broadcast into the vector
+    join, so the corpus never re-shuffles.
+
+    Deterministic end to end, so a SQL oracle can recompute the whole
+    per-query pipeline (sign-disagreement count ≡ Hamming distance on
+    the packed codes, by construction) and hash-certify it at any
+    scale.  Queries are checked by :func:`_checked_queries`; recall vs
+    exact is asserted in tests/test_invariants.py, same protocol as the
+    int8 and PQ rungs."""
+    qlist = _checked_queries(queries, None, "binary_hamming_topk")
     dim = len(qlist[0][1])
-    if any(len(vec) != dim for _, vec in qlist):
-        raise ValueError(
-            "binary_hamming_batch_topk: ragged query dims in one batch"
-        )
-    for qid, vec in qlist:
-        # `not norm > 0`, not `norm == 0`: a NaN element makes the
-        # norm NaN, which must trip the guard too (code-review r14).
-        if not math.sqrt(sum(v * v for v in vec)) > 0:
-            raise ValueError(
-                f"binary_hamming_batch_topk: zero-norm or NaN query {qid} "
-                "has no cosine ranking"
-            )
     words = (dim + 63) // 64
-    spark = df.sparkSession
-    qframe = F.broadcast(
-        spark.createDataFrame(
-            [(qid, pack_sign_bits(vec, words)) for qid, vec in qlist],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("_qbits", T.ArrayType(T.LongType())),
-                ]
-            ),
-        )
+    qbits = _query_frame(
+        df.sparkSession,
+        [(qid, pack_sign_bits(vec, words)) for qid, vec in qlist],
+        _qbits=T.ArrayType(T.LongType()),
     )
-    codes = binary_sign_codes(df, dim=dim, vec_col=vec_col, id_col=id_col)
     hd = _hamming_words_expr(F.col("_bits"), F.col("_qbits"), words)
     coarse = (
-        codes.crossJoin(qframe)  # broadcast nested-loop: |Q| small rows
+        binary_sign_codes(df, dim=dim, vec_col=vec_col, id_col=id_col)
+        .crossJoin(qbits)  # broadcast nested-loop: |Q| small rows
+        # negated into the tail's desc order, whose NULLS LAST keeps a
+        # NULL-embedding row (NULL codes ⇒ NULL distance) out of the
+        # cut, as the DuckDB oracle's ascending order does
         .select("query_id", id_col, (-hd).cast("double").alias("_coarse"))
     )
-    return _batch_coarse_topk_rerank(
+    return _coarse_topk_rerank(
         df, coarse, qlist, k, coarse_k, vec_col, id_col, round_dp
     )
 
@@ -1088,28 +1053,59 @@ def _packed_lut_fold(lut_col):
     return F.aggregate(partials, F.lit(0.0), lambda a, x: a + x)
 
 
-def _require_packed_codes(codes: DataFrame, id_col: str, fn: str) -> None:
-    cols = set(codes.columns)
-    if id_col not in cols or "_codes" not in cols:
+def _require_cols(codes: DataFrame, cols: tuple[str, ...], fn: str) -> None:
+    if not set(cols) <= set(codes.columns):
         raise ValueError(
-            f"{fn}: codes frame must carry ({id_col}, _codes) — got "
-            f"{sorted(cols)}"
+            f"{fn}: codes frame must carry {cols} — got {sorted(codes.columns)}"
         )
 
 
-def _pq_fit(
+def _pq_index_dim(codebooks: list[list[list[float]]], fn: str) -> int:
+    """``m·ds``, the vector dim an m × k × ds codebook tensor serves;
+    raises on an empty or ragged tensor."""
+    k = len(codebooks[0]) if codebooks else 0
+    ds = len(codebooks[0][0]) if k else 0
+    if not ds or any(
+        len(book) != k or any(len(c) != ds for c in book) for book in codebooks
+    ):
+        raise ValueError(f"{fn}: codebooks must be a non-empty m×k×ds tensor")
+    return len(codebooks) * ds
+
+
+def _pq_luts(qlist: list, codebooks: list[list[list[float]]]) -> list:
+    """``(query_id, lut)`` per query: ``lut[j][c]`` is the unit query's
+    exact dot with codeword ``c`` of subspace ``j`` — the m×k
+    asymmetric-distance table a packed code row folds."""
+    ds = len(codebooks[0][0])
+    out = []
+    for qid, vec in qlist:
+        qn = math.sqrt(sum(v * v for v in vec))
+        qu = [v / qn for v in vec]
+        lut = [
+            [sum(qu[j * ds + i] * c[i] for i in range(ds)) for c in book]
+            for j, book in enumerate(codebooks)
+        ]
+        out.append((qid, lut))
+    return out
+
+
+def pq_fit_codebooks(
     df: DataFrame,
-    m: int,
-    codebook_k: int,
-    iters: int,
-    vec_col: str,
-    id_col: str,
-) -> tuple[list[list[list[float]]], DataFrame]:
-    """Fit all ``m`` codebooks in ONE Lloyd loop over the exploded
-    subvector frame; returns ``(books, sub)`` where ``sub`` is the
-    CHECKPOINTED subvector frame so an inline fit's caller can encode
-    over it without re-deriving the scan (the fit's iterations
-    already paid for the materialization)."""
+    m: int = 32,
+    codebook_k: int = 16,
+    iters: int = 2,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> list[list[list[float]]]:
+    """Fit the ``m`` product-quantization codebooks in ONE Lloyd loop
+    over the checkpointed exploded subvector frame and return them as
+    a plain nested list (m × codebook_k × dim/m doubles) — pure JSON,
+    so the plan layer can PERSIST them keyed by a source fingerprint
+    (VERDICT r11 #2): at 100 TB the fit runs offline on a sample, the
+    codebooks persist, and every query pays only ADC+rerank over the
+    packed codes.  Deterministic: lowest-id vectors' subvectors seed
+    each subspace; avg/argmin with pinned tie-breaks and 12-dp
+    order-insensitive updates (ADVICE r11)."""
     base = _pq_unit_base(df, vec_col, id_col).localCheckpoint(eager=True)
     # ONE driver action supplies both the codebook seeds and the
     # dimensionality (a separate size() head() was a whole extra job).
@@ -1149,296 +1145,82 @@ def _pq_fit(
             books[r["_sub"]][r["_code"]] = [
                 round(float(r[f"m{i}"]), 12) for i in range(ds)
             ]
-    return books, sub
-
-
-def pq_fit_codebooks(
-    df: DataFrame,
-    m: int = 32,
-    codebook_k: int = 16,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> list[list[list[float]]]:
-    """Fit the ``m`` product-quantization codebooks and return them as
-    a plain nested list (m × codebook_k × dim/m doubles) — pure JSON,
-    so the plan layer can PERSIST them keyed by a source fingerprint
-    (VERDICT r11 #2): at 100 TB the fit runs offline on a sample, the
-    codebooks persist, and every query pays only encode+ADC+rerank.
-    Deterministic: lowest-id vectors' subvectors seed each subspace;
-    avg/argmin with pinned tie-breaks and 12-dp order-insensitive
-    updates (ADVICE r11)."""
-    books, _ = _pq_fit(df, m, codebook_k, iters, vec_col, id_col)
     return books
+
+
+def _pq_coarse(
+    codes: DataFrame,
+    qlist: list,
+    codebooks: list[list[list[float]]],
+    id_col: str,
+    probes: list[list[int]] | None = None,
+) -> DataFrame:
+    """``(query_id, id, _coarse)`` ADC scores of the packed codes: the
+    |Q| LUTs ride one broadcast frame and each code row folds its
+    query's LUT — one map stage, no subvector explode, no shuffle.
+    ``probes`` (IVF-PQ) gives each query's cell list: the union of the
+    cells is a plain filter on the codes scan (partition pruning when
+    the index is partitioned by cell), and within it a row scores only
+    for the queries whose list holds its cell."""
+    rows = _pq_luts(qlist, codebooks)
+    cols = {"_pq_lut": T.ArrayType(T.ArrayType(T.DoubleType()))}
+    if probes is not None:
+        rows = [(qid, lut, cells) for (qid, lut), cells in zip(rows, probes)]
+        cols["_cells"] = T.ArrayType(T.IntegerType())
+        codes = codes.filter(F.col("cell").isin(sorted(set().union(*probes))))
+    scored = codes.crossJoin(_query_frame(codes.sparkSession, rows, **cols))
+    if probes is not None:
+        scored = scored.filter(F.array_contains(F.col("_cells"), F.col("cell")))
+    return scored.select(
+        "query_id", id_col, _packed_lut_fold(F.col("_pq_lut")).alias("_coarse")
+    )
 
 
 def pq_rerank_topk(
     df: DataFrame,
-    query: Sequence[float],
-    k: int = 5,
-    coarse_k: int = 100,
-    m: int = 32,
-    codebook_k: int = 16,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    round_dp: int = 4,
-    codebooks: list[list[list[float]]] | None = None,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """Product-quantization retrieve-then-rerank (VERDICT r10 #6):
-    vectors are unit-normalized, split into ``m`` subvectors, each
-    subspace Lloyd-quantized to a ``codebook_k``-entry codebook, and
-    the coarse pass scores every vector by ASYMMETRIC DISTANCE — the
-    query's exact per-subspace dot with each vector's assigned
-    centroid, summed via a precomputed m×k lookup table (Jégou et
-    al. 2011, public).  The exact cosine rerank then touches only the
-    ``coarse_k`` survivors, like :func:`quantized_rerank_topk`.
-
-    Scale shape:
-
-    - **Fit** — ONE Lloyd loop over the (id, sub_idx, subvector)
-      exploded frame fits all ``m`` codebooks simultaneously:
-      assignment attaches the m×k×(dim/m) codebook tensor as
-      broadcast DATA (one-row frame — the kmeans_fit_predict
-      plan-constant-in-k pattern), the update is one
-      groupBy(sub_idx, code) shuffle reducing to ≤ m·k rows per
-      iteration.  At 100 TB the fit runs offline on a sample and the
-      codebooks persist; codes are 8 bytes/vector (m=8, k≤256) vs
-      256 bytes of float32 — the 32× compression that lets a corpus'
-      index live in memory.
-    - **Encode + ADC** — both are broadcast-model map stages (codes:
-      argmin over the codebook tensor; ADC: m×k LUT of the query's
-      per-subspace centroid dots, summed per id in one hash agg).
-      No stage ships full vectors after the encode.
-    - **Rerank** — exact cosine over ``coarse_k`` rows joined back by
-      broadcast id list.
-
-    Deterministic given the seeded codebooks (lowest-id vectors'
-    subvectors seed each subspace; avg/argmin with pinned
-    tie-breaks), so the graded key carries the same certificate as
-    llm_sim_rerank: its oracle is the EXACT brute-force top-k, and a
-    hash match certifies the PQ index's recall on the fixture, not
-    just the plumbing.  Zero-norm vectors are dropped before the fit
-    (cosine is undefined for them; the exact rerank would discard
-    them anyway).  Recall-vs-exact is additionally pinned in
-    tests/test_invariants.py.
-
-    ``codebooks`` (VERDICT r11 #2): pass codebooks fitted earlier by
-    :func:`pq_fit_codebooks` (m × codebook_k × dim/m nested lists) to
-    skip the Lloyd refit entirely — the production read path, where
-    codebooks persist per corpus epoch and a query pays only
-    encode + ADC + rerank (zero driver actions before the final
-    top-k, no checkpoint: the subvector frame has a single consumer).
-    The caller owns codebook/corpus consistency; shape is validated
-    against ``m``/``codebook_k``, and the data dimension is validated
-    in-plan against m*(dim/m) (ADVICE r12: F.slice truncates and
-    zip_with null-pads silently, so without the explicit check a
-    mismatch would produce wrong codes, not an error).
-
-    ``codes`` (round 13): pass a PACKED code frame from
-    :func:`pq_encode_packed` — ``(id, _codes)``, one row per vector —
-    to skip the encode too: the coarse stage becomes a per-row
-    m-element LUT fold over the codes table (no subvector explode, no
-    groupBy shuffle), which is the true serving cost of a persisted
-    PQ index.  Requires ``codebooks`` (the LUT is built from them);
-    the caller owns codes/codebook consistency (the plan layer keys
-    both caches by the same fixture fingerprint).
-    """
-    q = [float(v) for v in query]
-    qn = math.sqrt(sum(v * v for v in q))
-    if qn == 0.0:
-        raise ValueError("pq_rerank_topk: zero-norm query has no cosine ranking")
-    qu = [v / qn for v in q]
-
-    if codes is not None and codebooks is None:
-        raise ValueError("pq_rerank_topk: codes requires codebooks (the LUT)")
-    if codes is not None:
-        _require_packed_codes(codes, id_col, "pq_rerank_topk")
-    if codebooks is None:
-        # inline fit: reuse the fit's checkpointed subvector frame so
-        # the scoring encode doesn't re-derive the scan
-        books, sub = _pq_fit(df, m, codebook_k, iters, vec_col, id_col)
-    else:
-        books = codebooks
-        if len(books) != m or any(len(b) != codebook_k for b in books):
-            raise ValueError(
-                f"pq_rerank_topk: codebooks shape {len(books)}×"
-                f"{len(books[0]) if books else 0} != m={m}×k={codebook_k}"
-            )
-        ds_given = len(books[0][0])
-        if codes is None:
-            sub = _pq_subvectors(
-                _pq_unit_base(df, vec_col, id_col, expected_dim=m * ds_given),
-                m, m * ds_given, id_col,
-            )
-    ds = len(books[0][0])
-
-    lut = [
-        [
-            sum(qu[j * ds + i] * c[i] for i in range(ds))
-            for c in books[j]
-        ]
-        for j in range(m)
-    ]
-    spark = df.sparkSession
-    lut_model = F.broadcast(
-        spark.createDataFrame(
-            [(lut,)],
-            T.StructType(
-                [T.StructField("_pq_lut", T.ArrayType(T.ArrayType(T.DoubleType())))]
-            ),
-        )
-    )
-    if codes is not None:
-        # packed serving path (round 13): per-row LUT fold over the
-        # persisted codes — no explode, no groupBy shuffle
-        candidates = (
-            codes.crossJoin(lut_model)
-            .select(id_col, _packed_lut_fold(F.col("_pq_lut")).alias("_coarse"))
-            .orderBy(F.col("_coarse").desc(), F.col(id_col))
-            .limit(coarse_k)
-        )
-    else:
-        partial = F.element_at(
-            F.element_at(F.col("_pq_lut"), F.col("_sub") + 1), F.col("_code") + 1
-        )
-        candidates = (
-            _pq_encode(sub, books, id_col)
-            .crossJoin(lut_model)
-            .select(id_col, partial.alias("_p"))
-            .groupBy(id_col)
-            .agg(F.sum("_p").alias("_coarse"))
-            .orderBy(F.col("_coarse").desc(), F.col(id_col))
-            .limit(coarse_k)
-        )
-    survivors = df.join(F.broadcast(candidates.select(id_col)), id_col)
-    return cosine_topk(survivors, query, k, vec_col, id_col, round_dp)
-
-
-def pq_batch_topk(
-    df: DataFrame,
     queries: Sequence[tuple[int, Sequence[float]]],
     k: int = 5,
     coarse_k: int = 100,
-    m: int = 32,
-    codebook_k: int = 16,
-    iters: int = 2,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     round_dp: int = 4,
-    codebooks: list[list[list[float]]] | None = None,
-    codes: DataFrame | None = None,
+    *,
+    codebooks: list[list[list[float]]],
+    codes: DataFrame,
 ) -> DataFrame:
-    """BATCHED PQ serving (round 12): top-``k`` neighbors for MANY
-    queries in one plan — the shape an embedding-dedup or retrieval
-    job actually runs (score a batch of probe vectors against the
-    corpus index), where per-query invocation would re-encode the
-    corpus per query.
+    """Product-quantization retrieve-then-rerank (VERDICT r10 #6) for a
+    batch of ``(query_id, vector)`` queries, served from a persisted PQ
+    index: the coarse pass scores every vector by ASYMMETRIC DISTANCE —
+    the query's exact per-subspace dot with each vector's assigned
+    codeword, summed from a precomputed m×k lookup table (Jégou et al.
+    2011, public) — and the exact cosine rerank touches only each
+    query's ``coarse_k`` survivors.  Returns ``(query_id, id, sim)``.
 
-    One corpus ENCODE pass serves every query: the per-query
-    asymmetric-distance LUTs ride as one small broadcast frame
-    (|Q| rows of m×codebook_k doubles — each row is that query's
-    exact per-subspace centroid dots), the encoded corpus
-    broadcast-joins it, and one hash agg per (query, vector) sums the
-    LUT partials.  Per-query top-``coarse_k`` is a window rank over
-    the coarse scores; the exact rerank joins the surviving
-    (query, id) pairs back to the float vectors and the query frame,
-    re-scoring with the same widened zip_with dot as everything else
-    in this module — so each query's final top-k carries the same
-    recall certificate as :func:`pq_rerank_topk`'s (the plan key's
-    oracle is the per-query exact brute force).
+    ``codebooks`` are :func:`pq_fit_codebooks` output (m × k × dim/m
+    doubles; m and k are read from the tensor) and ``codes`` is the
+    packed ``(id, _codes)`` frame :func:`pq_encode_packed` built with
+    them — the caller owns their consistency (the plan layer keys both
+    caches by one source fingerprint).  At 100 TB the fit runs offline
+    on a sample, the codes persist at m·log2(k) bits per vector, and a
+    query batch pays one LUT fold per code row (:func:`_pq_coarse`)
+    plus the shared :func:`_coarse_topk_rerank` tail: TakeOrderedAndProject
+    cuts and a broadcast join-back with one query, a per-query window
+    otherwise.  No full-precision vector is read outside the rerank.
 
-    Scale shape: encode is a broadcast-model map stage over the
-    corpus (once, not per query), the coarse agg's width is |Q| ×
-    corpus (each row |Q| LUT lookups — |Q| is a batch, 10²-10⁴, not a
-    corpus), the window shuffles (query, id, coarse) triples, and
-    full-precision vectors are read only for |Q|·coarse_k rerank
-    rows.  Zero-norm corpus rows are dropped (no cosine); zero-norm
-    QUERY vectors are rejected loudly.  Returns
-    ``(query_id, vec_id, sim)``, per-query desc-sim order with id
-    tie-break."""
-    qlist = [(int(qid), [float(v) for v in vec]) for qid, vec in queries]
-    if not qlist:
-        raise ValueError("pq_batch_topk: empty query batch")
-    if codes is not None and codebooks is None:
-        raise ValueError("pq_batch_topk: codes requires codebooks (the LUTs)")
-    if codes is not None:
-        _require_packed_codes(codes, id_col, "pq_batch_topk")
-    for qid, vec in qlist:
-        if math.sqrt(sum(v * v for v in vec)) == 0.0:
-            raise ValueError(
-                f"pq_batch_topk: zero-norm query {qid} has no cosine ranking"
-            )
-    if codebooks is None:
-        books, sub = _pq_fit(df, m, codebook_k, iters, vec_col, id_col)
-    else:
-        books = codebooks
-        if len(books) != m or any(len(b) != codebook_k for b in books):
-            raise ValueError(
-                f"pq_batch_topk: codebooks shape {len(books)}×"
-                f"{len(books[0]) if books else 0} != m={m}×k={codebook_k}"
-            )
-        if codes is None:
-            ds_given = len(books[0][0])
-            sub = _pq_subvectors(
-                _pq_unit_base(df, vec_col, id_col, expected_dim=m * ds_given),
-                m, m * ds_given, id_col,
-            )
-    ds = len(books[0][0])
-
-    spark = df.sparkSession
-    luts = []
-    for qid, vec in qlist:
-        qn = math.sqrt(sum(v * v for v in vec))
-        qu = [v / qn for v in vec]
-        luts.append(
-            (
-                qid,
-                [
-                    [sum(qu[j * ds + i] * c[i] for i in range(ds)) for c in books[j]]
-                    for j in range(m)
-                ],
-            )
-        )
-    lut_frame = F.broadcast(
-        spark.createDataFrame(
-            luts,
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField(
-                        "_pq_lut", T.ArrayType(T.ArrayType(T.DoubleType()))
-                    ),
-                ]
-            ),
-        )
-    )
-    if codes is not None:
-        # packed serving path (round 13): the persisted codes table
-        # broadcast-joins the |Q|-row LUT frame and each row's coarse
-        # score is a per-row m-element fold — the groupBy shuffle of
-        # the exploded path disappears entirely
-        coarse = codes.crossJoin(lut_frame).select(
-            "query_id", id_col, _packed_lut_fold(F.col("_pq_lut")).alias("_coarse")
-        )
-    else:
-        partial = F.element_at(
-            F.element_at(F.col("_pq_lut"), F.col("_sub") + 1), F.col("_code") + 1
-        )
-        coarse = (
-            _pq_encode(sub, books, id_col)
-            .crossJoin(lut_frame)  # broadcast nested-loop: |Q| small rows
-            .select("query_id", id_col, partial.alias("_p"))
-            .groupBy("query_id", id_col)
-            .agg(F.sum("_p").alias("_coarse"))
-        )
-    return _batch_coarse_topk_rerank(
+    Deterministic given the codebooks, so a key whose oracle is the
+    EXACT brute-force top-k certifies the index's recall on the
+    fixture, not just the plumbing; recall vs exact is also pinned in
+    tests/test_invariants.py.  Every query must be m·ds long."""
+    fn = "pq_rerank_topk"
+    qlist = _checked_queries(queries, _pq_index_dim(codebooks, fn), fn)
+    _require_cols(codes, (id_col, "_codes"), fn)
+    coarse = _pq_coarse(codes, qlist, codebooks, id_col)
+    return _coarse_topk_rerank(
         df, coarse, qlist, k, coarse_k, vec_col, id_col, round_dp
     )
 
 
-def _batch_coarse_topk_rerank(
+def _coarse_topk_rerank(
     df: DataFrame,
     coarse: DataFrame,
     qlist: list,
@@ -1448,162 +1230,52 @@ def _batch_coarse_topk_rerank(
     id_col: str,
     round_dp: int,
 ) -> DataFrame:
-    """Shared tail of the two batch-serving rungs (pq_batch_topk,
-    ivf_pq_batch_topk — extracted round 13): per-query coarse top-k
-    window over ``(query_id, id, _coarse)``, broadcast query-vector
-    attach, exact cosine rerank with THE ladder's tie-breaks (desc
-    sim, asc id).  One implementation so a tie-break or rounding fix
-    can never diverge the rungs."""
-    spark = df.sparkSession
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("_coarse").desc(), F.col(id_col)
-    )
-    cands = (
-        coarse.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= coarse_k)
-        .select("query_id", id_col)
-    )
-    qframe = F.broadcast(
-        spark.createDataFrame(
-            [(qid, vec) for qid, vec in qlist],
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("_qv", T.ArrayType(T.DoubleType())),
-                ]
-            ),
+    """Shared tail of every retrieval rung: each query's top-``coarse_k``
+    of ``(query_id, id, _coarse)`` (higher is better, NULLs last, ties
+    by id), joined back to the float vectors and the broadcast query
+    vectors, exact-cosine reranked to its top-``k`` with THE ladder's
+    tie-breaks (desc rounded sim, asc id).  One implementation, so a
+    tie-break or rounding fix can never diverge the rungs.
+
+    The shape follows the batch size.  One query takes both cuts as
+    ``orderBy().limit()`` — TakeOrderedAndProject, per-partition heads
+    and no global sort — and broadcasts its ≤ ``coarse_k`` survivors
+    into the vector join, so the corpus never re-shuffles.  A larger
+    batch takes each query's cuts with a ``row_number`` window over
+    ``query_id``."""
+    one = len(qlist) == 1
+
+    def top(frame: DataFrame, score: str, n: int) -> DataFrame:
+        order = (F.col(score).desc(), F.col(id_col))
+        if one:
+            return frame.orderBy(*order).limit(n)
+        w = Window.partitionBy("query_id").orderBy(*order)
+        return frame.withColumn("_rn", F.row_number().over(w)).filter(
+            F.col("_rn") <= n
         )
-    )
+
+    cands = top(coarse, "_coarse", coarse_k).select("query_id", id_col)
+    if one:
+        cands = F.broadcast(cands)
+    qv = _query_frame(df.sparkSession, qlist, _qv=T.ArrayType(T.DoubleType()))
+    sim = F.round(_cosine(F.col(vec_col), F.col("_qv")), round_dp)
     rerank = (
         cands.join(df.select(id_col, vec_col), id_col)
-        .join(qframe, "query_id")
-        .select(
-            "query_id",
-            id_col,
-            F.round(
-                F.nanvl(
-                    _dot(F.col(vec_col), F.col("_qv"))
-                    / F.nullif(
-                        _norm(F.col(vec_col)) * _norm(F.col("_qv")), F.lit(0.0)
-                    ),
-                    F.lit(None).cast("double"),
-                ),
-                round_dp,
-            ).alias("sim"),
-        )
+        .join(qv, "query_id")
+        .select("query_id", id_col, sim.alias("sim"))
         .filter(F.col("sim").isNotNull())
     )
-    wk = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col(id_col))
-    return (
-        rerank.withColumn("_rk", F.row_number().over(wk))
-        .filter(F.col("_rk") <= k)
-        .select("query_id", id_col, "sim")
-        .orderBy("query_id", F.col("sim").desc(), F.col(id_col))
-    )
+    out = top(rerank, "sim", k).select("query_id", id_col, "sim")
+    if one:
+        return out
+    return out.orderBy("query_id", F.col("sim").desc(), F.col(id_col))
 
 
 def ivf_pq_topk(
     df: DataFrame,
-    query: Sequence[float],
-    k: int = 5,
-    n_cells: int = 8,
-    nprobe: int = 2,
-    m: int = 32,
-    codebook_k: int = 16,
-    iters: int = 2,
-    coarse_k: int = 100,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    codes: DataFrame | None = None,
-) -> DataFrame:
-    """IVF-PQ (VERDICT r11 #3): the composition that IS the
-    memory-resident 100 TB ANN index — a coarse inverted file routes
-    the query to its ``nprobe`` nearest k-means cells, PQ asymmetric
-    distance scores ONLY within those cells, and an exact cosine
-    rerank finishes the top-``k`` (Jégou et al. 2011's IVFADC, built
-    from this module's two existing tested components).
-
-    Read-path shape at scale: cell assignments are the table's
-    partition column (the probe is partition pruning — the scan
-    touches nprobe/n_cells of the codes), PQ codes are 16 B/vector
-    resident next to them, and the only full-precision vectors read
-    are the ``coarse_k`` rerank survivors.  Both models are
-    driver-side JSON (``centroids`` k·dim doubles, ``codebooks``
-    m·codebook_k·(dim/m)): pass persisted ones — e.g. the plan
-    layer's fingerprint-keyed caches — and the query costs one
-    broadcast-model assignment pass + encode/ADC over the probed
-    slice + a coarse_k rerank, zero Lloyd actions.  With either model
-    omitted it is fit inline here: centroids over the FULL frame
-    (the inverted file must cover the corpus), codebooks — per the
-    :func:`pq_rerank_topk` fallback — over the probed slice only,
-    which is the cheap-demo dial, not the production one (a
-    production fit samples the whole corpus so codes are comparable
-    across cells).
-
-    Deterministic end to end (seeded fits, pinned tie-breaks), and
-    lossy ONLY through the cell probe: a true neighbor living outside
-    the ``nprobe`` probed cells is unreachable, the recall/cost dial
-    every IVF index exposes.  Recall vs exact brute force and vs flat
-    PQ is pinned in tests/test_invariants.py.
-
-    ``codes`` (round 13): a persisted index frame ``(id, cell,
-    _codes)`` — :func:`pq_encode_packed` output joined to the cell
-    assignment, i.e. the literal 100 TB storage layout (codes resident
-    next to the partition column).  With it the query touches NO
-    full-precision vector outside the rerank: probe = a cell filter
-    on the codes table (partition pruning at scale), ADC = the
-    packed per-row LUT fold, rerank = ``coarse_k`` rows of ``df``.
-    Requires ``centroids``/``codebooks`` from the same epoch (the
-    plan layer keys all three caches by one fixture fingerprint)."""
-    if codes is not None and (centroids is None or codebooks is None):
-        raise ValueError(
-            "ivf_pq_topk: codes requires the centroids AND codebooks "
-            "that built it"
-        )
-    if codes is not None and "cell" not in codes.columns:
-        raise ValueError("ivf_pq_topk: codes frame must carry a cell column")
-    if centroids is None:
-        _, centroids, _ = kmeans_fit_predict(
-            df, k=n_cells, iters=iters, vec_col=vec_col, id_col=id_col
-        )
-    q = [float(v) for v in query]
-
-    def sq(c):
-        return sum((a - b) * (a - b) for a, b in zip(q, c))
-
-    probe = sorted(range(len(centroids)), key=lambda ci: (sq(centroids[ci]), ci))[
-        :nprobe
-    ]
-    if codes is not None:
-        probed_codes = codes.filter(F.col("cell").isin(probe)).select(
-            id_col, "_codes"
-        )
-        return pq_rerank_topk(
-            df, query, k=k, coarse_k=coarse_k, m=m, codebook_k=codebook_k,
-            iters=iters, vec_col=vec_col, id_col=id_col, codebooks=codebooks,
-            codes=probed_codes,
-        )
-    cells = (
-        kmeans_assign(df, centroids, vec_col=vec_col, id_col=id_col)
-        .filter(F.col("cell").isin(probe))
-        .select(id_col, vec_col)
-    )
-    return pq_rerank_topk(
-        cells, query, k=k, coarse_k=coarse_k, m=m, codebook_k=codebook_k,
-        iters=iters, vec_col=vec_col, id_col=id_col, codebooks=codebooks,
-    )
-
-
-def ivf_pq_batch_topk(
-    df: DataFrame,
     queries: Sequence[tuple[int, Sequence[float]]],
     k: int = 5,
-    n_cells: int = 8,
     nprobe: int = 2,
-    m: int = 32,
-    codebook_k: int = 16,
     coarse_k: int = 100,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
@@ -1613,84 +1285,44 @@ def ivf_pq_batch_topk(
     codebooks: list[list[list[float]]],
     codes: DataFrame,
 ) -> DataFrame:
-    """BATCHED IVF-PQ serving (round 13) — the full production ANN
-    read path: MANY queries against ONE persisted index in one plan.
-    Composes round 12's batched-PQ shape with IVFADC cell routing:
-    each query is routed driver-side to its ``nprobe`` nearest
-    centroids (the models are driver JSON — k·dim doubles), the |Q|
-    LUT rows broadcast WITH their probed-cell lists, and the packed
-    codes table scores each (query, vector) pair only when the
-    vector's cell is in that query's probe set — at scale, with the
-    index partitioned by cell, this is per-query partition pruning
-    expressed as one array_contains filter under the broadcast join.
-    Window top-``coarse_k`` per query, exact rerank on |Q|·coarse_k
-    rows, identical tie-breaks to every other rung of the ladder.
+    """IVF-PQ (VERDICT r11 #3; Jégou et al. 2011's IVFADC) for a batch
+    of ``(query_id, vector)`` queries — the memory-resident 100 TB ANN
+    index: each query is routed driver-side to its ``nprobe`` nearest
+    ``centroids`` (ties to the lower cell), PQ asymmetric distance
+    scores only the code rows in those cells (:func:`_pq_coarse`), and
+    the shared :func:`_coarse_topk_rerank` tail exact-reranks each
+    query's top-``coarse_k`` to its ``k``.  Returns ``(query_id, id,
+    sim)``.
 
-    Unlike the single-model fallbacks elsewhere, this operator
-    REQUIRES the persisted artifacts (centroids + codebooks + packed
-    codes): batch serving against an unfitted index is not a real
-    workload, and the inline-fit dial already exists on the per-query
-    keys.  Lossy exactly like :func:`ivf_pq_topk` (the per-query
-    nprobe cut); nprobe = n_cells reproduces :func:`pq_batch_topk`
-    row-for-row — pinned in tests/test_invariants.py.
+    ``codes`` is the persisted index ``(id, cell, _codes)`` —
+    :func:`pq_encode_packed` output next to its :func:`kmeans_assign`
+    cell, the literal storage layout — built from the same
+    ``centroids`` and ``codebooks`` (the plan layer keys all three
+    caches by one source fingerprint).  The query touches no
+    full-precision vector outside the rerank.
 
-    Returns ``(query_id, vec_id, sim)`` like pq_batch_topk."""
-    qlist = [(int(qid), [float(v) for v in vec]) for qid, vec in queries]
-    if not qlist:
-        raise ValueError("ivf_pq_batch_topk: empty query batch")
-    _require_packed_codes(codes, id_col, "ivf_pq_batch_topk")
-    if "cell" not in codes.columns:
-        raise ValueError("ivf_pq_batch_topk: codes frame must carry cell")
-    mm = len(codebooks)
-    if mm != m or any(len(b) != codebook_k for b in codebooks):
-        raise ValueError(
-            f"ivf_pq_batch_topk: codebooks shape {mm}×"
-            f"{len(codebooks[0]) if codebooks else 0} != m={m}×k={codebook_k}"
-        )
-    ds = len(codebooks[0][0])
-
-    rows = []
-    for qid, vec in qlist:
-        qn = math.sqrt(sum(v * v for v in vec))
-        if qn == 0.0:
-            raise ValueError(
-                f"ivf_pq_batch_topk: zero-norm query {qid} has no cosine ranking"
-            )
-        qu = [v / qn for v in vec]
-        probe = sorted(
+    Lossy only through the cell probe: a true neighbor outside a
+    query's probed cells is unreachable, the recall/cost dial every
+    IVF index exposes.  With ``nprobe`` = the cell count it reproduces
+    :func:`pq_rerank_topk` row for row; that, probe membership and
+    nprobe-monotone recall are pinned in tests/test_invariants.py."""
+    fn = "ivf_pq_topk"
+    dim = _pq_index_dim(codebooks, fn)
+    qlist = _checked_queries(queries, dim, fn)
+    _require_cols(codes, (id_col, "cell", "_codes"), fn)
+    if any(len(c) != dim for c in centroids):
+        raise ValueError(f"{fn}: centroid dim != codebook dim m*ds={dim}")
+    probes = [
+        sorted(
             range(len(centroids)),
             key=lambda ci: (
                 sum((a - b) * (a - b) for a, b in zip(vec, centroids[ci])), ci
             ),
         )[:nprobe]
-        lut = [
-            [sum(qu[j * ds + i] * c[i] for i in range(ds)) for c in codebooks[j]]
-            for j in range(m)
-        ]
-        rows.append((qid, probe, lut))
-    spark = df.sparkSession
-    lut_frame = F.broadcast(
-        spark.createDataFrame(
-            rows,
-            T.StructType(
-                [
-                    T.StructField("query_id", T.LongType()),
-                    T.StructField("_cells", T.ArrayType(T.IntegerType())),
-                    T.StructField(
-                        "_pq_lut", T.ArrayType(T.ArrayType(T.DoubleType()))
-                    ),
-                ]
-            ),
-        )
-    )
-    coarse = (
-        codes.crossJoin(lut_frame)  # broadcast nested-loop: |Q| small rows
-        .filter(F.array_contains(F.col("_cells"), F.col("cell")))
-        .select(
-            "query_id", id_col, _packed_lut_fold(F.col("_pq_lut")).alias("_coarse")
-        )
-    )
-    return _batch_coarse_topk_rerank(
+        for _, vec in qlist
+    ]
+    coarse = _pq_coarse(codes, qlist, codebooks, id_col, probes)
+    return _coarse_topk_rerank(
         df, coarse, qlist, k, coarse_k, vec_col, id_col, round_dp
     )
 
@@ -1729,8 +1361,8 @@ def kmeans_assign(
     Extracted from :func:`kmeans_fit_predict` (round 12) so a FITTED
     model — centroids persisted per corpus epoch, e.g. the plan
     layer's fingerprint-keyed JSON cache — can assign without
-    re-running Lloyd: the IVF-PQ read path
-    (:func:`ivf_pq_topk`) routes queries through exactly this pass.
+    re-running Lloyd: the IVF-PQ index build assigns each code row
+    its cell through exactly this pass.
     The fit loop calls this same function, so fit-time and read-time
     assignments cannot drift."""
     base = df.select(id_col, vec_col)

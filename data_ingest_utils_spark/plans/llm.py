@@ -51,6 +51,18 @@ def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
     return list(row.embedding), row.label
 
 
+def _query_batch(spark: SparkSession, sf_dir: str, qids) -> list:
+    """Fetch a query batch ``[(vec_id, embedding)]`` sorted by id — the
+    batch retrieval keys' driver-side literals, one collect."""
+    rows = (
+        load_table(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id").isin(*qids))
+        .select("vec_id", "embedding")
+        .collect()
+    )
+    return sorted((int(r.vec_id), list(r.embedding)) for r in rows)
+
+
 def _fixture_cache_path(sf_dir: str, table: str, name: str) -> str:
     """Fingerprint-addressed cache location for a derived fixture —
     the `_ensure_bucketed_fixture` staleness protocol (plans/scans.py)
@@ -509,7 +521,10 @@ def llm_sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 bit/dim, 8 B per 64 dims — Hamming-pruned to 100 candidates,
     exact cosine rerank to top-5.  The cheapest coarse rung of the
     retrieval ladder (exact < int8 < binary < PQ-ADC < IVF-PQ in
-    bytes-touched per corpus row).
+    bytes-touched per corpus row).  A one-query call of
+    :func:`sim.binary_hamming_topk`, so both cuts plan as
+    TakeOrderedAndProject and the 100 survivors broadcast into the
+    vector join.
 
     The oracle recomputes the ENTIRE two-stage pipeline: the sign
     DISAGREEMENT count per dimension equals the Hamming distance on
@@ -525,7 +540,9 @@ def llm_sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     protocol (tests/test_invariants.py)."""
     q, _ = _query_vec(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    return sim.binary_hamming_topk(emb, q, k=5, coarse_k=100)
+    return sim.binary_hamming_topk(emb, [(0, q)], k=5, coarse_k=100).drop(
+        "query_id"
+    )
 
 
 @plan(
@@ -569,26 +586,21 @@ def llm_sim_binary_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_sim_binary_hamming_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED binary-quantization serving (round 13): top-5 for a
-    3-query probe batch through ONE sign-bit encode pass — the batch
-    rung of the binary ladder, completing the batch-serving story
-    (pq_batch, ivf_pq_batch, binary_batch).  The coarse scan is
-    ceil(dim/64) XOR+popcount long ops per (query, vector) over a
-    broadcast |Q|-row frame of packed sign words; the shared batch
-    tail windows each query's Hamming top-100 and exact-reranks
-    |Q|·100 rows.  The oracle recomputes the WHOLE per-query pipeline
-    (sign-disagreement count ≡ packed-word Hamming by construction),
-    so the hash match certifies encode, prune, and rerank for every
-    query in the batch at any scale."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    3-query probe batch through ONE sign-bit encode pass — the same
+    :func:`sim.binary_hamming_topk` as llm_sim_binary_hamming, given
+    three queries.  The coarse scan is ceil(dim/64) XOR+popcount long
+    ops per (query, vector) over a broadcast |Q|-row frame of packed
+    sign words; the shared tail windows each query's Hamming top-100
+    and exact-reranks |Q|·100 rows.  The oracle recomputes the WHOLE
+    per-query pipeline (sign-disagreement count ≡ packed-word Hamming
+    by construction), so the hash match certifies encode, prune, and
+    rerank for every query in the batch at any scale."""
     qids = (0, 1, 2)
-    qrows = (
-        emb.filter(F.col("vec_id").isin(*qids))
-        .select("vec_id", "embedding")
-        .collect()
+    queries = _query_batch(spark, sf_dir, qids)
+    corpus = load_table(spark, sf_dir, "embeddings").filter(
+        ~F.col("vec_id").isin(*qids)
     )
-    queries = sorted((int(r.vec_id), list(r.embedding)) for r in qrows)
-    corpus = emb.filter(~F.col("vec_id").isin(*qids))
-    return sim.binary_hamming_batch_topk(corpus, queries, k=5, coarse_k=100)
+    return sim.binary_hamming_topk(corpus, queries, k=5, coarse_k=100)
 
 
 @plan(
@@ -2520,9 +2532,10 @@ def llm_sim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN (VERDICT r10 #6): m=32 subspace
-    codebooks (k=16 each) Lloyd-fitted in one distributed loop,
-    asymmetric-distance coarse scoring via a broadcast m×k lookup
-    table, exact cosine rerank of the top-100 — the third rung of the
+    codebooks (k=16 each), asymmetric-distance coarse scoring via a
+    broadcast m×k lookup table, exact cosine rerank of the top-100 —
+    a one-query call of :func:`sim.pq_rerank_topk`, so both cuts plan
+    as TakeOrderedAndProject.  The third rung of the
     retrieval ladder after llm_sim_topk (exact) and llm_sim_rerank
     (int8): PQ codes are m·log2(k) bits = 16 bytes/vector here (the
     classic 8-byte dial is m=8, k=256 — measured 8-16× slower to
@@ -2547,7 +2560,9 @@ def llm_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     books = _pq_codebooks_cached(spark, sf_dir)
     codes = _pq_codes_cached(spark, sf_dir).filter(F.col("vec_id") != 0)
-    return sim.pq_rerank_topk(emb, q, k=5, codebooks=books, codes=codes)
+    return sim.pq_rerank_topk(
+        emb, [(0, q)], k=5, codebooks=books, codes=codes
+    ).drop("query_id")
 
 
 @plan(
@@ -2617,34 +2632,28 @@ def llm_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llm_sim_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED PQ serving (round 12): top-5 neighbors for a 3-query
-    probe batch through ONE corpus encode pass — per-query asymmetric
-    LUTs ride a single small broadcast frame, one hash agg scores
-    every (query, vector) pair, a window takes each query's coarse
-    top-100, and the exact rerank touches only |Q|·100 rows.  This is
-    the plan an embedding retrieval/dedup job actually runs: the
-    per-query key (llm_sim_pq) re-encodes the corpus per probe, which
-    is exactly what a batch of 10³ probes cannot afford.
+    probe batch — the same :func:`sim.pq_rerank_topk` as llm_sim_pq,
+    given three queries.  The per-query asymmetric LUTs ride a single
+    small broadcast frame, each packed code row folds every query's
+    LUT in one pass over the codes, a window takes each query's coarse
+    top-100, and the exact rerank touches only |Q|·100 rows — the plan
+    an embedding retrieval/dedup job runs for a batch of probes.
 
     Codebooks AND codes come from the fingerprint-keyed caches
-    (round 13, VERDICT r12 #4): the packed parquet index drops the
-    graded cost to the per-row LUT fold + window top-100 + |Q|·100
-    rerank — batch serving against a PERSISTED index, which is the
-    job's actual nightly shape.  The oracle is the per-query EXACT
-    brute-force top-5, so the driver hash certifies that the shared
-    coarse index retained every query's true top-5 — three recall
-    certificates in one row."""
-    emb = load_table(spark, sf_dir, "embeddings")
+    (round 13, VERDICT r12 #4), so the graded cost is the per-row LUT
+    fold + window top-100 + |Q|·100 rerank — batch serving against a
+    PERSISTED index, which is the job's actual nightly shape.  The
+    oracle is the per-query EXACT brute-force top-5, so the driver
+    hash certifies that the shared coarse index retained every
+    query's true top-5 — three recall certificates in one row."""
     qids = (0, 1, 2)
-    qrows = (
-        emb.filter(F.col("vec_id").isin(*qids))
-        .select("vec_id", "embedding")
-        .collect()
+    queries = _query_batch(spark, sf_dir, qids)
+    corpus = load_table(spark, sf_dir, "embeddings").filter(
+        ~F.col("vec_id").isin(*qids)
     )
-    queries = sorted((int(r.vec_id), list(r.embedding)) for r in qrows)
-    corpus = emb.filter(~F.col("vec_id").isin(*qids))
     books = _pq_codebooks_cached(spark, sf_dir)
     codes = _pq_codes_cached(spark, sf_dir).filter(~F.col("vec_id").isin(*qids))
-    return sim.pq_batch_topk(corpus, queries, k=5, codebooks=books, codes=codes)
+    return sim.pq_rerank_topk(corpus, queries, k=5, codebooks=books, codes=codes)
 
 
 @plan("llm_kmeans_cells")  # rows-only: iterative refinement, no SQL twin
@@ -2681,12 +2690,12 @@ def llm_sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ retrieval (VERDICT r11 #3): query routed to its nprobe=2
     nearest learned cells, PQ asymmetric-distance scoring ONLY within
     them, exact cosine rerank of the coarse survivors — the
-    memory-resident 100 TB ANN index shape (IVFADC), composed from
-    the two persisted models this plan layer already caches (k-means
-    centroids + PQ codebooks, both fingerprint-keyed JSON).  The
-    query-time cost is one broadcast-model assignment pass, encode +
-    ADC over the probed ~nprobe/n_cells slice, and a ≤100-row exact
-    rerank; zero Lloyd actions.
+    memory-resident 100 TB ANN index shape (IVFADC), served from the
+    fingerprint-keyed caches (k-means centroids, PQ codebooks and the
+    packed (vec_id, cell, _codes) index).  A one-query call of
+    :func:`sim.ivf_pq_topk`: the query-time cost is the LUT fold over
+    the probed ~nprobe/n_cells slice of the codes and a ≤100-row exact
+    rerank, both cuts TakeOrderedAndProject; zero Lloyd actions.
 
     Rows-only BY MEASUREMENT, not assumption (the VERDICT task's
     own fallback): the fixture embeddings have no query-aligned
@@ -2706,24 +2715,26 @@ def llm_sim_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = _pq_codebooks_cached(spark, sf_dir)
     codes = _pq_codes_cached(spark, sf_dir).filter(F.col("vec_id") != 0)
     return sim.ivf_pq_topk(
-        emb, q, k=5, n_cells=8, nprobe=2, centroids=cents, codebooks=books,
+        emb, [(0, q)], k=5, nprobe=2, centroids=cents, codebooks=books,
         codes=codes,
-    )
+    ).drop("query_id")
 
 
 @plan("llm_sim_ivf_pq_batch")  # rows-only: the nprobe cell cut is lossy by design
 def llm_sim_ivf_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED IVF-PQ serving (round 13): the 3-query probe batch of
-    llm_sim_pq_batch routed through the persisted IVFADC index —
-    per-query nprobe=2 cell routing (driver-side, against the cached
+    llm_sim_pq_batch routed through the persisted IVFADC index by the
+    same :func:`sim.ivf_pq_topk` as llm_sim_ivf_pq — per-query
+    nprobe=2 cell routing (driver-side, against the cached
     centroids), one broadcast frame carrying each query's LUT AND its
-    probed-cell list, the packed codes table filtered per query by
-    array_contains (partition pruning at scale, where the index is
-    partitioned by cell), window top-100 per query, exact rerank on
-    |Q|·100 rows.  This is the complete production ANN serving plan:
-    every artifact (centroids, codebooks, packed codes) comes from
-    the fingerprint-keyed epoch caches; the query pays routing + a
-    ~nprobe/n_cells slice of the LUT folds + the rerank.
+    probed-cell list, the codes scan filtered to the union of the
+    probed cells (partition pruning at scale, where the index is
+    partitioned by cell) and per query by array_contains, window
+    top-100 per query, exact rerank on |Q|·100 rows.  This is the
+    complete production ANN serving plan: every artifact (centroids,
+    codebooks, packed codes) comes from the fingerprint-keyed epoch
+    caches; the query pays routing + a ~nprobe/n_cells slice of the
+    LUT folds + the rerank.
 
     Rows-only BY MEASUREMENT, same evidence as llm_sim_ivf_pq
     re-measured round 13 for the batch queries: the minimal covering
@@ -2734,20 +2745,16 @@ def llm_sim_ivf_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_invariants.py: full-probe (nprobe = n_cells) output ≡
     llm_sim_pq_batch's flat-PQ output row-for-row, probed-cell
     membership, and determinism."""
-    emb = load_table(spark, sf_dir, "embeddings")
     qids = (0, 1, 2)
-    qrows = (
-        emb.filter(F.col("vec_id").isin(*qids))
-        .select("vec_id", "embedding")
-        .collect()
+    queries = _query_batch(spark, sf_dir, qids)
+    corpus = load_table(spark, sf_dir, "embeddings").filter(
+        ~F.col("vec_id").isin(*qids)
     )
-    queries = sorted((int(r.vec_id), list(r.embedding)) for r in qrows)
-    corpus = emb.filter(~F.col("vec_id").isin(*qids))
     cents = _kmeans_centroids_cached(spark, sf_dir, k=8, iters=2)
     books = _pq_codebooks_cached(spark, sf_dir)
     codes = _pq_codes_cached(spark, sf_dir).filter(~F.col("vec_id").isin(*qids))
-    return sim.ivf_pq_batch_topk(
-        corpus, queries, k=5, n_cells=8, nprobe=2,
+    return sim.ivf_pq_topk(
+        corpus, queries, k=5, nprobe=2,
         centroids=cents, codebooks=books, codes=codes,
     )
 

@@ -85,16 +85,26 @@ def test_sim_topk_no_join(spark):
     assert "Join" not in plan
 
 
-def test_binary_hamming_takeordered_coarse_broadcast_rerank(spark):
-    """llm_sim_binary_hamming: the Hamming coarse cut must finish as
-    TakeOrderedAndProject (per-partition heads over the 8-byte codes,
-    no global sort) and the 100-row join-back must be a broadcast hash
-    join — the corpus never re-shuffles for the rerank."""
-    plan = _plan(spark, "llm_sim_binary_hamming")
-    assert "TakeOrderedAndProject" in plan
+@pytest.mark.parametrize(
+    "key",
+    ["llm_sim_binary_hamming", "llm_sim_pq", "llm_sim_ivf_pq", "llm_sim_pq_batch"],
+)
+def test_binary_hamming_takeordered_coarse_broadcast_rerank(spark, key):
+    """The retrieval rungs' shared tail picks its shape from the batch
+    size.  One query: the coarse cut must finish as
+    TakeOrderedAndProject (per-partition heads over the codes, no
+    global sort, no window) and the 100-row join-back must be a
+    broadcast hash join — the corpus never re-shuffles for the rerank.
+    A query batch: each query's cut is a per-query Window."""
+    plan = _plan(spark, key)
     assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
+    if key.endswith("_batch"):
+        assert "Window" in plan
+    else:
+        assert "TakeOrderedAndProject" in plan
+        assert "Window" not in plan
+        assert "SortMergeJoin" not in plan
 
 
 def test_global_agg_partial_final(spark):

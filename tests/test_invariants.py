@@ -602,7 +602,7 @@ def test_binary_hamming_recall_and_packing(spark):
     emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet").filter(
         F.col("vec_id") != 0
     )
-    full = sim.binary_hamming_topk(emb, q, k=5, coarse_k=10_000_000)
+    full = sim.binary_hamming_topk(emb, [(0, q)], k=5, coarse_k=10_000_000)
     assert [(r.vec_id, r.sim) for r in full.collect()] == [
         (r.vec_id, r.sim) for r in exact_rows
     ]
@@ -623,33 +623,78 @@ def test_binary_hamming_recall_and_packing(spark):
         ), f"packer mismatch on vec_id={r.vec_id}"
 
 
-def test_binary_hamming_batch_equals_per_query_single(spark):
-    """The batched binary rung must reproduce the single-query rung
-    EXACTLY per query on the same corpus — the two share the encode
-    and tie-break rules, so any divergence is a real defect (ordering,
-    negation of the Hamming score into the shared rerank tail, or the
-    broadcast frame's packing)."""
-    from data_ingest_utils_spark.operators import similarity as sim
+def _retrieval_rung(spark, rung: str, exclude: tuple):
+    """``call(corpus, queries)`` for the binary, PQ or IVF-PQ
+    (nprobe=2) retrieval rung at k=5; the PQ rungs serve from the
+    SF_T2 fingerprint caches with the ``exclude`` ids filtered out."""
+    from data_ingest_utils_spark.plans.llm import (
+        _kmeans_centroids_cached,
+        _pq_codebooks_cached,
+        _pq_codes_cached,
+    )
 
-    emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
+    if rung == "binary":
+        return lambda df, qs: sim.binary_hamming_topk(df, qs, k=5, coarse_k=100)
+    books = _pq_codebooks_cached(spark, SF_T2)
+    codes = _pq_codes_cached(spark, SF_T2).filter(~F.col("vec_id").isin(*exclude))
+    if rung == "pq":
+        return lambda df, qs: sim.pq_rerank_topk(
+            df, qs, k=5, codebooks=books, codes=codes
+        )
+    cents = _kmeans_centroids_cached(spark, SF_T2, k=8, iters=2)
+    return lambda df, qs: sim.ivf_pq_topk(
+        df, qs, k=5, nprobe=2, centroids=cents, codebooks=books, codes=codes
+    )
+
+
+@pytest.mark.parametrize("rung", ["binary", "pq", "ivf_pq"])
+def test_binary_hamming_batch_equals_per_query_single(spark, rung):
+    """Every retrieval rung's 3-query call must reproduce three
+    1-query calls EXACTLY, row for row, on the same corpus: the batch
+    takes its cuts with a per-query window, one query with
+    TakeOrdered, over the same coarse scores, tie-breaks and rerank
+    arithmetic — so any divergence is a real defect (ordering, the
+    per-query cut, the Hamming negation, or a broadcast query frame)."""
+    from data_ingest_utils_spark.plans.llm import _query_batch
+
     qids = (0, 1, 2)
-    qrows = {
-        int(r.vec_id): list(r.embedding)
-        for r in emb.filter(F.col("vec_id").isin(*qids)).collect()
-    }
-    corpus = emb.filter(~F.col("vec_id").isin(*qids))
-    batch = sim.binary_hamming_batch_topk(
-        corpus, sorted(qrows.items()), k=5, coarse_k=100
-    ).collect()
-    for qid in qids:
-        got = [(r.vec_id, r.sim) for r in batch if r.query_id == qid]
-        want = [
-            (r.vec_id, r.sim)
-            for r in sim.binary_hamming_topk(
-                corpus, qrows[qid], k=5, coarse_k=100
-            ).collect()
-        ]
-        assert got == want, f"query {qid}: batch {got} != single {want}"
+    queries = _query_batch(spark, SF_T2, qids)
+    corpus = spark.read.parquet(f"{SF_T2}/embeddings.parquet").filter(
+        ~F.col("vec_id").isin(*qids)
+    )
+    call = _retrieval_rung(spark, rung, qids)
+    batch = [tuple(r) for r in call(corpus, queries).collect()]
+    single = [tuple(r) for q in queries for r in call(corpus, [q]).collect()]
+    assert len(batch) == 5 * len(qids)
+    assert batch == single
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [("nan", "norm"), ("inf", "norm"), ("zero_norm", "norm"),
+     ("wrong_dim", "dim"), ("dup_id", "duplicate")],
+)
+@pytest.mark.parametrize("rung", ["binary", "pq", "ivf_pq"])
+def test_retrieval_rung_rejects_bad_query(spark, rung, bad, match):
+    """Every rung shares one query check, run on the driver before any
+    plan is built: a NaN, infinite or zero vector has no cosine
+    ranking (the PQ rungs used to return 0 rows for NaN, every rung
+    for an infinite element), a query whose dim differs from the
+    batch's or the PQ index's m·ds must not be silently truncated into
+    the LUT, and a repeated query id must not merge two queries under
+    one window."""
+    emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
+    q = list(emb.filter(F.col("vec_id") == 0).head().embedding)
+    queries = {
+        "nan": [(0, [float("nan")] + q[1:])],
+        "inf": [(0, [float("inf")] + q[1:])],
+        "zero_norm": [(0, [0.0] * len(q))],
+        "wrong_dim": [(0, q), (1, q + [0.5])],
+        "dup_id": [(0, q), (0, q[::-1])],
+    }[bad]
+    call = _retrieval_rung(spark, rung, (0, 1))
+    with pytest.raises(ValueError, match=match):
+        call(emb.filter(~F.col("vec_id").isin(0, 1)), queries)
 
 
 SCALE_SF1 = ".scale/sf1.0"
@@ -680,7 +725,7 @@ def test_binary_hamming_recall_monotone_in_coarse_k_at_scale(spark):
         got = {
             r.vec_id
             for r in sim.binary_hamming_topk(
-                rest, q, k=5, coarse_k=coarse_k
+                rest, [(0, q)], k=5, coarse_k=coarse_k
             ).collect()
         }
         recalls.append(len(exact & got))
@@ -708,10 +753,11 @@ def test_int8_and_pq_recall_monotone_in_coarse_k_at_scale(spark):
     rest = emb.filter(F.col("vec_id") != 0)
     exact = {r.vec_id for r in sim.cosine_topk(rest, q, k=5).collect()}
     books = sim.pq_fit_codebooks(rest, m=32, codebook_k=16, iters=2)
+    codes = sim.pq_encode_packed(rest, books)
     for rung, make in (
         ("int8", lambda ck: sim.quantized_rerank_topk(rest, q, k=5, coarse_k=ck)),
         ("pq", lambda ck: sim.pq_rerank_topk(
-            rest, q, k=5, coarse_k=ck, codebooks=books)),
+            rest, [(0, q)], k=5, coarse_k=ck, codebooks=books, codes=codes)),
     ):
         recalls = []
         for coarse_k in (20, 100, 500):
@@ -940,6 +986,7 @@ def test_ivf_pq_full_probe_equals_flat_pq(spark):
     from data_ingest_utils_spark.plans.llm import (
         _kmeans_centroids_cached,
         _pq_codebooks_cached,
+        _pq_codes_cached,
     )
 
     emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
@@ -947,14 +994,18 @@ def test_ivf_pq_full_probe_equals_flat_pq(spark):
     rest = emb.filter(F.col("vec_id") != 0)
     cents = _kmeans_centroids_cached(spark, SF_T2, k=8, iters=2)
     books = _pq_codebooks_cached(spark, SF_T2)
+    codes = _pq_codes_cached(spark, SF_T2).filter(F.col("vec_id") != 0)
     flat = [
         (r.vec_id, r.sim)
-        for r in sim.pq_rerank_topk(rest, q, k=5, codebooks=books).collect()
+        for r in sim.pq_rerank_topk(
+            rest, [(0, q)], k=5, codebooks=books, codes=codes
+        ).collect()
     ]
     full = [
         (r.vec_id, r.sim)
         for r in sim.ivf_pq_topk(
-            rest, q, k=5, n_cells=8, nprobe=8, centroids=cents, codebooks=books
+            rest, [(0, q)], k=5, nprobe=8, centroids=cents, codebooks=books,
+            codes=codes,
         ).collect()
     ]
     assert full == flat
@@ -964,7 +1015,7 @@ def test_ivf_pq_batch_full_probe_equals_flat_batch(spark):
     """Batched IVF-PQ composition certificate (round 13): with
     nprobe = n_cells every query's cell cut keeps everything, so the
     batched routing (per-query probe lists + array_contains filter
-    over the packed index) must reproduce pq_batch_topk's flat output
+    over the packed index) must reproduce pq_rerank_topk's flat output
     row-for-row for EVERY query — any loss the rows-only
     llm_sim_ivf_pq_batch key shows is the declared per-query cell cut
     alone.  Also pins probed-cell membership at nprobe=2 and
@@ -973,14 +1024,12 @@ def test_ivf_pq_batch_full_probe_equals_flat_batch(spark):
         _kmeans_centroids_cached,
         _pq_codebooks_cached,
         _pq_codes_cached,
+        _query_batch,
     )
 
     emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
     qids = (0, 1, 2)
-    queries = sorted(
-        (int(r.vec_id), list(r.embedding))
-        for r in emb.filter(F.col("vec_id").isin(*qids)).collect()
-    )
+    queries = _query_batch(spark, SF_T2, qids)
     corpus = emb.filter(~F.col("vec_id").isin(*qids))
     cents = _kmeans_centroids_cached(spark, SF_T2, k=8, iters=2)
     books = _pq_codebooks_cached(spark, SF_T2)
@@ -988,26 +1037,26 @@ def test_ivf_pq_batch_full_probe_equals_flat_batch(spark):
 
     flat = [
         (r.query_id, r.vec_id, r.sim)
-        for r in sim.pq_batch_topk(
+        for r in sim.pq_rerank_topk(
             corpus, queries, k=5, codebooks=books, codes=codes
         ).collect()
     ]
     full = [
         (r.query_id, r.vec_id, r.sim)
-        for r in sim.ivf_pq_batch_topk(
-            corpus, queries, k=5, n_cells=8, nprobe=8,
+        for r in sim.ivf_pq_topk(
+            corpus, queries, k=5, nprobe=8,
             centroids=cents, codebooks=books, codes=codes,
         ).collect()
     ]
     assert full == flat
 
     # nprobe=2: every returned vector lives in its query's probed cells
-    probed = sim.ivf_pq_batch_topk(
-        corpus, queries, k=5, n_cells=8, nprobe=2,
+    probed = sim.ivf_pq_topk(
+        corpus, queries, k=5, nprobe=2,
         centroids=cents, codebooks=books, codes=codes,
     )
-    again = sim.ivf_pq_batch_topk(
-        corpus, queries, k=5, n_cells=8, nprobe=2,
+    again = sim.ivf_pq_topk(
+        corpus, queries, k=5, nprobe=2,
         centroids=cents, codebooks=books, codes=codes,
     )
     got = [(r.query_id, r.vec_id, r.sim) for r in probed.collect()]
@@ -1041,6 +1090,7 @@ def test_ivf_pq_probe_membership_exact_sims_and_monotone_recall(spark):
     from data_ingest_utils_spark.plans.llm import (
         _kmeans_centroids_cached,
         _pq_codebooks_cached,
+        _pq_codes_cached,
     )
 
     emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
@@ -1078,10 +1128,12 @@ def test_ivf_pq_probe_membership_exact_sims_and_monotone_recall(spark):
 
     exact = {r.vec_id for r in sim.cosine_topk(rest, q, k=5).collect()}
     books = _pq_codebooks_cached(spark, SF_T2)
+    codes = _pq_codes_cached(spark, SF_T2).filter(F.col("vec_id") != 0)
     recalls = []
     for nprobe in (2, 4, 8):
         out = sim.ivf_pq_topk(
-            rest, q, k=5, nprobe=nprobe, centroids=cents, codebooks=books
+            rest, [(0, q)], k=5, nprobe=nprobe, centroids=cents,
+            codebooks=books, codes=codes,
         )
         recalls.append(len(exact & {r.vec_id for r in out.collect()}))
     assert recalls == sorted(recalls), recalls
