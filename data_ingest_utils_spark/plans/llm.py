@@ -489,7 +489,7 @@ def llm_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors of one query vector."""
     q, _ = _query_vec(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    return sim.cosine_topk(emb, q, k=5)
+    return sim.cosine_topk(emb, [(0, q)], k=5).drop("query_id")
 
 
 @plan(
@@ -589,8 +589,8 @@ def llm_sim_binary_hamming_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-query probe batch through ONE sign-bit encode pass — the same
     :func:`sim.binary_hamming_topk` as llm_sim_binary_hamming, given
     three queries.  The coarse scan is ceil(dim/64) XOR+popcount long
-    ops per (query, vector) over a broadcast |Q|-row frame of packed
-    sign words; the shared tail windows each query's Hamming top-100
+    ops per (query, vector) against the packed sign words, which ride
+    one folded plan literal; the shared tail windows each query's Hamming top-100
     and exact-reranks |Q|·100 rows.  The oracle recomputes the WHOLE
     per-query pipeline (sign-disagreement count ≡ packed-word Hamming
     by construction), so the hash match certifies encode, prune, and
@@ -659,7 +659,8 @@ def llm_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition key ⇒ the filter is partition pruning)."""
     q, label = _query_vec(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    return sim.ivf_topk(emb, q, label, k=5)
+    cell = emb.filter(F.col("label") == F.lit(label))
+    return sim.cosine_topk(cell, [(0, q)], k=5).drop("query_id")
 
 
 @plan("llm_sim_pairs_lsh")  # rows-only: randomized hyperplanes
@@ -2513,7 +2514,9 @@ def llm_sim_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity llm_sim_topk already certifies."""
     q, _ = _query_vec(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    return sim.quantized_rerank_topk(emb, q, k=5, coarse_k=50)
+    return sim.quantized_rerank_topk(emb, [(0, q)], k=5, coarse_k=50).drop(
+        "query_id"
+    )
 
 
 @plan(
@@ -2633,8 +2636,8 @@ def llm_embed_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_sim_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BATCHED PQ serving (round 12): top-5 neighbors for a 3-query
     probe batch — the same :func:`sim.pq_rerank_topk` as llm_sim_pq,
-    given three queries.  The per-query asymmetric LUTs ride a single
-    small broadcast frame, each packed code row folds every query's
+    given three queries.  The per-query asymmetric LUTs ride one
+    folded plan literal, each packed code row folds every query's
     LUT in one pass over the codes, a window takes each query's coarse
     top-100, and the exact rerank touches only |Q|·100 rows — the plan
     an embedding retrieval/dedup job runs for a batch of probes.
@@ -2677,12 +2680,14 @@ def llm_sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition column and a probe is partition pruning.  Recall vs
     brute force pinned in tests/test_invariants.py.  Centroids come
     from the fingerprint-keyed JSON cache (round 12) — identical
-    output to the inline fit (deterministic Lloyd), minus its ~4
+    output to a fresh fit (deterministic Lloyd), minus its ~4
     driver actions per invocation."""
     q, _ = _query_vec(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     cents = _kmeans_centroids_cached(spark, sf_dir, k=8, iters=2)
-    return sim.ivf_topk_kmeans(emb, q, k=5, n_cells=8, nprobe=2, centroids=cents)
+    return sim.ivf_topk_kmeans(emb, [(0, q)], k=5, nprobe=2, centroids=cents).drop(
+        "query_id"
+    )
 
 
 @plan("llm_sim_ivf_pq")  # rows-only: the nprobe cell cut is lossy by design
@@ -2726,8 +2731,8 @@ def llm_sim_ivf_pq_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     llm_sim_pq_batch routed through the persisted IVFADC index by the
     same :func:`sim.ivf_pq_topk` as llm_sim_ivf_pq — per-query
     nprobe=2 cell routing (driver-side, against the cached
-    centroids), one broadcast frame carrying each query's LUT AND its
-    probed-cell list, the codes scan filtered to the union of the
+    centroids), one folded plan literal carrying each query's LUT AND
+    its probed-cell list, the codes scan filtered to the union of the
     probed cells (partition pruning at scale, where the index is
     partitioned by cell) and per query by array_contains, window
     top-100 per query, exact rerank on |Q|·100 rows.  This is the

@@ -77,28 +77,35 @@ def test_pair_generators_never_cartesian(spark, key):
     assert "BroadcastNestedLoopJoin" not in plan, f"nested-loop in {key}"
 
 
-def test_sim_topk_no_join(spark):
-    """llm_sim_topk broadcasts the query vector as a literal — the plan
-    must be scan → project → TakeOrderedAndProject with NO join."""
-    plan = _plan(spark, "llm_sim_topk")
+@pytest.mark.parametrize("key", ["llm_sim_topk", "llm_sim_ivf", "llm_sim_ivf_kmeans"])
+def test_sim_topk_no_join(spark, key):
+    """The exact rung attaches its query batch from one folded literal
+    — the plan must be scan → project → TakeOrderedAndProject with NO
+    join, with or without a cell filter."""
+    plan = _plan(spark, key)
     assert "TakeOrderedAndProject" in plan
     assert "Join" not in plan
 
 
 @pytest.mark.parametrize(
     "key",
-    ["llm_sim_binary_hamming", "llm_sim_pq", "llm_sim_ivf_pq", "llm_sim_pq_batch"],
+    ["llm_sim_binary_hamming", "llm_sim_rerank", "llm_sim_pq", "llm_sim_ivf_pq",
+     "llm_sim_pq_batch"],
 )
 def test_binary_hamming_takeordered_coarse_broadcast_rerank(spark, key):
     """The retrieval rungs' shared tail picks its shape from the batch
     size.  One query: the coarse cut must finish as
     TakeOrderedAndProject (per-partition heads over the codes, no
-    global sort, no window) and the 100-row join-back must be a
-    broadcast hash join — the corpus never re-shuffles for the rerank.
-    A query batch: each query's cut is a per-query Window."""
+    global sort, no window).  A query batch: each query's cut is a
+    per-query Window.  Either way the candidate join-back is a
+    broadcast hash join — the corpus never re-shuffles for the rerank
+    — and the queries ride a folded literal, not a driver-built frame
+    (ExistingRDD) attached by a nested-loop join."""
     plan = _plan(spark, key)
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
+    assert "ExistingRDD" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
     if key.endswith("_batch"):
         assert "Window" in plan
     else:

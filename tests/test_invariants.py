@@ -624,37 +624,49 @@ def test_binary_hamming_recall_and_packing(spark):
 
 
 def _retrieval_rung(spark, rung: str, exclude: tuple):
-    """``call(corpus, queries)`` for the binary, PQ or IVF-PQ
-    (nprobe=2) retrieval rung at k=5; the PQ rungs serve from the
-    SF_T2 fingerprint caches with the ``exclude`` ids filtered out."""
+    """``call(corpus, queries)`` for a retrieval rung at k=5: exact,
+    int8, binary, PQ, or the IVF rungs at nprobe=2.  The PQ and IVF
+    rungs serve from the SF_T2 fingerprint caches, with the
+    ``exclude`` ids filtered out of the PQ codes."""
     from data_ingest_utils_spark.plans.llm import (
         _kmeans_centroids_cached,
         _pq_codebooks_cached,
         _pq_codes_cached,
     )
 
+    if rung == "exact":
+        return lambda df, qs: sim.cosine_topk(df, qs, k=5)
+    if rung == "int8":
+        return lambda df, qs: sim.quantized_rerank_topk(df, qs, k=5, coarse_k=50)
     if rung == "binary":
         return lambda df, qs: sim.binary_hamming_topk(df, qs, k=5, coarse_k=100)
+    cents = _kmeans_centroids_cached(spark, SF_T2, k=8, iters=2)
+    if rung == "ivf_kmeans":
+        return lambda df, qs: sim.ivf_topk_kmeans(
+            df, qs, k=5, nprobe=2, centroids=cents
+        )
     books = _pq_codebooks_cached(spark, SF_T2)
     codes = _pq_codes_cached(spark, SF_T2).filter(~F.col("vec_id").isin(*exclude))
     if rung == "pq":
         return lambda df, qs: sim.pq_rerank_topk(
             df, qs, k=5, codebooks=books, codes=codes
         )
-    cents = _kmeans_centroids_cached(spark, SF_T2, k=8, iters=2)
     return lambda df, qs: sim.ivf_pq_topk(
         df, qs, k=5, nprobe=2, centroids=cents, codebooks=books, codes=codes
     )
 
 
-@pytest.mark.parametrize("rung", ["binary", "pq", "ivf_pq"])
+RUNGS = ["exact", "ivf_kmeans", "int8", "binary", "pq", "ivf_pq"]
+
+
+@pytest.mark.parametrize("rung", RUNGS)
 def test_binary_hamming_batch_equals_per_query_single(spark, rung):
     """Every retrieval rung's 3-query call must reproduce three
     1-query calls EXACTLY, row for row, on the same corpus: the batch
     takes its cuts with a per-query window, one query with
     TakeOrdered, over the same coarse scores, tie-breaks and rerank
     arithmetic — so any divergence is a real defect (ordering, the
-    per-query cut, the Hamming negation, or a broadcast query frame)."""
+    per-query cut, the Hamming negation, or the query literal)."""
     from data_ingest_utils_spark.plans.llm import _query_batch
 
     qids = (0, 1, 2)
@@ -674,15 +686,15 @@ def test_binary_hamming_batch_equals_per_query_single(spark, rung):
     [("nan", "norm"), ("inf", "norm"), ("zero_norm", "norm"),
      ("wrong_dim", "dim"), ("dup_id", "duplicate")],
 )
-@pytest.mark.parametrize("rung", ["binary", "pq", "ivf_pq"])
+@pytest.mark.parametrize("rung", RUNGS)
 def test_retrieval_rung_rejects_bad_query(spark, rung, bad, match):
     """Every rung shares one query check, run on the driver before any
     plan is built: a NaN, infinite or zero vector has no cosine
-    ranking (the PQ rungs used to return 0 rows for NaN, every rung
-    for an infinite element), a query whose dim differs from the
-    batch's or the PQ index's m·ds must not be silently truncated into
-    the LUT, and a repeated query id must not merge two queries under
-    one window."""
+    ranking (the PQ and exact rungs used to return 0 rows for NaN,
+    every rung for an infinite element), a query whose dim differs
+    from the batch's or the PQ index's m·ds must not be silently
+    truncated into the LUT, and a repeated query id must not merge two
+    queries under one window."""
     emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
     q = list(emb.filter(F.col("vec_id") == 0).head().embedding)
     queries = {
@@ -719,7 +731,7 @@ def test_binary_hamming_recall_monotone_in_coarse_k_at_scale(spark):
     emb = spark.read.parquet(f"{SCALE_SF1}/embeddings.parquet")
     q = list(emb.filter(F.col("vec_id") == 0).head().embedding)
     rest = emb.filter(F.col("vec_id") != 0)
-    exact = {r.vec_id for r in sim.cosine_topk(rest, q, k=5).collect()}
+    exact = {r.vec_id for r in sim.cosine_topk(rest, [(0, q)], k=5).collect()}
     recalls = []
     for coarse_k in (20, 100, 500):
         got = {
@@ -751,11 +763,12 @@ def test_int8_and_pq_recall_monotone_in_coarse_k_at_scale(spark):
     emb = spark.read.parquet(f"{SCALE_SF1}/embeddings.parquet")
     q = list(emb.filter(F.col("vec_id") == 0).head().embedding)
     rest = emb.filter(F.col("vec_id") != 0)
-    exact = {r.vec_id for r in sim.cosine_topk(rest, q, k=5).collect()}
+    exact = {r.vec_id for r in sim.cosine_topk(rest, [(0, q)], k=5).collect()}
     books = sim.pq_fit_codebooks(rest, m=32, codebook_k=16, iters=2)
     codes = sim.pq_encode_packed(rest, books)
     for rung, make in (
-        ("int8", lambda ck: sim.quantized_rerank_topk(rest, q, k=5, coarse_k=ck)),
+        ("int8", lambda ck: sim.quantized_rerank_topk(
+            rest, [(0, q)], k=5, coarse_k=ck)),
         ("pq", lambda ck: sim.pq_rerank_topk(
             rest, [(0, q)], k=5, coarse_k=ck, codebooks=books, codes=codes)),
     ):
@@ -963,17 +976,15 @@ def test_ivf_kmeans_recall_and_full_probe_exact(spark):
     qrow = emb.filter(F.col("vec_id") == 0).head()
     q = list(qrow.embedding)
     rest = emb.filter(F.col("vec_id") != 0)
-    exact = [r.vec_id for r in sim.cosine_topk(rest, q, k=5).collect()]
-    probed = [
-        r.vec_id
-        for r in sim.ivf_topk_kmeans(rest, q, k=5, n_cells=8, nprobe=2).collect()
-    ]
-    assert len(set(exact) & set(probed)) >= 3
-    full = [
-        r.vec_id
-        for r in sim.ivf_topk_kmeans(rest, q, k=5, n_cells=8, nprobe=8).collect()
-    ]
-    assert full == exact
+    exact = [r.vec_id for r in sim.cosine_topk(rest, [(0, q)], k=5).collect()]
+    _, cents, _ = sim.kmeans_fit_predict(rest, k=8, iters=2)
+
+    def ivf(nprobe):
+        out = sim.ivf_topk_kmeans(rest, [(0, q)], k=5, nprobe=nprobe, centroids=cents)
+        return [r.vec_id for r in out.collect()]
+
+    assert len(set(exact) & set(ivf(2))) >= 3
+    assert ivf(8) == exact
 
 
 def test_ivf_pq_full_probe_equals_flat_pq(spark):
@@ -1126,7 +1137,7 @@ def test_ivf_pq_probe_membership_exact_sims_and_monotone_recall(spark):
         )
         assert abs(round(cos, 4) - s) <= 1e-9, (v, s, cos)
 
-    exact = {r.vec_id for r in sim.cosine_topk(rest, q, k=5).collect()}
+    exact = {r.vec_id for r in sim.cosine_topk(rest, [(0, q)], k=5).collect()}
     books = _pq_codebooks_cached(spark, SF_T2)
     codes = _pq_codes_cached(spark, SF_T2).filter(F.col("vec_id") != 0)
     recalls = []
@@ -1941,9 +1952,10 @@ def test_pq_plan_shapes(spark):
       parquet scans (one feeding encode+ADC, one the exact-rerank
       join back to the float vectors), each consumed once.  One scan
       would mean a checkpoint crept back in (fit cost on the read
-      path); three+ would mean a stage re-derives the source.  Its
-      only joins are one-row broadcast model attaches + the broadcast
-      id-list rerank join — never a cartesian product over data;
+      path); three+ would mean a stage re-derives the source.  The
+      queries attach by a Generate inline of one folded literal and
+      the only join is the broadcast id-list rerank join — never a
+      cartesian product over data;
     - the incremental MinHash probe's full plan contains no cartesian
       product: band candidates ride the (band_idx, band_hash)
       equi-join, verify rides id equi-joins, admission is a left-anti
@@ -1960,16 +1972,17 @@ def test_pq_plan_shapes(spark):
     # subvector explode and its groupBy hash-agg must be GONE from
     # the graded plan (their cost moved to the epoch build)
     assert "posexplode" not in plan.lower(), plan
-    assert "Generate" not in plan, plan
+    generators = [l for l in plan.splitlines() if "Generate " in l]
+    assert all("Generate inline(" in l for l in generators), plan
 
     inc = QUERIES["llm_dedup_minhash_incremental"](spark, SF_T2)
     iplan = inc._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in iplan, iplan
     assert "LeftAnti" in iplan, iplan
 
-    # batched PQ: the per-query LUT attach is a BROADCAST nested-loop
-    # over a |Q|-row frame, never a cartesian product over data, and
-    # the rerank join is likewise broadcast at fixture scale
+    # batched PQ: the per-query LUTs attach by a Generate inline of one
+    # folded literal, never a cartesian product over data, and the
+    # rerank join is broadcast
     batch = QUERIES["llm_sim_pq_batch"](spark, SF_T2)
     bplan = batch._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in bplan, bplan

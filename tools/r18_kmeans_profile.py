@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from data_ingest_utils_spark.operators import similarity as sim
 from data_ingest_utils_spark.plans import QUERIES
-from data_ingest_utils_spark.plans.registry import load_table
+from data_ingest_utils_spark.sources.readers import load_table
 from data_ingest_utils_spark.session import get_session
 
 
