@@ -150,9 +150,11 @@ def dot_to_query(df: DataFrame, vec_col: str, query: Sequence[float]) -> Column:
     """RAW inner product of each row's vector with a literal query —
     the MIPS scoring rule (unnormalized embeddings: DPR retrievers,
     recommender factor models), where magnitude is part of the score
-    and cosine's normalization would erase it."""
-    q = F.array(*[F.lit(float(v)) for v in query])
-    return _dot(F.col(vec_col), q)
+    and cosine's normalization would erase it.  The query rides one
+    folded literal (:func:`_plan_literal`); a NaN dot folds to NULL,
+    since NaN would rank first in a descending cut."""
+    q = _plan_literal([float(v) for v in query], _VEC)
+    return _null_nan(_dot(F.col(vec_col), q))
 
 
 def cosine_topk(

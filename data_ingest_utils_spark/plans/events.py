@@ -657,21 +657,20 @@ def evt_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "inner",
     )
     try:
-        # 8 state stores, not the batch default 32: the join buffers
-        # ~1 M rows at sf1 — per-store snapshot/commit overhead, not
-        # row volume, dominates the one-batch drain (14.5 s → 6.25 s
-        # measured; see state_partitions_scope).  Since round 11 this
-        # is run_available_now's default (state_partitions=8).
-        # no_data_batches=False (round 17): inner-join matches emit in
-        # the data batch itself, so the trailing empty micro-batch
-        # (watermark-flush machinery for append-mode windowed aggs)
-        # only re-pays per-store commit + planning here — skipping it
-        # measured median 4.01 → 2.46 s at sf1, identical 3420-row
-        # output, and the one-fed-batch guard below is unaffected.
+        # run_available_now reads both drain settings off this plan.
+        # State stores: the source's bytes at one store per
+        # openCostInBytes, capped at defaultParallelism — the join
+        # buffers ~1 M rows at sf1, but per-store snapshot/commit
+        # overhead, not row volume, dominates the one-batch drain
+        # (14.5 s at the batch default 32 vs 6.25 s at 8 on 32 cores;
+        # see state_partitions_scope).  No trailing no-data batch:
+        # inner-join matches emit in the data batch itself, so that
+        # batch would only GC join state the one-shot drain discards
+        # (skipping it measured median 4.01 → 2.46 s at sf1, identical
+        # 3420-row output); the one-fed-batch guard below is unaffected.
         progress = run_available_now(
             joined.select("purchase_id", "view_id", "user_id"),
             sink,
-            no_data_batches=False,
         )
         # Runtime guard (ADVICE r10): the plan's correctness depends on
         # availableNow draining all 8 staged files in ONE micro-batch —
@@ -908,12 +907,13 @@ def evt_late_data_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
             # r13: the torn check above is stale after the 4-batch
             # staging — a concurrent invocation may have promoted).
             _promote_cache_build(build, src)
-        # 8 state stores for a 4-micro-batch drain whose windowed
-        # state is tiny: at the batch default 32 the per-store
-        # snapshot/commit fixed cost is paid 128 times (see
-        # state_partitions_scope); metric SUMS are store-count
-        # invariant.  Since round 11 the 8-store scope is
-        # run_available_now's default (state_partitions=8).
+        # run_available_now sizes the state stores from the four staged
+        # files' bytes (one store per openCostInBytes, at most
+        # defaultParallelism) — each store's snapshot/commit fixed cost
+        # is paid per micro-batch (see state_partitions_scope); metric
+        # SUMS are store-count invariant.  The append-mode
+        # window keeps its trailing no-data batch, which flushes the
+        # windows the final watermark closes.
         progress = run_available_now(
             watermarked_tumbling(
                 read_parquet_stream(spark, src),

@@ -626,15 +626,18 @@ def llm_sim_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic norm-augmentation reduction (append
     sqrt(M²−‖x‖²) so MIPS becomes cosine ANN) is how this rung rides
     the binary/PQ coarse indexes at 100 TB — documented here, exact
-    scan demonstrated."""
+    scan demonstrated.  NULL scores drop after the cut, as in the
+    retrieval rungs' ``_ranked``: NULLs sort last, so the rows are the
+    same, and a Filter before the cut would be pushed below the
+    projection and evaluate the dot a second time per row."""
     q, _ = _query_vec(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     score = F.round(sim.dot_to_query(emb, "embedding", q), 4)
     return (
         emb.select("vec_id", score.alias("score"))
-        .filter(F.col("score").isNotNull() & ~F.isnan("score"))
         .orderBy(F.col("score").desc(), F.col("vec_id"))
         .limit(5)
+        .filter(F.col("score").isNotNull())
     )
 
 

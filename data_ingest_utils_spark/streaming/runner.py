@@ -58,8 +58,7 @@ def run_available_now(
     table_name: str,
     output_mode: str = "append",
     timeout_sec: int = 120,
-    state_partitions: int | None = 8,
-    no_data_batches: bool | None = None,
+    state_partitions: int | None = None,
 ) -> list[dict]:
     """Drain all available input through the streaming query into an
     in-memory table (``spark.table(table_name)``), then stop.  Returns
@@ -70,52 +69,44 @@ def run_available_now(
     multi-file inputs run as genuine successive micro-batches with
     watermark advancement and state persistence between them.
 
-    ``state_partitions`` (VERDICT r10 #5): every drain through here
-    latches a DELIBERATE state-store count instead of inheriting the
-    batch-tuned session default (32) — per-batch store snapshot/commit
-    overhead is fixed per store, so fixture-volume state pays 32×
-    that tax for nothing (see :func:`state_partitions_scope` for the
-    stream-stream measurement, 14.5 → 6.25 s at sf1; the multi-batch
-    test drains measure 1.36× end-to-end, BASELINE.md).  State is
-    hash-distributed, so outputs and metric SUMS are store-count
-    invariant (asserted in tests/test_streaming.py).  Pass ``None``
-    to inherit the session value, or an int to size for real state
-    volume (at 100 TB: ~2-4× total executor cores).
+    Both per-drain settings are read off the query itself, scoped to
+    this drain and restored after it:
+
+    - **State stores.**  A query latches ``spark.sql.shuffle.partitions``
+      at first start as its state-store count, and every store pays a
+      fixed snapshot/commit cost per micro-batch however few rows it
+      holds.  An explicit ``state_partitions`` wins (resume tests latch
+      their own count in their checkpoint); otherwise
+      :func:`_state_store_count` sizes it from the source's file bytes
+      the way Spark sizes a file scan — one store per
+      ``spark.sql.files.openCostInBytes``, at most
+      ``defaultParallelism``.  On ``local[4]``, a
+      ``dropDuplicatesWithinWatermark`` drain of two small files took
+      2.2–2.8 s at 8 stores and 1.2–1.3 s at 1.  State is
+      hash-distributed, so outputs and metric SUMS are store-count
+      invariant (asserted in tests/test_streaming.py).
+    - **Trailing no-data micro-batch.**  After the data is drained,
+      availableNow runs one empty batch to advance the watermark.  It
+      runs only when :func:`_waits_on_watermark` finds an operator
+      whose OUTPUT waits on the watermark (append-mode aggregations,
+      outer/semi/anti stream-stream joins, (flat)MapGroupsWithState /
+      transformWithState): their last windows, unmatched rows or
+      timers flush in that batch.  For deduplication, inner joins and
+      stateless maps every row emits in the data batches and the empty
+      batch only evicts state, which a one-shot drain discards anyway.
 
     Watermark semantics note (Spark >= 3.4): micro-batch N filters
     late events with the watermark as of batch N-1's START, while
     state eviction uses the watermark as of N's start — so a late row
     is only dropped when it arrives >= 2 batches after the event that
     advanced the watermark past it.
-
-    ``no_data_batches`` (round 17, guide §1/§5 — per-drain overhead):
-    ``False`` scopes ``spark.sql.streaming.noDataMicroBatches.enabled``
-    off for this drain, skipping the trailing empty micro-batch
-    availableNow otherwise runs after the data is drained.  That
-    trailing batch exists to let WATERMARK-GATED emission flush
-    (append-mode windowed aggs emit a window only once the watermark
-    passes it) — so it is ONLY safe to skip for sinks whose every
-    output row is emitted in the data batches themselves: stateless
-    maps, update/complete-mode aggs, and stream-stream INNER joins
-    (matches emit on arrival; the watermark only GCs state, moot once
-    the one-shot drain ends).  Measured on evt_stream_stream_join at
-    sf1 (interleaved same-session A/B, 5 reps): median 4.01 → 2.46 s,
-    identical 3420-row output.  ``None`` (default) inherits the
-    session value — append-mode windowed aggregations MUST keep it.
     """
-    scope = (
-        state_partitions_scope(df.sparkSession, state_partitions)
-        if state_partitions is not None
-        else contextlib.nullcontext()
-    )
-    nd_scope = (
-        _session_conf_scope(
-            df.sparkSession, _ND_KEY, "true" if no_data_batches else "false"
-        )
-        if no_data_batches is not None
-        else contextlib.nullcontext()
-    )
-    with scope, nd_scope:
+    if state_partitions is not None and state_partitions < 1:
+        raise ValueError(f"state_partitions must be >= 1, got {state_partitions}")
+    spark = df.sparkSession
+    stores = state_partitions or _state_store_count(df)
+    flush = "true" if _waits_on_watermark(df, output_mode) else "false"
+    with state_partitions_scope(spark, stores), _session_conf_scope(spark, _ND_KEY, flush):
         query = drain_available_now(
             df,
             lambda w: w.format("memory").queryName(table_name).outputMode(output_mode),
@@ -123,6 +114,76 @@ def run_available_now(
             timeout_sec=timeout_sec,
         )
     return [p.asDict() if hasattr(p, "asDict") else p for p in query.recentProgress]
+
+
+def _plan_nodes(df: DataFrame):
+    """Every node of ``df``'s analyzed logical plan (JVM handles)."""
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        node = stack.pop()
+        yield node
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+
+
+def _path_bytes(spark: SparkSession, path: str) -> int:
+    """Total file bytes under ``path`` (a file, directory or glob), on
+    whatever filesystem the path names; 0 when nothing matches yet."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsparkSession.sessionState().newHadoopConf())
+    return sum(
+        fs.getContentSummary(st.getPath()).getLength()
+        for st in fs.globStatus(jpath) or []
+    )
+
+
+def _state_store_count(df: DataFrame) -> int:
+    """State stores for a drain of ``df``:
+    ``clamp(ceil(source bytes / openCostInBytes), 1, defaultParallelism)``,
+    the file-scan sizing rule applied to the bytes the file sources
+    (each ``StreamingRelation`` leaf's ``path`` option) hold before the
+    query starts.  A source with no path (rate, Kafka, Python data
+    sources) has no size to read, so it gets ``defaultParallelism``."""
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    total = 0
+    for node in _plan_nodes(df):
+        if not node.isStreaming() or node.children().size():
+            continue
+        path = (
+            node.dataSource().options().get("path")
+            if node.nodeName() == "StreamingRelation"
+            else None
+        )
+        if path is None or not path.isDefined():
+            return cores
+        total += _path_bytes(spark, path.get())
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    return max(1, min(cores, -(-total // open_cost)))
+
+
+def _waits_on_watermark(df: DataFrame, output_mode: str) -> bool:
+    """True when some operator of ``df`` emits rows only once the
+    watermark passes them, so the drain must run its trailing no-data
+    batch: an append-mode aggregation, an outer/semi/anti join of two
+    streams, or a (flat)MapGroupsWithState / transformWithState
+    operator (timeouts and timers fire on the watermark)."""
+    for node in _plan_nodes(df):
+        if not node.isStreaming():
+            continue
+        name = node.nodeName()
+        if name.startswith(("FlatMapGroups", "TransformWithState")):
+            return True
+        if name == "Aggregate" and output_mode == "append":
+            return True
+        if (
+            name == "Join"
+            and node.joinType().sql() not in ("INNER", "CROSS")
+            and node.left().isStreaming()
+            and node.right().isStreaming()
+        ):
+            return True
+    return False
 
 
 _PROGRESS_CAP = "spark.sql.streaming.numRecentProgressUpdates"
@@ -259,17 +320,18 @@ def state_partitions_scope(spark: SparkSession, n: int):
     """Scoped ``spark.sql.shuffle.partitions`` for ONE stateful drain.
 
     A streaming query latches shuffle partitions at first start as its
-    state-store count, so the batch-tuned session default (32) also
-    sizes per-micro-batch state overhead: every store pays fixed
+    state-store count, so whatever the session holds for batch plans
+    also sizes per-micro-batch state overhead: every store pays fixed
     snapshot/commit cost per batch regardless of how few rows it
     holds.  Measured on evt_stream_stream_join at sf1 (1 M staged
-    events, one availableNow batch): median 14.5 s at 32 stores vs
-    6.25 s at 8 vs 7.6 s at 16, identical 3420-row output — state is
-    hash-distributed, so results are partition-count invariant and
-    hash certificates are unaffected.  At 100 TB the same dial sizes
-    UP (stores ≈ 2-4× total executor cores, rescalable only by state
-    rebalance): the point is that state parallelism is a deliberate,
-    state-volume-sized choice, not the inherited batch default.
+    events, one availableNow batch, 32 cores): median 14.5 s at 32
+    stores vs 6.25 s at 8 vs 7.6 s at 16, identical 3420-row output —
+    state is hash-distributed, so results are partition-count
+    invariant and hash certificates are unaffected.  The count is the
+    caller's: :func:`run_available_now` derives it from the source's
+    bytes and ``defaultParallelism`` (:func:`_state_store_count`), and
+    at 100 TB the same rule sizes UP, to the cores the state's volume
+    can keep busy (rescalable only by state rebalance).
 
     Leak-proof under both nesting and concurrent drains, and scoped
     PER SESSION (ADVICE r10 — two sessions' scopes never share a

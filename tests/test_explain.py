@@ -87,6 +87,17 @@ def test_sim_topk_no_join(spark, key):
     assert "Join" not in plan
 
 
+def test_mips_dot_evaluated_once(spark):
+    """llm_sim_mips scores each row with ONE dot product: its NULL
+    drop sits after the cut, so no Filter pushed below the projection
+    (or into the scan's DataFilters) evaluates the ``zip_with`` dot a
+    second time."""
+    df = QUERIES["llm_sim_mips"](spark, SF_T2)
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert executed.count("zip_with(") == 1, executed
+    assert "TakeOrderedAndProject" in executed
+
+
 @pytest.mark.parametrize(
     "key",
     ["llm_sim_binary_hamming", "llm_sim_rerank", "llm_sim_pq", "llm_sim_ivf_pq",

@@ -760,12 +760,15 @@ def test_state_partitions_scope_interleaved_exit_no_strand(spark):
 
 
 def test_drain_default_state_partitions_output_invariant(spark, tmp_path):
-    """run_available_now's deliberate 8-store default (round 11) must
-    be OUTPUT-invariant vs inheriting the session's batch default:
-    state is hash-distributed over stores, so the windowed aggregate
-    — including watermark drop behavior across micro-batches — is the
-    same at any store count.  Also pins that the default scope
-    restores the session conf after the drain."""
+    """run_available_now's derived store count must be OUTPUT-invariant
+    vs a fixed 8 and vs the session's batch count: state is
+    hash-distributed over stores, so the windowed aggregate —
+    including watermark drop behavior across micro-batches — is the
+    same at any store count.  Each drain must run at the count it was
+    given (the progress reports it), and the scope must restore the
+    session conf after the drain."""
+    from data_ingest_utils_spark.streaming.runner import _state_store_count
+
     batches = [
         [
             (1, "2024-01-01 10:05:00", 1, "click", 1.0),
@@ -778,19 +781,17 @@ def test_drain_default_state_partitions_output_invariant(spark, tmp_path):
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
     outs = []
-    for name, sp in (("dsp_a", 8), ("dsp_b", None)):
+    for name, sp in (("dsp_derived", None), ("dsp_8", 8), ("dsp_session", int(prior))):
         (tmp_path / name).mkdir()
         src = _write_batches(str(tmp_path / name), batches)
-        run_available_now(
-            watermarked_tumbling(
-                read_parquet_stream(spark, src),
-                watermark="10 minutes",
-                width="1 hour",
-            ),
-            name,
-            output_mode="append",
-            state_partitions=sp,
+        df = watermarked_tumbling(
+            read_parquet_stream(spark, src), watermark="10 minutes", width="1 hour"
         )
+        want = sp or _state_store_count(df)
+        progress = run_available_now(df, name, output_mode="append", state_partitions=sp)
+        assert {
+            so["numShufflePartitions"] for p in progress for so in p["stateOperators"]
+        } == {want}
         outs.append(
             sorted(
                 (str(r.bucket_start), r.event_type, r.n)
@@ -798,7 +799,121 @@ def test_drain_default_state_partitions_output_invariant(spark, tmp_path):
             )
         )
         assert spark.conf.get(key) == prior
-    assert outs[0] == outs[1] and outs[0]
+    assert outs[0] == outs[1] == outs[2] and outs[0]
+
+
+def test_state_store_count_rule(spark, tmp_path):
+    """The derived store count is the file-scan rule on the source's
+    bytes: a one-file source of a few KB gets 1 store; a source larger
+    than defaultParallelism × openCostInBytes is capped at
+    defaultParallelism; a pathless source gets defaultParallelism; an
+    explicit ``state_partitions`` wins over the derivation."""
+    from data_ingest_utils_spark.streaming.runner import _state_store_count
+
+    cores = spark.sparkContext.defaultParallelism
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    small = tmp_path / "small"
+    small.mkdir()
+    _write_batches(str(small), [[(1, "2024-01-01 10:00:00", 1, "click", 1.0)]])
+    assert os.path.getsize(small / "batch_000.parquet") < 16 * 1024
+    small_df = read_parquet_stream(spark, str(small))
+    assert _state_store_count(small_df) == 1
+
+    big = tmp_path / "big"
+    big.mkdir()
+    with open(big / "part-0.parquet", "wb") as f:  # sparse: sized, never read
+        f.truncate(cores * open_cost + 1)
+    assert _state_store_count(read_parquet_stream(spark, str(big))) == cores
+
+    rate = spark.readStream.format("rate").load()
+    assert _state_store_count(rate) == cores
+
+    deduped = small_df.withWatermark("ts", "10 minutes").dropDuplicates(["event_id"])
+    progress = run_available_now(deduped, "ssc_explicit", state_partitions=3)
+    assert {
+        so["numShufflePartitions"] for p in progress for so in p["stateOperators"]
+    } == {3}
+    with pytest.raises(ValueError):
+        run_available_now(deduped, "ssc_zero", state_partitions=0)
+
+
+def test_waits_on_watermark_classifies_operators(spark, tmp_path):
+    """The trailing no-data batch is kept exactly for operators whose
+    output waits on the watermark: append-mode aggregations,
+    outer/semi/anti stream-stream joins and applyInPandasWithState.
+    Deduplication, update-mode aggregations, inner joins and
+    stateless maps skip it."""
+    from pyspark.sql import functions as F
+
+    from data_ingest_utils_spark.streaming.runner import _waits_on_watermark
+
+    src = _write_batches(str(tmp_path), [[(1, "2024-01-01 10:00:00", 1, "click", 1.0)]])
+    s = read_parquet_stream(spark, src).withWatermark("ts", "10 minutes")
+    window = watermarked_tumbling(
+        read_parquet_stream(spark, src), watermark="10 minutes", width="1 hour"
+    )
+    right = s.select(F.col("user_id").alias("r_user"), F.col("ts").alias("r_ts"))
+    cond = (F.col("user_id") == F.col("r_user")) & F.col("r_ts").between(
+        F.col("ts") - F.expr("INTERVAL 5 MINUTES"), F.col("ts")
+    )
+    static = spark.createDataFrame([(1,)], "r_user long")
+    waits = {
+        "window_append": (window, "append", True),
+        "window_update": (window, "update", False),
+        "left_outer_join": (s.join(right, cond, "left_outer"), "append", True),
+        "left_anti_join": (s.join(right, cond, "left_anti"), "append", True),
+        "inner_join": (s.join(right, cond), "append", False),
+        "static_outer_join": (
+            s.join(static, F.col("user_id") == F.col("r_user"), "left_outer"),
+            "append",
+            False,
+        ),
+        "counter": (running_counter(read_parquet_stream(spark, src)), "update", True),
+        "dedup": (s.dropDuplicatesWithinWatermark(["event_id"]), "append", False),
+        "stateless": (s.filter(F.col("value") > 0), "append", False),
+    }
+    got = {k: _waits_on_watermark(df, mode) for k, (df, mode, _) in waits.items()}
+    assert got == {k: want for k, (_, _, want) in waits.items()}
+
+
+def test_trailing_no_data_batch_only_when_output_waits(spark, tmp_path):
+    """A dropDuplicatesWithinWatermark drain runs one micro-batch per
+    file and no trailing empty batch; an append-mode windowed drain
+    keeps that batch, and the window the final watermark closes is
+    emitted in it."""
+    rows = [
+        [
+            (1, "2024-01-01 10:05:00", 1, "click", 1.0),
+            (2, "2024-01-01 10:50:00", 1, "click", 1.0),
+        ],
+        # watermark 12:20 after this batch: [10:00, 11:00) closes, but
+        # only the next batch's eviction emits it
+        [(3, "2024-01-01 12:30:00", 2, "view", 1.0), (2, "2024-01-01 10:50:00", 1, "click", 1.0)],
+    ]
+    (tmp_path / "dedup").mkdir()
+    src = _write_batches(str(tmp_path / "dedup"), rows)
+    deduped = (
+        read_parquet_stream(spark, src)
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark(["event_id"])
+    )
+    progress = run_available_now(deduped, "trail_dedup")
+    assert [p["numInputRows"] for p in progress] == [2, 2]
+    assert sorted(r.event_id for r in spark.table("trail_dedup").collect()) == [1, 2, 3]
+
+    (tmp_path / "window").mkdir()
+    src = _write_batches(str(tmp_path / "window"), rows)
+    progress = run_available_now(
+        watermarked_tumbling(
+            read_parquet_stream(spark, src), watermark="10 minutes", width="1 hour"
+        ),
+        "trail_window",
+    )
+    assert [p["numInputRows"] for p in progress] == [2, 2, 0]
+    assert progress[-1]["sink"]["numOutputRows"] == 1
+    assert [
+        (str(r.bucket_start), r.event_type, r.n) for r in spark.table("trail_window").collect()
+    ] == [("2024-01-01 10:00:00", "click", 3)]
 
 
 def _batch_interval_join_twin(spark):
@@ -827,7 +942,7 @@ def _batch_interval_join_twin(spark):
 
 
 def test_stream_stream_join_matches_batch_twin(spark):
-    """The registry key's (8-store) streamed drain must equal the
+    """The registry key's streamed drain must equal the
     batch interval join as a MULTISET — a Counter compare, so a
     duplicate-emitting streaming bug can't hide behind set identity."""
     from collections import Counter
@@ -854,11 +969,6 @@ def test_stream_stream_join_store_count_invariant(spark):
 
     from data_ingest_utils_spark.plans.scans import SCRATCH
     from data_ingest_utils_spark.sources.readers import load_table
-    from data_ingest_utils_spark.streaming.runner import (
-        run_available_now,
-        state_partitions_scope,
-    )
-
     def drain(n_stores):
         run_id = uuid.uuid4().hex[:12]
         src = f"{SCRATCH}/ssjinv_src_{run_id}"
@@ -898,10 +1008,16 @@ def test_stream_stream_join_store_count_invariant(spark):
             & (F.col("v_ts") <= F.col("p_ts")),
         )
         try:
-            with state_partitions_scope(spark, n_stores):
-                run_available_now(
-                    j.select("purchase_id", "view_id", "user_id"), sink
-                )
+            progress = run_available_now(
+                j.select("purchase_id", "view_id", "user_id"),
+                sink,
+                state_partitions=n_stores,
+            )
+            assert {
+                so["numShufflePartitions"]
+                for p in progress
+                for so in p["stateOperators"]
+            } == {n_stores}
             return Counter(tuple(r) for r in spark.table(sink).collect())
         finally:
             spark.catalog.dropTempView(sink)
@@ -1005,16 +1121,19 @@ def test_promote_cache_build_three_states(tmp_path):
     assert open(f"{src}/part-000.parquet").read() == "solo.."
 
 
-def test_no_data_batches_off_inner_join_output_invariant(spark, tmp_path):
-    """``run_available_now(no_data_batches=False)`` (round 17) skips
-    the trailing empty micro-batch for drains whose rows all emit in
-    the data batches.  For a MULTI-batch inner stream-stream join the
-    output must be identical either way (inner matches emit on
-    arrival; the trailing batch only advances the watermark for
-    state GC), and the scoped conf must restore after the drain."""
+def test_no_data_batches_off_inner_join_output_invariant(spark, tmp_path, monkeypatch):
+    """An inner stream-stream join's rows all emit in the data batches,
+    so run_available_now skips its trailing no-data micro-batch.  For a
+    MULTI-batch inner join the output must be identical with that
+    batch forced on and forced off (the derivation helper patched
+    each way: the trailing batch only advances the watermark for
+    state GC), the derivation must pick "off" for this plan, and the
+    scoped conf must restore after each drain."""
     from collections import Counter
 
     from pyspark.sql import functions as F
+
+    from data_ingest_utils_spark.streaming import runner
 
     rows0 = [
         (1, "2024-01-01 10:00:00", 1, "click", 1.0),
@@ -1028,8 +1147,9 @@ def test_no_data_batches_off_inner_join_output_invariant(spark, tmp_path):
     ]
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
     prior = spark.conf.get(key, None)
+    real = runner._waits_on_watermark
     outs = []
-    for name, nd in (("ndoff_a", None), ("ndoff_b", False)):
+    for name, flush in (("ndoff_a", True), ("ndoff_b", False)):
         (tmp_path / name).mkdir()
         src = _write_batches(str(tmp_path / name), [rows0, rows1])
         s = read_parquet_stream(spark, src)
@@ -1047,8 +1167,11 @@ def test_no_data_batches_off_inner_join_output_invariant(spark, tmp_path):
             & (F.col("c_ts") >= F.col("ts") - F.expr("INTERVAL 30 MINUTES"))
             & (F.col("c_ts") <= F.col("ts")),
         ).select(F.col("event_id").alias("purchase_id"), "user_id", "c_ts")
-        run_available_now(joined, name, no_data_batches=nd)
+        assert real(joined, "append") is False
+        monkeypatch.setattr(runner, "_waits_on_watermark", lambda df, mode, f=flush: f)
+        progress = run_available_now(joined, name)
         assert spark.conf.get(key, None) == prior  # scope restored
+        assert (progress[-1]["numInputRows"] == 0) is flush
         outs.append(
             Counter(
                 (r.purchase_id, r.user_id, str(r.c_ts))

@@ -1,31 +1,23 @@
 #!/usr/bin/env python
-"""State-store provider A/B on the stream-stream interval join
-(round 17 optimization, OPTIMIZATION_r17.md "Not yet optimized" #1 —
-MEASUREMENT ONLY; the provider lands as a default only if the drain
-wall-time drops materially, else this records the result like the
-MinHash-kernel and SHUFFLE_HASH negatives).
+"""State-store count A/B on the stateful drain keys: a fixed 8 stores
+against the count ``run_available_now`` derives from the source's
+bytes (``_state_store_count``).
 
-After the round-17 no-data-batch skip, `evt_stream_stream_join`'s
-remaining cost is ONE fed micro-batch: planning + the join's 4×8
-state-store commits (two sides × two store types per partition).  The
-candidate lever is `spark.sql.streaming.stateStore.providerClass`:
-
-- default `HDFSBackedStateStoreProvider` — in-heap map per store,
-  snapshot/delta files to the checkpoint dir;
-- `RocksDBStateStoreProvider` — off-heap RocksDB per store, the
-  provider large-state deployments run (bounded executor heap at
-  100 TB state; changelog checkpointing).
-
-Both providers persist the SAME logical state; the memory-sink rows
-must be identical (asserted).  The conf is read at query START, so the
-A/B scopes it around each whole-key invocation via the runner's
-refcounted `_session_conf_scope`; arms alternate rep-by-rep in one
-session (interleaved same-session protocol, BASELINE.md noise doc).
+The arms differ only in the store count: ``fixed_8`` patches the
+derivation to return 8, the count every drain latched before it was
+derived.  Both keys pick the same trailing no-data batch setting in
+both arms (reported per key), so the A/B isolates the store count.
+Rows must be identical across arms (asserted; state is
+hash-distributed).  Arms alternate rep by rep in one session
+(interleaved same-session protocol, BASELINE.md noise doc), each
+timed over a whole-key invocation into a noop sink after one
+untimed warm-up per arm that also builds the staged-source caches.
 
 Usage::
 
     python tools/statestore_ab.py [--sf .scale/sf1.0] [--reps 5]
-        [--out STATESTORE_AB_r17.json]
+        [--keys evt_stream_stream_join,evt_late_data_metrics]
+        [--out STATESTORE_AB_sf1.json]
 """
 
 from __future__ import annotations
@@ -38,76 +30,76 @@ import sys
 import time
 
 
-PROVIDER_KEY = "spark.sql.streaming.stateStore.providerClass"
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=".scale/sf1.0")
     ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--out", default="STATESTORE_AB_r17.json")
+    ap.add_argument("--keys", default="evt_stream_stream_join,evt_late_data_metrics")
+    ap.add_argument("--out", default="STATESTORE_AB_sf1.json")
     args = ap.parse_args()
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
     from data_ingest_utils_spark.plans import QUERIES
     from data_ingest_utils_spark.session import get_session
-    from data_ingest_utils_spark.streaming.runner import _session_conf_scope
+    from data_ingest_utils_spark.streaming import runner
 
     spark = get_session("dius-statestore-ab")
     sf_dir = args.sf if os.path.isabs(args.sf) else os.path.join(repo, args.sf)
-    key = "evt_stream_stream_join"
+    keys = [k for k in args.keys.split(",") if k]
 
-    default_provider = spark.conf.get(PROVIDER_KEY)
-    arms = {"hdfs_backed": default_provider, "rocksdb": ROCKSDB}
+    derive = runner._state_store_count
+    waits = runner._waits_on_watermark
+    picked: dict[str, list] = {}
 
-    # Un-timed warmup per arm: JVM/codegen + staged-source cache build
-    # (first invocation may pay the fixture staging; neither arm's
-    # timed reps should).
-    rows_by_arm: dict[str, list] = {}
-    for arm, provider in arms.items():
-        with _session_conf_scope(spark, PROVIDER_KEY, provider):
-            df = QUERIES[key](spark, sf_dir)
-        rows_by_arm[arm] = sorted(tuple(r) for r in df.collect())
+    def recording_derive(df):
+        n = derive(df)
+        picked[current].append({"stores": n, "trailing_batch": waits(df, "append")})
+        return n
 
-    times: dict[str, list[float]] = {a: [] for a in arms}
-    for rep in range(args.reps):
-        for arm, provider in arms.items():  # interleaved, alternating
-            t0 = time.perf_counter()
-            with _session_conf_scope(spark, PROVIDER_KEY, provider):
-                QUERIES[key](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-            dt = time.perf_counter() - t0
-            times[arm].append(dt)
-            print(f"ab: rep {rep + 1} {arm} = {dt:.3f}s", file=sys.stderr)
+    arms = {"fixed_8": lambda df: 8, "derived": recording_derive}
 
-    identical = rows_by_arm["hdfs_backed"] == rows_by_arm["rocksdb"]
-    out = {
-        "key": key,
-        "sf_dir": sf_dir,
-        "reps": args.reps,
-        "rows_identical": identical,
-        "n_rows": len(rows_by_arm["hdfs_backed"]),
-        "arms": {
-            arm: {
-                "provider": arms[arm],
-                "reps_s": [round(t, 4) for t in times[arm]],
-                "median_s": round(statistics.median(times[arm]), 4),
-                "best_s": round(min(times[arm]), 4),
-            }
-            for arm in arms
-        },
-        "conf_restored": spark.conf.get(PROVIDER_KEY) == default_provider,
-    }
+    def run(arm: str, key: str):
+        runner._state_store_count = arms[arm]
+        try:
+            return QUERIES[key](spark, sf_dir)
+        finally:
+            runner._state_store_count = derive
+
+    out = {"sf_dir": sf_dir, "reps": args.reps, "spark_master": spark.sparkContext.master,
+           "default_parallelism": spark.sparkContext.defaultParallelism, "keys": {}}
+    ok = True
+    for key in keys:
+        current = key
+        picked[key] = []
+        rows = {arm: sorted(tuple(r) for r in run(arm, key).collect()) for arm in arms}
+        times: dict[str, list[float]] = {a: [] for a in arms}
+        for rep in range(args.reps):
+            for arm in arms:  # interleaved, alternating
+                t0 = time.perf_counter()
+                run(arm, key).write.format("noop").mode("overwrite").save()
+                times[arm].append(time.perf_counter() - t0)
+                print(f"ab: {key} rep {rep + 1} {arm} = {times[arm][-1]:.3f}s", file=sys.stderr)
+        identical = rows["fixed_8"] == rows["derived"]
+        ok &= identical
+        out["keys"][key] = {
+            "rows_identical": identical,
+            "n_rows": len(rows["derived"]),
+            "derived_pick": picked[key][0],
+            "arms": {
+                arm: {
+                    "reps_s": [round(t, 4) for t in times[arm]],
+                    "median_s": round(statistics.median(times[arm]), 4),
+                    "best_s": round(min(times[arm]), 4),
+                }
+                for arm in arms
+            },
+        }
     with open(os.path.join(repo, args.out), "w") as f:
         json.dump(out, f, indent=2)
         f.write("\n")
     print(json.dumps(out))
-    return 0 if identical else 1
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":
