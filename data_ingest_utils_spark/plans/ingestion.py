@@ -401,7 +401,7 @@ def scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake upgrade, no rewrite of historical files."""
     import shutil
 
-    from data_ingest_utils_spark.plans.scans import SCRATCH
+    from data_ingest_utils_spark.plans.cache import SCRATCH
 
     path = f"{SCRATCH}/evolving_nation"
     # rmtree the PARENT first (round-8 review): per-subdirectory
@@ -442,7 +442,7 @@ def ing_compact_small_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     tightens parquet row-group min/max stats so later key-range
     filters skip whole row groups.  100 TB: run per partition, target
     file size = spark.sql.files.maxPartitionBytes."""
-    from data_ingest_utils_spark.plans.scans import SCRATCH
+    from data_ingest_utils_spark.plans.cache import SCRATCH
 
     fragmented = f"{SCRATCH}/fragmented_lineitem"
     compacted = f"{SCRATCH}/compacted_lineitem"
@@ -699,7 +699,7 @@ def ing_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns by byte position and trim — the classic ingest-utility
     shape for files with no delimiter at all.  Round-trips through a
     real text file; all slicing is codegen'd substring, no UDF."""
-    from data_ingest_utils_spark.plans.scans import SCRATCH
+    from data_ingest_utils_spark.plans.cache import SCRATCH
 
     path = f"{SCRATCH}/fixed_width_customer"
     c = load_table(spark, sf_dir, "customer")

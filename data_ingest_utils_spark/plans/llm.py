@@ -11,6 +11,9 @@ xxhash-banded dedup) are rows-only with invariants in unit tests.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -23,6 +26,7 @@ from data_ingest_utils_spark.operators.relational import (
     ensure_parallelism,
     topk_per_group,
 )
+from data_ingest_utils_spark.plans.cache import SCRATCH, derived_cache
 from data_ingest_utils_spark.plans.registry import plan
 from data_ingest_utils_spark.sources.readers import load_table
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
@@ -63,182 +67,109 @@ def _query_batch(spark: SparkSession, sf_dir: str, qids) -> list:
     return sorted((int(r.vec_id), list(r.embedding)) for r in rows)
 
 
-def _fixture_cache_path(sf_dir: str, table: str, name: str) -> str:
-    """Fingerprint-addressed cache location for a derived fixture —
-    the `_ensure_bucketed_fixture` staleness protocol (plans/scans.py)
-    shared by the PQ codebook and MinHash band-index caches (VERDICT
-    r11 #2): the path embeds :func:`table_fingerprint` of the SOURCE
-    table (full path + per-file size/mtime), so a regenerated source
-    — even at equal cardinality — addresses a different cache entry
-    and forces a rebuild (ADVICE r11's staleness class)."""
-    from data_ingest_utils_spark.plans.scans import SCRATCH, table_fingerprint
-
-    return f"{SCRATCH}/{name}_{table_fingerprint(sf_dir, table)}"
+#: Geometry of the cached PQ codebooks and packed PQ index:
+#: sub-vectors, centroids per sub-codebook, Lloyd iterations.
+PQ_M, PQ_K, PQ_ITERS = 32, 16, 2
+#: k-means cells (and their Lloyd iterations) of the packed PQ index.
+IVF_CELLS, IVF_ITERS = 8, 2
 
 
-def _pq_codebooks_cached(
-    spark: SparkSession, sf_dir: str, m: int = 32, codebook_k: int = 16,
-    iters: int = 2,
-) -> list:
+def _json_model_cached(sf_dir: str, name: str, fit) -> list:
+    """``fit()``'s model of the sf_dir's embeddings, persisted as one
+    ``model.json`` in a derived cache (plans/cache.py)."""
+
+    def build(out: str) -> None:
+        model = fit()
+        os.makedirs(out)
+        with open(f"{out}/model.json", "w") as f:
+            json.dump(model, f)
+
+    with open(f"{derived_cache(sf_dir, 'embeddings', name, build)}/model.json") as f:
+        return json.load(f)
+
+
+def _pq_codebooks_cached(spark: SparkSession, sf_dir: str) -> list:
     """Fit-once PQ codebooks for the sf_dir's embeddings (VERDICT r11
     #2): the Lloyd fit is FIXTURE state — offline, once per corpus
     epoch in the 100 TB story — while the graded retrieval path is
-    encode + ADC + rerank, so the fitted m×k×(dim/m) tensor persists
-    as JSON at a fingerprint-addressed path and every later
-    invocation skips the fit's ~6 driver actions entirely.  The fit
-    is deterministic (seeded, order-insensitive updates), so a cache
-    hit serves bit-identical codebooks to a refit."""
-    import json
-    import os
+    encode + ADC + rerank, so the fitted m×k×(dim/m) tensor is cached
+    and every later invocation skips the fit's ~6 driver actions.  The
+    fit is deterministic (seeded, order-insensitive updates), so a
+    cache hit serves bit-identical codebooks to a refit."""
 
-    path = _fixture_cache_path(sf_dir, "embeddings", "pq_books") + (
-        f"_m{m}k{codebook_k}i{iters}.json"
-    )
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                books = json.load(f)
-            if len(books) == m and all(len(b) == codebook_k for b in books):
-                return books
-        except (OSError, json.JSONDecodeError):
-            pass  # torn cache → refit
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    books = sim.pq_fit_codebooks(emb, m=m, codebook_k=codebook_k, iters=iters)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(books, f)
-    os.replace(tmp, path)  # atomic — a concurrent reader never sees a torn file
-    return books
+    def fit() -> list:
+        emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
+        return sim.pq_fit_codebooks(emb, m=PQ_M, codebook_k=PQ_K, iters=PQ_ITERS)
+
+    return _json_model_cached(sf_dir, f"pq_books_m{PQ_M}k{PQ_K}i{PQ_ITERS}", fit)
 
 
 def _kmeans_centroids_cached(
     spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 2
 ) -> list:
     """Fit-once k-means centroids over the sf_dir's embeddings
-    (vec_id ≠ 0) — the coarse inverted file of the IVF keys,
-    persisted as JSON like the PQ codebooks (same fingerprint
-    staleness protocol): the Lloyd fit is epoch fixture state, the
+    (vec_id ≠ 0) — the coarse inverted file of the IVF keys, cached
+    like the PQ codebooks: the Lloyd fit is epoch fixture state, the
     graded read path is one broadcast-model assignment pass.  The fit
     is deterministic (seeded, 12-dp order-insensitive updates), so a
     hit is bit-identical to a refit."""
-    import json
-    import os
 
-    path = _fixture_cache_path(sf_dir, "embeddings", "ivf_cents") + (
-        f"_k{k}i{iters}.json"
-    )
-    if os.path.exists(path):
-        try:
-            with open(path) as f:
-                cents = json.load(f)
-            if len(cents) == k:
-                return cents
-        except (OSError, json.JSONDecodeError):
-            pass  # torn cache → refit
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
-    _, cents, _ = sim.kmeans_fit_predict(emb, k=k, iters=iters)
-    os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.tmp{os.getpid()}"
-    with open(tmp, "w") as f:
-        json.dump(cents, f)
-    os.replace(tmp, path)  # atomic — a concurrent reader never sees a torn file
-    return cents
+    def fit() -> list:
+        emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
+        return sim.kmeans_fit_predict(emb, k=k, iters=iters)[1]
+
+    return _json_model_cached(sf_dir, f"ivf_cents_k{k}i{iters}", fit)
 
 
-def _pq_codes_cached(
-    spark: SparkSession, sf_dir: str, m: int = 32, codebook_k: int = 16,
-    iters: int = 2, n_cells: int = 8, cells_iters: int = 2,
-):
+def _pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode-once PACKED PQ index for the sf_dir's embeddings
     (round 13, VERDICT r12 #4): ``(vec_id, cell, _codes)`` — the codes
-    from :func:`sim.pq_encode_packed` under the fingerprint-cached
-    codebooks, joined to the k-means cell under the fingerprint-cached
-    centroids — persisted as parquet at a geometry-keyed
-    fingerprint-addressed path.  This is the literal serving layout of
-    a 100 TB ANN index (16 B codes + cell id per vector, partitioned
-    by cell); with it the graded PQ keys pay LUT-fold + rerank only —
-    the true query-time cost — instead of re-encoding the corpus per
-    invocation.  Covers ALL vec_ids (zero-norm rows dropped by the
-    encode); callers filter their own query ids out.  Both underlying
-    models are deterministic, so a rebuild is bit-identical."""
-    import os
+    from :func:`sim.pq_encode_packed` under the cached codebooks,
+    joined to the k-means cell under the cached centroids.  This is
+    the literal serving layout of a 100 TB ANN index (16 B codes +
+    cell id per vector, partitioned by cell); with it the graded PQ
+    keys pay LUT-fold + rerank only — the true query-time cost —
+    instead of re-encoding the corpus per invocation.  Covers ALL
+    vec_ids (zero-norm rows dropped by the encode); callers filter
+    their own query ids out.  Both underlying models are
+    deterministic, so a rebuild is bit-identical."""
 
-    path = _fixture_cache_path(sf_dir, "embeddings", "pq_codes") + (
-        f"_m{m}k{codebook_k}i{iters}_c{n_cells}ci{cells_iters}"
-    )
-    from data_ingest_utils_spark.plans.scans import (
-        _cache_manifest_ok,
-        _write_cache_manifest,
-    )
+    def build(out: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        packed = sim.pq_encode_packed(emb, _pq_codebooks_cached(spark, sf_dir))
+        cents = _kmeans_centroids_cached(spark, sf_dir, k=IVF_CELLS, iters=IVF_ITERS)
+        cells = sim.kmeans_assign(emb, cents).select("vec_id", "cell")
+        packed.join(cells, "vec_id").select("vec_id", "cell", "_codes").write.parquet(out)
 
-    if os.path.exists(f"{path}/_SUCCESS") and _cache_manifest_ok(path):
-        try:
-            cached = spark.read.parquet(path)
-            if set(cached.columns) == {"vec_id", "cell", "_codes"}:
-                return cached
-        except Exception:
-            pass  # torn cache → rebuild through the overwrite path
-    emb = load_table(spark, sf_dir, "embeddings")
-    books = _pq_codebooks_cached(spark, sf_dir, m=m, codebook_k=codebook_k,
-                                 iters=iters)
-    cents = _kmeans_centroids_cached(spark, sf_dir, k=n_cells,
-                                     iters=cells_iters)
-    packed = sim.pq_encode_packed(emb, books)
-    cells = sim.kmeans_assign(emb, cents).select("vec_id", "cell")
-    packed.join(cells, "vec_id").select("vec_id", "cell", "_codes").write.mode(
-        "overwrite"
-    ).parquet(path)
-    # write-time inventory manifest — the torn-derived-cache guard the
-    # bucketed fixture uses (scans.py); a partial scratch wipe with an
-    # intact _SUCCESS must rebuild, never serve a subset of the corpus
-    _write_cache_manifest(path)
-    return spark.read.parquet(path)
+    name = f"pq_codes_m{PQ_M}k{PQ_K}i{PQ_ITERS}_c{IVF_CELLS}ci{IVF_ITERS}"
+    return spark.read.parquet(derived_cache(sf_dir, "embeddings", name, build))
 
 
 def _minhash_corpus_index_cached(spark: SparkSession, sf_dir: str):
-    """Materialize-or-reuse the corpus half of the incremental
-    near-dup probe (VERDICT r11 #2): the shingle-hash array frame and
-    banded signature rows for the doc_id%7≠0 corpus slice, persisted
-    as parquet at a fingerprint-addressed path — the "band index
-    materialized once per epoch" the operator docstring declares.  A
-    cache hit replaces the corpus's tokenize/signature work with two
-    parquet scans (~1.6 KB/doc arrays + 3-long band rows); at 100 TB
-    the band side would additionally be bucketed on band_hash so the
-    nightly probe join is exchange-free on the corpus side."""
-    import os
-
-    from data_ingest_utils_spark.plans.scans import (
-        _cache_manifest_ok,
-        _write_cache_manifest,
-    )
-
-    # geometry-keyed like the sibling PQ/k-means caches (ADVICE r12),
-    # and derived from the ACTUAL call parameters so a default change
-    # can never alias the old entry (code-review r13: a hardcoded
-    # literal suffix would re-create the very staleness bug it fixes)
+    """The corpus half of the incremental near-dup probe (VERDICT r11
+    #2): the shingle-hash array frame (``hv``) and banded signature
+    rows (``band``) for the doc_id%7≠0 corpus slice, cached as one
+    directory — the "band index materialized once per epoch" the
+    operator docstring declares.  A cache hit replaces the corpus's
+    tokenize/signature work with two parquet scans (~1.6 KB/doc
+    arrays + 3-long band rows); at 100 TB the band side would
+    additionally be bucketed on band_hash so the nightly probe join is
+    exchange-free on the corpus side."""
     num_perm, bands, shingle_n = 16, 16, 3
-    base = _fixture_cache_path(sf_dir, "documents", "mh_idx") + (
-        f"_p{num_perm}b{bands}n{shingle_n}"
-    )
-    hv_path, band_path = f"{base}/hv", f"{base}/band"
-    if all(
-        os.path.exists(f"{p}/_SUCCESS") and _cache_manifest_ok(p)
-        for p in (hv_path, band_path)
-    ):
-        try:
-            return spark.read.parquet(hv_path), spark.read.parquet(band_path)
-        except Exception:
-            pass  # torn cache → rebuild through the overwrite path
-    corpus = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 != 0)
-    hv_c, banded_c = dd.minhash_corpus_index(
-        corpus, num_perm=num_perm, bands=bands, shingle_n=shingle_n
-    )
-    hv_c.write.mode("overwrite").parquet(hv_path)
-    banded_c.write.mode("overwrite").parquet(band_path)
-    _write_cache_manifest(hv_path)
-    _write_cache_manifest(band_path)
-    return spark.read.parquet(hv_path), spark.read.parquet(band_path)
+
+    def build(out: str) -> None:
+        corpus = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 7 != 0)
+        hv_c, banded_c = dd.minhash_corpus_index(
+            corpus, num_perm=num_perm, bands=bands, shingle_n=shingle_n
+        )
+        hv_c.write.parquet(f"{out}/hv")
+        banded_c.write.parquet(f"{out}/band")
+
+    # geometry in the name comes from the call parameters, so changing
+    # them can never alias the old entry
+    name = f"mh_idx_p{num_perm}b{bands}n{shingle_n}"
+    base = derived_cache(sf_dir, "documents", name, build)
+    return spark.read.parquet(f"{base}/hv"), spark.read.parquet(f"{base}/band")
 
 
 # ------------------------------------------------------------- dedup
@@ -1030,8 +961,6 @@ def _stage_media_fixtures(
     import struct
     import wave
 
-    from data_ingest_utils_spark.plans.scans import SCRATCH
-
     doc_ids = sorted(
         r.doc_id
         for r in load_table(spark, sf_dir, "documents")
@@ -1041,8 +970,6 @@ def _stage_media_fixtures(
     )
     path = f"{SCRATCH}/media_{kind}"
     shutil.rmtree(path, ignore_errors=True)
-    import os
-
     os.makedirs(path)
     for d in doc_ids:
         if kind == "image":
@@ -1298,8 +1225,6 @@ def llm_lang_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the counts are computed eagerly."""
     import shutil
     import uuid
-
-    from data_ingest_utils_spark.plans.scans import SCRATCH
 
     path = f"{SCRATCH}/docs_by_lang_{uuid.uuid4().hex[:12]}"
     docs = load_table(spark, sf_dir, "documents")

@@ -2,21 +2,18 @@
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingest_utils_spark.plans.cache import SCRATCH, derived_cache
 from data_ingest_utils_spark.plans.money import money_sum, money_sum_sql
 from data_ingest_utils_spark.plans.registry import plan
 from data_ingest_utils_spark.sources.readers import load_table, read_csv, read_jsonl
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
-
-#: Scratch space for sink/read-back round trips (NOT the read-only
-#: testdata tree).
-SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/data_ingest_utils_spark")
 
 
 @plan(
@@ -144,15 +141,11 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-tune per sf dir; sums accumulate in exact integer micro-units
     (plans/money.py).
 
-    The landed layout is a FINGERPRINT-CACHED derived fixture since
-    round 15 (VERDICT r14 #4: the per-invocation rewrite made this
-    key the sweep ceiling, 8.5-13.2 s — timing cache rebuild, not the
-    graded read path): cache hit = metadata-only validity check, so
-    the graded window times the box + full-table aggregates over the
-    z-clustered files; the rewrite runs once per source fingerprint
-    as the cache-build step (build into a private dir, manifest, then
-    flock-serialized rename-into-place like every other derived
-    cache)."""
+    The landed layout is a derived cache (plans/cache.py) since round
+    15 (VERDICT r14 #4: the per-invocation rewrite made this key the
+    sweep ceiling, 8.5-13.2 s — timing cache rebuild, not the graded
+    read path), so the graded window times the box + full-table
+    aggregates over the z-clustered files."""
     back = _ensure_zorder_fixture(spark, sf_dir)
     bounds = F.broadcast(
         back.agg(
@@ -177,28 +170,24 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return box.crossJoin(F.broadcast(whole))
 
 
-def _ensure_zorder_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Materialize-or-reuse the 16-file z-ordered lineitem layout
-    (fingerprint-cached derived fixture, VERDICT r14 #4) — shared by
-    sink_zorder_cluster (round-trip certificate) and
-    scan_zorder_pruned (read-path grade), and reused by
-    tools/zorder_prune_ab.py.  Build-into-private-dir + manifest +
-    flock-serialized rename-into-place, the standard derived-cache
-    protocol."""
-    import uuid
+#: Cache name of the 16-file z-ordered lineitem layout.
+ZORDER_CACHE = "zorder_lineitem_f16"
 
+
+def _ensure_zorder_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The 16-file z-ordered lineitem layout, a derived cache
+    (plans/cache.py) shared by sink_zorder_cluster (round-trip
+    certificate) and scan_zorder_pruned (read-path grade), and reused
+    by tools/zorder_prune_ab.py."""
     from data_ingest_utils_spark.sources.writers import zorder_write
 
-    path = f"{SCRATCH}/zorder_lineitem_{table_fingerprint(sf_dir, 'lineitem')[:12]}"
-    if not (os.path.exists(f"{path}/_SUCCESS") and _cache_manifest_ok(path)):
+    def build(out: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_extendedprice"
         )
-        build = f"{path}.build_{uuid.uuid4().hex[:12]}"
-        zorder_write(li, build, "l_orderkey", "l_partkey", n_files=16)
-        _write_cache_manifest(build)
-        _promote_cache_build(build, path)
-    return spark.read.parquet(path)
+        zorder_write(li, out, "l_orderkey", "l_partkey", n_files=16)
+
+    return spark.read.parquet(derived_cache(sf_dir, "lineitem", ZORDER_CACHE, build))
 
 
 @plan(
@@ -219,11 +208,10 @@ def scan_zorder_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reader skip 11/16 files (32% of rows decoded) where the
     orderkey-sorted twin skips 0/16 (100% decoded) — a 3.1× scan-IO
     reduction that scales linearly to 100 TB.  The scan reads the
-    fingerprint-cached layout sink_zorder_cluster lands (cache hit =
-    metadata-only check), the predicate bound derives from the
-    layout's own maximum (scale-free: one 1-row scalar action), and
-    the LITERAL bound pushes LessThanOrEqual into the parquet scan
-    (PushedFilters asserted in tests/test_explain.py) — real
+    cached layout sink_zorder_cluster lands, the predicate bound
+    derives from the layout's own maximum (scale-free: one 1-row
+    scalar action), and the LITERAL bound pushes LessThanOrEqual into
+    the parquet scan (PushedFilters asserted in tests/test_explain.py) — real
     row-group skipping in the graded path, not just footer theory.
     The oracle runs the identical aggregate on the SOURCE table, so
     the hash additionally re-certifies that pruned reads over the
@@ -296,211 +284,54 @@ def sink_bucketed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def table_fingerprint(sf_dir: str, table: str) -> str:
-    """Content fingerprint of one fixture table's file inventory —
-    sha256 over the absolute root plus every file's (relpath, size,
-    mtime_ns), handling both single-file tables (testdata dirs) and
-    part-file directories (tools/make_scale_data.py trees).
-
-    This is the staleness key for every derived-fixture cache
-    (bucketed tables below, the PQ codebook / MinHash band-index
-    caches in plans/llm.py): a REGENERATED source at the same path
-    changes mtimes, so equal-cardinality rewrites — which a row-count
-    check cannot see (ADVICE r11) — change the digest and force a
-    rebuild.  Metadata-only: no file contents are read and no Spark
-    job runs."""
-    root = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    h = hashlib.sha256(root.encode())
-    if os.path.isdir(root):
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames.sort()
-            for fn in sorted(filenames):
-                st = os.stat(os.path.join(dirpath, fn))
-                rel = os.path.relpath(os.path.join(dirpath, fn), root)
-                h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}".encode())
-    elif os.path.exists(root):
-        st = os.stat(root)
-        h.update(f"{st.st_size}|{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
+#: Bucket count of the bucketed fixtures (one file per bucket).
+N_BUCKETS = 8
 
 
 def _ensure_bucketed_fixture(
-    spark: SparkSession,
-    sf_dir: str,
-    name: str,
-    table: str,
-    key: str,
-    n_buckets: int = 8,
+    spark: SparkSession, sf_dir: str, name: str, table: str, key: str
 ) -> DataFrame:
-    """Materialize-or-reuse a bucketed fixture table (VERDICT r10 #3).
+    """Catalog table ``name``: ``table`` bucketed and sorted on ``key``
+    into :data:`N_BUCKETS` buckets, a derived cache (plans/cache.py).
 
-    The bucketed WRITE is one-time fixture cost — the graded thing is
-    the Exchange-free JOIN over the layout — yet rebuilding both
-    tables on every invocation made join_bucketed_pair the sweep's
-    max_key (18.6 s, all but ~1 s of it the repeated bucketBy writes).
-    Staleness key = :func:`table_fingerprint` of the SOURCE (ADVICE
-    r11): the digest covers the full sf_dir path plus every source
-    file's size/mtime, so two trees ending in the same leaf name
-    never serve each other's rows AND a regenerated source with equal
-    cardinality forces a rebuild — the case the previous row-count
-    check could not detect.  The hit path is metadata-only (no
-    count() action, VERDICT r11 nit): _SUCCESS plus the
-    fingerprint-addressed path plus the write-time _MANIFEST of the
-    cache's OWN file inventory (ADVICE r12 — the source fingerprint
-    alone cannot see a torn derived cache) is the validity proof,
-    and anything torn rebuilds through the overwrite path.  Reuse re-registers the
-    catalog entry over the existing files — bucket ids live in the
-    part-file names, so a re-registered table reads with the same
-    bucketed layout and sort metadata the original write produced
-    (plan assertions in tests/test_explain.py hold on both paths).
+    The bucketed WRITE is one-time fixture cost; the graded thing is
+    the Exchange-free JOIN over the layout.  Rebuilding both tables on
+    every invocation made join_bucketed_pair the sweep's max_key
+    (18.6 s, all but ~1 s of it the repeated bucketBy writes).  The
+    build writes through a build-private external table; every call
+    then registers the cached files with ``CREATE TABLE … LOCATION``.
+    Bucket ids live in the part-file names, so the registered table
+    reads with the bucketed layout and sort metadata the write
+    produced (plan assertions in tests/test_explain.py).
     """
-    sf_tag = table_fingerprint(sf_dir, table)[:12]
-    path = f"{SCRATCH}/{name}_{sf_tag}"
     src = load_table(spark, sf_dir, table)
+
+    def build(out: str) -> None:
+        tmp_name = f"{name}_build_{uuid.uuid4().hex[:12]}"
+        (
+            # repartition onto the bucket key FIRST: Spark's repartition
+            # hash == its bucket hash, so each write task owns exactly
+            # one bucket → ONE file per bucket.  That is the condition
+            # under which sortBy survives the read (multi-file buckets
+            # force a re-sort; SPARK-24528) — and what makes the join
+            # in join_bucketed_pair sort-free, not just shuffle-free.
+            src.repartition(N_BUCKETS, F.col(key))
+            .write.format("parquet")
+            .option("path", out)
+            .bucketBy(N_BUCKETS, key)
+            .sortBy(key)
+            .saveAsTable(tmp_name)
+        )
+        spark.sql(f"DROP TABLE {tmp_name}")  # external: the files stay
+
+    path = derived_cache(sf_dir, table, f"{name}_b{N_BUCKETS}", build)
     spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if os.path.exists(f"{path}/_SUCCESS") and _cache_manifest_ok(path):
-        try:
-            spark.sql(
-                f"CREATE TABLE {name} ({src.schema.toDDL()}) USING PARQUET "
-                f"CLUSTERED BY ({key}) SORTED BY ({key}) "
-                f"INTO {n_buckets} BUCKETS LOCATION '{path}'"
-            )
-            return spark.table(name)
-        except Exception:
-            spark.sql(f"DROP TABLE IF EXISTS {name}")  # torn cache → rebuild
-    (
-        # repartition onto the bucket key FIRST: Spark's repartition
-        # hash == its bucket hash, so the 8 write tasks each own
-        # exactly one bucket → ONE file per bucket.  That is the
-        # condition under which sortBy survives the read (multi-file
-        # buckets force a re-sort; SPARK-24528) — and what makes the
-        # join in join_bucketed_pair sort-free, not just shuffle-free.
-        src.repartition(n_buckets, F.col(key))
-        .write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .saveAsTable(name)
+    spark.sql(
+        f"CREATE TABLE {name} ({src.schema.toDDL()}) USING PARQUET "
+        f"CLUSTERED BY ({key}) SORTED BY ({key}) "
+        f"INTO {N_BUCKETS} BUCKETS LOCATION '{path}'"
     )
-    _write_cache_manifest(path)
     return spark.table(name)
-
-
-def _cache_part_inventory(path: str) -> list[str]:
-    """Sorted (relpath|size) lines of the cache directory's own DATA
-    files — underscore/dot-prefixed entries excluded, matching what
-    Spark's file index will actually read."""
-    out = []
-    for dirpath, dirnames, filenames in os.walk(path):
-        dirnames.sort()
-        for fn in sorted(filenames):
-            if fn.startswith(("_", ".")):
-                continue
-            st = os.stat(os.path.join(dirpath, fn))
-            rel = os.path.relpath(os.path.join(dirpath, fn), path)
-            out.append(f"{rel}|{st.st_size}")
-    return out
-
-
-def _write_cache_manifest(path: str) -> None:
-    """Record the just-written cache's own file inventory (ADVICE r12:
-    the fingerprint in the cache PATH covers only the SOURCE table, so
-    a torn derived cache — intact _SUCCESS, missing/partial part
-    files — would re-register via metadata-only CREATE TABLE and
-    silently serve incomplete rows).  Underscore prefix keeps Spark's
-    file index from treating it as data."""
-    tmp = f"{path}/_MANIFEST.tmp{os.getpid()}"
-    with open(tmp, "w") as f:
-        f.write("\n".join(_cache_part_inventory(path)))
-    os.replace(tmp, f"{path}/_MANIFEST")
-
-
-def _cache_manifest_ok(path: str) -> bool:
-    """Hit-path validity: the directory's CURRENT data-file inventory
-    must equal the write-time manifest — metadata-only (no count()
-    action), yet it catches every torn-cache shape the round-11
-    count() check caught and more (same rows, different bytes)."""
-    try:
-        with open(f"{path}/_MANIFEST") as f:
-            recorded = f.read().splitlines()
-    except OSError:
-        return False  # pre-manifest cache or torn write → rebuild
-    return recorded == _cache_part_inventory(path)
-
-
-def _promote_cache_build(build: str, src: str) -> None:
-    """Atomically promote a freshly-built cache directory into place.
-
-    Re-checks ``src`` validity IMMEDIATELY before replacing (ADVICE
-    r13): the caller's pre-build torn-cache check is ~1 s stale by the
-    time the Spark write finishes, so a concurrent invocation may have
-    validly promoted ``src`` in the meantime — rmtree-ing it here
-    would delete the cache under that invocation's in-flight stream,
-    exactly the race the rename-into-place protocol exists to prevent.
-    If ``src`` became valid, the local build is discarded (it is
-    byte-equivalent by construction).  A still-torn ``src`` is renamed
-    ASIDE first — an atomic move, never an in-place delete a reader
-    could be mid-scan on — and only the aside copy is removed.
-
-    Validity = ``_cache_manifest_ok`` ALONE (code-review r14): the
-    manifest is written last by every builder, so a matching inventory
-    implies a complete build — and requiring ``_SUCCESS`` here would
-    mark the evt_late_data_metrics cache (staged batch files moved in
-    by hand, no Spark _SUCCESS at the top level) forever-torn and
-    delete a concurrent invocation's validly promoted copy.
-
-    Promoters are SERIALIZED with an advisory ``flock`` on a sibling
-    lock file (ADVICE r14: the r14 form still had a narrow TOCTOU —
-    between ``_cache_manifest_ok(src)`` returning False and the
-    rename-aside, a concurrent promoter could validly promote ``src``,
-    whose copy this invocation would then move aside and delete under
-    a reader).  With the exclusive lock held across check+replace, at
-    most one promoter mutates ``src`` at a time, so the re-check is no
-    longer stale when the rename runs.  ``flock`` (not ``O_EXCL``
-    create) so a crashed holder releases the lock with its process —
-    no stale-lockfile deadlock; readers are not serialized (they never
-    needed to be — promotion is rename-into-place, and a torn ``src``
-    is moved aside, never deleted in place)."""
-    import fcntl
-    import shutil
-    import uuid
-
-    lock_fd = os.open(f"{src}.lock", os.O_CREAT | os.O_RDWR, 0o644)
-    try:
-        fcntl.flock(lock_fd, fcntl.LOCK_EX)
-        if _cache_manifest_ok(src):
-            shutil.rmtree(build, ignore_errors=True)  # concurrent winner
-            return
-        if os.path.exists(src):  # still torn: move aside, never in-place
-            aside = f"{src}.torn_{uuid.uuid4().hex[:12]}"
-            try:
-                os.rename(src, aside)
-            except OSError:
-                pass  # src vanished under us, or could not be displaced
-            else:
-                shutil.rmtree(aside, ignore_errors=True)
-        try:
-            os.rename(build, src)
-        except OSError:
-            # Two ways to get here under the lock: (a) src reappeared
-            # VALID (a non-promoter path restored it) — discard the
-            # byte-equivalent build; (b) the torn src could not be
-            # displaced (rename-aside failed with src still in place,
-            # e.g. a permission change on SCRATCH) — the pre-r15 code
-            # silently discarded the only valid copy here and left
-            # every future invocation rebuilding against (and readers
-            # serving) the torn directory forever (code-review r15).
-            # Fail LOUDLY instead: a torn cache that cannot be
-            # replaced is an environment fault, not a race to absorb.
-            shutil.rmtree(build, ignore_errors=True)
-            if not _cache_manifest_ok(src):
-                raise RuntimeError(
-                    f"cache promotion failed: torn cache at {src} could "
-                    f"not be displaced and would be served as-is"
-                )
-    finally:
-        os.close(lock_fd)  # closing the fd releases the flock
 
 
 @plan(
@@ -621,56 +452,40 @@ def scan_sqlite_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from data_ingest_utils_spark.sources.pydatasource import register
 
     register(spark)
-    os.makedirs(SCRATCH, exist_ok=True)
-    # Cache key = full-path digest, not basename: two trees ending in
-    # the same leaf dir (e.g. different fixture roots both named
-    # sf0.1) must never serve each other's staged rows through the
-    # row-count probe below.
-    sf_tag = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    db = f"{SCRATCH}/sqlite_src_{sf_tag}.db"
     src = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
     )
-    # Stage once per sf_dir and REUSE while fresh: the source parquet
-    # is immutable testdata, so a staged db whose row count matches is
-    # byte-equivalent to a rebuild — re-collecting 15 k rows per sweep
-    # call was pure fixture overhead (~9 s/call at sf0.1).  A count
-    # mismatch (partial/stale file) triggers a rebuild through the
-    # atomic-replace path below, so executors never see a torn db.
-    n_src = src.count()
-    bounds: tuple[int, int] | None = None
-    if os.path.exists(db):
+
+    # Staged once per source epoch (plans/cache.py): re-collecting 15 k
+    # rows per sweep call was pure fixture overhead (~9 s/call at sf0.1).
+    def build(out: str) -> None:
+        os.makedirs(out)
+        con = sqlite3.connect(f"{out}/customer.db")
         try:
-            with sqlite3.connect(db) as con:
-                n_db, lo, hi = con.execute(
-                    "SELECT count(*), min(c_custkey), max(c_custkey) FROM customer"
-                ).fetchone()
-            if n_db == n_src:
-                bounds = (lo, hi) if lo is not None else (0, 0)
-        except sqlite3.Error:
-            bounds = None
-    if bounds is None:
-        rows = src.collect()
-        with sqlite3.connect(f"{db}.tmp") as con:
-            con.execute("DROP TABLE IF EXISTS customer")
             con.execute(
                 "CREATE TABLE customer "
                 "(c_custkey INTEGER, c_nationkey INTEGER, c_acctbal REAL)"
             )
             con.executemany(
                 "INSERT INTO customer VALUES (?, ?, ?)",
-                [(r.c_custkey, r.c_nationkey, r.c_acctbal) for r in rows],
+                [tuple(r) for r in src.collect()],
             )
             con.commit()
-        os.replace(f"{db}.tmp", db)  # atomic: executors never see a half-built db
-        # empty source: planner collapses to one full-scan partition
-        # (bounds equal) and the scan correctly returns zero rows
-        bounds = (
-            (min(r.c_custkey for r in rows), max(r.c_custkey for r in rows))
-            if rows
-            else (0, 0)
-        )
-    lo, hi = bounds
+        finally:
+            con.close()
+
+    db = f"{derived_cache(sf_dir, 'customer', 'sqlite_customer', build)}/customer.db"
+    con = sqlite3.connect(db)
+    try:
+        lo, hi = con.execute(
+            "SELECT min(c_custkey), max(c_custkey) FROM customer"
+        ).fetchone()
+    finally:
+        con.close()
+    # empty source: the planner collapses to one full-scan partition
+    # (bounds equal) and the scan correctly returns zero rows
+    if lo is None:
+        lo = hi = 0
     return (
         spark.read.format("sql_partitioned")
         .schema("c_custkey bigint, c_nationkey bigint, c_acctbal double")

@@ -967,7 +967,7 @@ def test_stream_stream_join_store_count_invariant(spark):
 
     from pyspark.sql import functions as F
 
-    from data_ingest_utils_spark.plans.scans import SCRATCH
+    from data_ingest_utils_spark.plans.cache import SCRATCH
     from data_ingest_utils_spark.sources.readers import load_table
     def drain(n_stores):
         run_id = uuid.uuid4().hex[:12]
@@ -1075,7 +1075,7 @@ def test_promote_cache_build_three_states(tmp_path):
     valid."""
     import os
 
-    from data_ingest_utils_spark.plans.scans import (
+    from data_ingest_utils_spark.plans.cache import (
         _cache_manifest_ok,
         _promote_cache_build,
         _write_cache_manifest,
@@ -1119,6 +1119,128 @@ def test_promote_cache_build_three_states(tmp_path):
     make_dir(build, "solo..", manifest=True)
     _promote_cache_build(build, src)
     assert open(f"{src}/part-000.parquet").read() == "solo.."
+
+
+def _one_file_source(tmp_path) -> str:
+    """An sf_dir holding one table ``t``: enough for table_fingerprint."""
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    (sf / "t.parquet").write_bytes(b"rows")
+    return str(sf)
+
+
+def test_derived_cache_rebuilds_under_new_code(tmp_path, monkeypatch):
+    """Every cache key carries the code salt: the same source under a
+    different salt is a miss and rebuilds, and the salt itself moves
+    with any edit to the package's sources."""
+    from data_ingest_utils_spark.plans import cache
+
+    salt = cache.code_salt.__wrapped__  # uncached, for the edit check
+    monkeypatch.setattr(cache, "SCRATCH", str(tmp_path / "scratch"))
+    sf = _one_file_source(tmp_path)
+    builds = []
+
+    def build(out):
+        builds.append(out)
+        os.makedirs(out)
+        with open(f"{out}/part-000", "w") as f:
+            f.write("model")
+
+    first = cache.derived_cache(sf, "t", "probe", build)
+    assert cache.derived_cache(sf, "t", "probe", build) == first
+    assert len(builds) == 1  # second call is a hit
+    monkeypatch.setattr(cache, "code_salt", lambda: "0" * 12)
+    second = cache.derived_cache(sf, "t", "probe", build)
+    assert second != first and len(builds) == 2
+
+    pkg = tmp_path / "pkg"
+    (pkg / "sub").mkdir(parents=True)
+    (pkg / "sub" / "mod.py").write_text("X = 1\n")
+    monkeypatch.setattr(cache, "_PKG_ROOT", str(pkg))
+    before = salt()
+    (pkg / "sub" / "mod.py").write_text("X = 2\n")
+    assert salt() != before
+
+
+def test_derived_cache_partial_wipe_rebuilds(spark):
+    """Deleting one data file from a promoted cache (parquet, JSON and
+    the staged-batch stream source) makes the next call rebuild it and
+    return identical rows, never a subset."""
+    import glob
+
+    from data_ingest_utils_spark.plans import QUERIES
+    from data_ingest_utils_spark.plans.cache import _cache_manifest_ok, cache_path
+    from data_ingest_utils_spark.plans.llm import (
+        _kmeans_centroids_cached,
+        _pq_codes_cached,
+    )
+
+    def wipe_one(table, name, pattern):
+        path = cache_path(SF_T2, table, name)
+        files = sorted(glob.glob(f"{path}/{pattern}"))
+        os.remove(files[0])
+        return lambda: (
+            len(glob.glob(f"{path}/{pattern}")) == len(files)
+            and _cache_manifest_ok(path)
+        )
+
+    def codes():
+        rows = _pq_codes_cached(spark, SF_T2).collect()
+        return sorted((r.vec_id, r.cell, bytes(r._codes)) for r in rows)
+
+    before = codes()
+    restored = wipe_one("embeddings", "pq_codes_m32k16i2_c8ci2", "part-*")
+    assert codes() == before and restored()
+
+    before = _kmeans_centroids_cached(spark, SF_T2, k=8, iters=2)
+    restored = wipe_one("embeddings", "ivf_cents_k8i2", "model.json")
+    assert _kmeans_centroids_cached(spark, SF_T2, k=8, iters=2) == before
+    assert restored()
+
+    late = QUERIES["evt_late_data_metrics"]
+    before = sorted(late(spark, SF_T2).collect())
+    restored = wipe_one("events", "late_metrics_src_b4", "batch_001.parquet")
+    assert sorted(late(spark, SF_T2).collect()) == before and restored()
+
+
+def test_derived_cache_two_writers_race(tmp_path, monkeypatch):
+    """Two threads miss the same key and build at once: exactly one
+    build is promoted, both callers get the same valid path, and no
+    build-private or torn directory is left behind."""
+    import threading
+
+    from data_ingest_utils_spark.plans import cache
+
+    scratch = tmp_path / "scratch"
+    monkeypatch.setattr(cache, "SCRATCH", str(scratch))
+    sf = _one_file_source(tmp_path)
+    both_building = threading.Barrier(2, timeout=30)
+    builds, paths = [], []
+
+    def build(out):
+        builds.append(out)
+        both_building.wait()  # neither finishes before both have missed
+        os.makedirs(out)
+        time.sleep(0.2)
+        with open(f"{out}/part-000", "w") as f:
+            f.write(out)
+
+    def call():
+        paths.append(cache.derived_cache(sf, "t", "race", build))
+
+    threads = [threading.Thread(target=call) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=60)
+    assert not any(t.is_alive() for t in threads)
+    assert len(builds) == 2 and len(paths) == 2 and paths[0] == paths[1]
+    path = paths[0]
+    assert cache._cache_manifest_ok(path)
+    assert [p for p in os.listdir(path) if not p.startswith("_")] == ["part-000"]
+    with open(f"{path}/part-000") as f:
+        assert f.read() in builds
+    assert not [p for p in os.listdir(scratch) if ".build_" in p or ".torn_" in p]
 
 
 def test_no_data_batches_off_inner_join_output_invariant(spark, tmp_path, monkeypatch):

@@ -86,7 +86,7 @@ def main() -> int:
 
     # Functional avro attempt on a real session: the only honest test
     # of whether format("avro") resolves.  Cheap (3 rows).
-    from data_ingest_utils_spark.plans.scans import SCRATCH
+    from data_ingest_utils_spark.plans.cache import SCRATCH
     from data_ingest_utils_spark.session import get_session
 
     spark = get_session("dius-format-probe")

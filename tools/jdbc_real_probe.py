@@ -82,7 +82,7 @@ def main() -> int:
 
     import duckdb
 
-    from data_ingest_utils_spark.plans.scans import SCRATCH
+    from data_ingest_utils_spark.plans.cache import SCRATCH
     from data_ingest_utils_spark.session import get_session
     from data_ingest_utils_spark.sources.jdbc import read_jdbc
 

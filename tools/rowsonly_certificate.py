@@ -34,6 +34,7 @@ Usage::
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
@@ -319,7 +320,7 @@ def main() -> int:
     from tools.cross_master_value_check import _canon
 
     from data_ingest_utils_spark.plans import ORACLES, QUERIES
-    from data_ingest_utils_spark.plans.scans import load_table
+    from data_ingest_utils_spark.sources.readers import load_table
     from data_ingest_utils_spark.session import get_session
 
     rows_only = [k for k in QUERIES if k not in ORACLES]
@@ -349,6 +350,10 @@ def main() -> int:
             entry["elapsed_s"] = runs
             det = _canon(collected[0]) == _canon(collected[1])
             entry["deterministic"] = det
+            # digest of the canonical rows, comparable across runs
+            entry["rows_sha256"] = hashlib.sha256(
+                repr(_canon(collected[0])).encode()
+            ).hexdigest()[:16]
             if not det and key not in NONDETERMINISTIC_OK:
                 failed.append(f"{key}.deterministic")
             checks = CHECKS[key](spark, args.sf, collected[0], env)

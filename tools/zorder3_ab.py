@@ -50,7 +50,8 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from tools.zorder_prune_ab import footer_stats, skippability
-    from data_ingest_utils_spark.plans.scans import SCRATCH, load_table
+    from data_ingest_utils_spark.plans.cache import SCRATCH
+    from data_ingest_utils_spark.sources.readers import load_table
     from data_ingest_utils_spark.session import get_session
     from data_ingest_utils_spark.sources.writers import zorder_write
 

@@ -26,8 +26,9 @@ Three predicate shapes, one per pruning regime:
   pays its ~sqrt spreading here.  Reported so the trade is honest.
 
 Writes ZORDER_AB_r{N}.json; the BASELINE.md round-15 block carries the
-summary table.  Layout paths are fingerprint-addressed and reuse the
-sink_zorder_cluster cache when present.
+summary table.  Both layouts are derived caches (plans/cache.py); the
+z-layout is the one sink_zorder_cluster serves from.  ``build_secs``
+is the time to obtain each layout (near zero on a cache hit).
 
 Usage::
 
@@ -123,51 +124,36 @@ def main() -> int:
     sys.path.insert(0, repo)
     from pyspark.sql import functions as F
 
-    from data_ingest_utils_spark.plans.scans import (
-        SCRATCH,
-        _cache_manifest_ok,
-        _promote_cache_build,
-        _write_cache_manifest,
-        load_table,
-        table_fingerprint,
-    )
+    from data_ingest_utils_spark.plans.cache import cache_path, derived_cache
+    from data_ingest_utils_spark.plans.scans import ZORDER_CACHE, _ensure_zorder_fixture
+    from data_ingest_utils_spark.sources.readers import load_table
     from data_ingest_utils_spark.session import get_session
 
     spark = get_session("dius-zorder-ab")
     sf_dir = os.path.join(repo, args.sf) if not os.path.isabs(args.sf) else args.sf
-    tag = table_fingerprint(sf_dir, "lineitem")[:12]
-    zpath = f"{SCRATCH}/zorder_lineitem_{tag}"  # sink_zorder_cluster's cache
-    opath = f"{SCRATCH}/sorted1d_lineitem_{tag}"
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_extendedprice"
     )
-    import uuid
 
-    build_secs = {}
-    # The z-layout is OWNED by _ensure_zorder_fixture (the same cache
-    # sink_zorder_cluster / scan_zorder_pruned serve from) — call it
-    # rather than re-implementing its build recipe here, so a recipe
-    # change can never promote a divergent layout into the shared
-    # fingerprint path (code-review r15).  Only the 1-D twin, which no
-    # registry key reads, is built inline.
-    from data_ingest_utils_spark.plans.scans import _ensure_zorder_fixture
-
-    if not (os.path.exists(f"{zpath}/_SUCCESS") and _cache_manifest_ok(zpath)):
-        t0 = time.monotonic()
-        _ensure_zorder_fixture(spark, sf_dir)
-        build_secs[os.path.basename(zpath)] = round(time.monotonic() - t0, 2)
-    if not (os.path.exists(f"{opath}/_SUCCESS") and _cache_manifest_ok(opath)):
-        t0 = time.monotonic()
-        build = f"{opath}.build_{uuid.uuid4().hex[:12]}"
+    def sorted_1d(out: str) -> None:
         (
             li.repartitionByRange(16, F.col("l_orderkey"))
             .sortWithinPartitions("l_orderkey")
-            .write.mode("overwrite").parquet(build)
+            .write.parquet(out)
         )
-        _write_cache_manifest(build)
-        _promote_cache_build(build, opath)
-        build_secs[os.path.basename(opath)] = round(time.monotonic() - t0, 2)
+
+    # The z-layout is OWNED by _ensure_zorder_fixture (the cache
+    # sink_zorder_cluster / scan_zorder_pruned serve from), so a recipe
+    # change can never promote a divergent layout into its path.  Only
+    # the 1-D twin, which no registry key reads, is built here.
+    build_secs = {}
+    t0 = time.monotonic()
+    _ensure_zorder_fixture(spark, sf_dir)
+    zpath = cache_path(sf_dir, "lineitem", ZORDER_CACHE)
+    build_secs[os.path.basename(zpath)] = round(time.monotonic() - t0, 2)
+    t0 = time.monotonic()
+    opath = derived_cache(sf_dir, "lineitem", "sorted1d_lineitem_f16", sorted_1d)
+    build_secs[os.path.basename(opath)] = round(time.monotonic() - t0, 2)
 
     cols = ("l_orderkey", "l_partkey")
     mo, mp = li.agg(F.max("l_orderkey"), F.max("l_partkey")).head()
