@@ -22,6 +22,17 @@ from pyspark.sql import types as T
 from data_ingest_utils_spark.operators.relational import ensure_parallelism
 from data_ingest_utils_spark.operators.text import shingles, tokens
 
+#: Banded-MinHash geometry of the exact-verify pipelines: 16
+#: permutations in 16 bands of one row (the high-recall dial — a pair at
+#: Jaccard J is missed with probability (1−J)^16) over word 3-gram
+#: shingles.  Fixed, not per call: a persisted corpus index
+#: (:func:`minhash_corpus_index`) and the batch probe
+#: (:func:`minhash_incremental_admit`) only find each other's band rows
+#: when both use the same geometry.
+MINHASH_PERM = 16
+MINHASH_BANDS = 16
+SHINGLE_N = 3
+
 
 def exact_dedup(
     df: DataFrame,
@@ -268,7 +279,6 @@ def _shingle_hash_arrays(
     n: int,
     id_col: str,
     text_col: str = "text",
-    keep_cols: tuple[str, ...] = (),
 ) -> tuple[DataFrame, int]:
     """(id, hv) with hv = the doc's DISTINCT shingle xxhash64 values —
     computed map-only (transform + array_distinct inside the scan
@@ -315,9 +325,6 @@ def _shingle_hash_arrays(
     inside the measured window."""
     hv = ensure_parallelism(df, id_col).select(
         id_col,
-        *keep_cols,  # pass-through tags (e.g. the incremental probe's
-        # batch/corpus side flag) ride the one materialization instead
-        # of forcing a second tokenize pass per side
         F.array_distinct(
             F.transform(shingles(F.col(text_col), n), lambda s: F.xxhash64(s))
         ).alias("hv"),
@@ -453,7 +460,6 @@ def _verify_pairs_collision(
     n: int,
     id_col: str,
     threshold: float,
-    unit: str,
     signatures: int,
 ) -> DataFrame:
     """Exact-Jaccard verification AT COLLISION TIME — the large-corpus
@@ -484,7 +490,7 @@ def _verify_pairs_collision(
     # exactly ONCE per invocation.  A future caller composing both
     # paths must share this checkpoint, not re-derive.
     sig = simhash64(
-        df, "text", id_col, unit=unit, n=n, signatures=signatures
+        df, "text", id_col, n=n, signatures=signatures
     ).localCheckpoint(eager=True)
     band_cols = [f"band{b}" for b in range(signatures * 4)]
     bands = sig.join(hv, id_col).select(
@@ -633,22 +639,26 @@ def ngram_jaccard_pairs(
     )
 
 
+#: Length-band width of :func:`ngram_jaccard_length_blocked`'s blocking.
+LENGTH_BUCKET_CHARS = 256
+
+
 def ngram_jaccard_length_blocked(
     df: DataFrame,
     n: int = 3,
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    bucket_chars: int = 256,
     len_col: str = "n_chars",
     lang_col: str = "lang",
 ) -> DataFrame:
     """Exact n-gram Jaccard over (lang × length-band) candidate pairs
     with NEIGHBOR-BUCKET membership: each doc lands in buckets
-    ``{len//w, len//w + 1}``, so any pair within ``bucket_chars`` of
-    each other shares a bucket — no boundary stragglers, unlike naive
-    same-bucket blocking.  Candidates are DISTINCT doc pairs (a pair
-    can share two buckets), then scored once each by
-    :func:`_verify_pairs_array`, so no pair is double-counted.
+    ``{len//w, len//w + 1}`` (w = :data:`LENGTH_BUCKET_CHARS`), so any
+    pair within w chars of each other shares a bucket — no boundary
+    stragglers, unlike naive same-bucket blocking.  Candidates are
+    DISTINCT doc pairs (a pair can share two buckets), then scored
+    once each by :func:`_verify_pairs_array`, so no pair is
+    double-counted.
 
     NOTE (eager side effect, ADVICE r9): building this plan runs a
     Spark job — the shingle-array signature table is materialized
@@ -676,7 +686,7 @@ def ngram_jaccard_length_blocked(
     same Jaccard arithmetic, inter > 0 matching the inner
     intersection join's pair-drop semantics.
     """
-    lb = F.floor(F.col(len_col).cast("long") / bucket_chars).cast("long")
+    lb = F.floor(F.col(len_col).cast("long") / LENGTH_BUCKET_CHARS).cast("long")
     member = df.select(
         id_col,
         lang_col,
@@ -711,16 +721,15 @@ def simhash_band_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    unit: str = "token",
     n: int = 3,
     signatures: int = 2,
 ) -> DataFrame:
-    """Candidate pairs from SimHash band collisions: docs sharing ANY
-    of the ``signatures * 4`` 16-bit bands.  Near-linear at scale —
-    the self-join key is (band_idx, band_value), a 2^16-ary partition
-    per band, so the pair space is Σ bucket² with hash-sized buckets,
-    never n²; extra signatures add bands WITHOUT changing per-band
-    bucket sizes (the scale property that matters — background
+    """Candidate pairs from SimHash band collisions over token features:
+    docs sharing ANY of the ``signatures * 4`` 16-bit bands.
+    Near-linear at scale — the self-join key is (band_idx,
+    band_value), a 2^16-ary partition per band, so the pair space is
+    Σ bucket² with hash-sized buckets, never n²; extra signatures add
+    bands WITHOUT changing per-band bucket sizes (the scale property that matters — background
     collision rate stays 2^-16 per band).
 
     Recall geometry (quantified round 15, 8-band form LANDED round
@@ -754,7 +763,7 @@ def simhash_band_candidates(
     # _shingle_hash_arrays.  Measured round 13 on the 50 k-doc sf1.0
     # bench corpus: candidates count 4.9 s → 1.7 s, identical output.
     sig = simhash64(
-        df, text_col, id_col, unit, n, signatures=signatures
+        df, text_col, id_col, n=n, signatures=signatures
     ).localCheckpoint(eager=True)
     bands = sig.select(
         id_col,
@@ -777,15 +786,14 @@ def ngram_jaccard_banded(
     n: int = 3,
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    unit: str = "token",
     signatures: int = 2,
 ) -> DataFrame:
     """Exact n-gram Jaccard scored ONLY over SimHash-band candidate
     pairs — the 100 TB shape of :func:`ngram_jaccard_pairs`.
 
-    Candidates come from :func:`simhash_band_candidates` (near-dups
-    collide in a band w.h.p.; ``unit``/``signatures`` expose the
-    blocking dials — see that docstring's measured trade-offs; the
+    Candidates come from :func:`simhash_band_candidates` over token
+    features (near-dups collide in a band w.h.p.; ``signatures`` is the
+    blocking dial — see that docstring's measured trade-offs; the
     ``signatures=2`` 8×16-band default landed round 16 lifts
     candidate recall 0.887 → 0.965 at sf0.1 for ~1.9× candidate
     volume); the exact score then confirms, so precision is always 1
@@ -829,21 +837,21 @@ def ngram_jaccard_banded(
     """
     hv, n_docs = _shingle_hash_arrays(df, n, id_col)
     if n_docs >= COLLISION_VERIFY_MIN_DOCS:
-        return _verify_pairs_collision(
-            df, hv, n, id_col, threshold, unit, signatures
-        )
-    cands = simhash_band_candidates(
-        df, id_col=id_col, unit=unit, n=n, signatures=signatures
-    )
+        return _verify_pairs_collision(df, hv, n, id_col, threshold, signatures)
+    cands = simhash_band_candidates(df, id_col=id_col, n=n, signatures=signatures)
     bcast = _resolve_broadcast_verify(df, id_col)
     return _verify_pairs_array(cands, hv, id_col, threshold, broadcast_arrays=bcast)
+
+
+#: Round cap of :func:`connected_components`.  Pointer jumping converges
+#: in O(log diameter) rounds, so 25 covers chains of ~2^25 docs.
+CC_MAX_ITER = 25
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "doc_a",
     dst: str = "doc_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Connected components over an undirected pair graph → (v,
     component) with component = min vertex id in the component.
@@ -854,8 +862,8 @@ def connected_components(
     join).  The driver loop only orchestrates round count via a
     convergence COUNT; all data movement is distributed.  This is the
     cluster step of near-dedup: pairs → components → keep min doc per
-    component.  At 100 TB cap rounds (max_iter) and checkpoint the
-    label frame every few rounds to truncate lineage.
+    component.  Rounds are capped at :data:`CC_MAX_ITER`; every round's
+    labels are checkpointed, which truncates lineage at any scale.
     """
     import warnings
 
@@ -873,7 +881,7 @@ def connected_components(
         e.select(F.col("a").alias("v")).distinct().withColumn("c", F.col("v"))
     ).localCheckpoint(eager=True)
     n_changed = 0
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         nbr_min = (
             e.join(comp.withColumnRenamed("v", "b"), "b")
             .groupBy("a")
@@ -917,13 +925,13 @@ def connected_components(
             break
     else:
         if n_changed:
-            # Exhausted max_iter without a zero-change round: labels may
-            # be non-converged (split components).  Surface it — silent
-            # wrong components are worse than a loud warning.
+            # Exhausted the round cap without a zero-change round: labels
+            # may be non-converged (split components).  Surface it —
+            # silent wrong components are worse than a loud warning.
             warnings.warn(
-                f"connected_components: max_iter={max_iter} exhausted before "
+                f"connected_components: {CC_MAX_ITER} rounds exhausted before "
                 f"convergence ({n_changed} labels still changing); returned "
-                "components may be split — raise max_iter.",
+                "components may be split.",
                 RuntimeWarning,
                 stacklevel=2,
             )
@@ -934,8 +942,8 @@ def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 16,
-    shingle_n: int = 3,
+    num_perm: int = MINHASH_PERM,
+    shingle_n: int = SHINGLE_N,
 ) -> DataFrame:
     """Deterministic MinHash signatures: ``num_perm`` independent
     minhashes per document, permutation *i* being ``min`` over the
@@ -1004,9 +1012,9 @@ def minhash_band_candidates(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 16,
-    bands: int = 16,
-    shingle_n: int = 3,
+    num_perm: int = MINHASH_PERM,
+    bands: int = MINHASH_BANDS,
+    shingle_n: int = SHINGLE_N,
 ) -> DataFrame:
     """Candidate near-dup pairs from banded MinHash collisions, with
     the band/row trade-off exposed: ``rows_per_band = num_perm //
@@ -1101,12 +1109,10 @@ def minhash_jaccard_verified(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    num_perm: int = 16,
-    bands: int = 16,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """Two-stage near-dedup mirroring production stacks: banded-MinHash
-    candidate pairs (cheap, near-linear, recall dialed by bands/rows)
+    candidate pairs (cheap, near-linear; geometry :data:`MINHASH_PERM`
+    / :data:`MINHASH_BANDS` over :data:`SHINGLE_N`-gram shingles)
     → EXACT shingle-Jaccard confirmation (no false positives survive).
 
     The verify stage is candidate-bounded and uses the per-pair
@@ -1120,7 +1126,7 @@ def minhash_jaccard_verified(
     4-dp scores — downstream ``connected_components`` + keep-min-id
     completes the dedup.
 
-    Sub-shingle docs (fewer than ``shingle_n`` tokens) never reach
+    Sub-shingle docs (fewer than :data:`SHINGLE_N` tokens) never reach
     signature computation: the materialized shingle-hash-array frame
     drops them (``size(hv) > 0``) and the band signatures derive FROM
     that frame, so no candidate is ever generated for a doc the verify
@@ -1137,12 +1143,10 @@ def minhash_jaccard_verified(
     key's ~27 s sweep cost, paid 3×; the full key now runs in ~5 s
     warm).
     """
-    if num_perm % bands:
-        raise ValueError(f"bands={bands} must divide num_perm={num_perm}")
     base = df.select(id_col, F.col(text_col).alias("text"))
-    hv, _ = _shingle_hash_arrays(base, shingle_n, id_col)
-    sig = _signatures_from_hash_arrays(hv, id_col, num_perm)
-    cands = _band_pairs_from_signatures(sig, id_col, num_perm, bands)
+    hv, _ = _shingle_hash_arrays(base, SHINGLE_N, id_col)
+    sig = _signatures_from_hash_arrays(hv, id_col, MINHASH_PERM)
+    cands = _band_pairs_from_signatures(sig, id_col, MINHASH_PERM, MINHASH_BANDS)
     bcast = _resolve_broadcast_verify(df, id_col)
     return _verify_pairs_array(cands, hv, id_col, threshold, broadcast_arrays=bcast)
 
@@ -1151,9 +1155,6 @@ def minhash_corpus_index(
     corpus: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_perm: int = 16,
-    bands: int = 16,
-    shingle_n: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the PERSISTABLE corpus half of the incremental near-dup
     probe (VERDICT r11 #2): ``(hv, banded)`` where ``hv`` is the
@@ -1163,30 +1164,26 @@ def minhash_corpus_index(
     input).  Both are plain DataFrames a caller writes to parquet
     once per corpus epoch — the "materialized once per epoch" index
     :func:`minhash_incremental_admit`'s docstring declares — and
-    passes back via ``corpus_index`` so a nightly batch never
+    passes back as ``corpus_index`` so a nightly batch never
     re-tokenizes the corpus.  Derivation goes through the SHARED
-    geometry helpers, so a persisted index cannot drift from the
-    inline computation."""
+    geometry helpers and constants, so a persisted index cannot drift
+    from the batch side of the probe."""
     hv_c, _ = _shingle_hash_arrays(
-        corpus.select(id_col, text_col), shingle_n, id_col, text_col
+        corpus.select(id_col, text_col), SHINGLE_N, id_col, text_col
     )
     banded_c = _banded_rows(
-        _signatures_from_hash_arrays(hv_c, id_col, num_perm),
-        id_col, num_perm, bands, "doc_b",
+        _signatures_from_hash_arrays(hv_c, id_col, MINHASH_PERM),
+        id_col, MINHASH_PERM, MINHASH_BANDS, "doc_b",
     )
     return hv_c, banded_c
 
 
 def minhash_incremental_admit(
     batch: DataFrame,
-    corpus: DataFrame,
+    corpus_index: tuple[DataFrame, DataFrame],
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.5,
-    num_perm: int = 16,
-    bands: int = 16,
-    shingle_n: int = 3,
-    corpus_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """Incremental NEAR-dup admission: keep only the ``batch`` docs
     with NO corpus near-duplicate at exact shingle-Jaccard ≥
@@ -1194,25 +1191,27 @@ def minhash_incremental_admit(
     (VERDICT r10 #4), and the banded-MinHash twin of the exact-hash
     anti-join in llm_incremental_dedup.
 
-    Stages, all batch-vs-corpus (never corpus×corpus):
+    ``corpus_index`` is the corpus's :func:`minhash_corpus_index` —
+    its shingle-hash array frame and band rows, materialized once per
+    corpus epoch — so only the BATCH pays a tokenize pass.  Stages,
+    all batch-vs-corpus (never corpus×corpus):
 
-    1. Per-side distinct shingle-hash arrays
-       (:func:`_shingle_hash_arrays` — materialized once per side).
-    2. Band rows via the SHARED geometry (:func:`_banded_rows`,
-       b=16 r=1 by default — the high-recall dial; a qualifying pair
-       is missed with probability ≤ (1−J)^bands).  The corpus side is
-       THE persisted band index: at 100 TB it is written once per
-       corpus epoch, bucketed on ``band_hash``, and every nightly
-       batch probes it with this equi-join; recomputed here because
-       the fixture corpus is small.
+    1. The batch's distinct shingle-hash arrays
+       (:func:`_shingle_hash_arrays` — materialized once).
+    2. Batch band rows via the SHARED geometry (:func:`_banded_rows`
+       at :data:`MINHASH_PERM` / :data:`MINHASH_BANDS`, b=16 r=1 — the
+       high-recall dial; a qualifying pair is missed with probability
+       ≤ (1−J)^16).  The corpus side is the index's band rows: at
+       100 TB they are bucketed on ``band_hash`` and every nightly
+       batch probes them with this equi-join.
     3. Candidates = batch band rows ⋈ corpus band rows on
        (band_idx, band_hash), distinct (b_id, c_id) — hash-sized band
        buckets, so candidate volume is collision-bounded, never
        |batch|·|corpus|.
     4. Exact verify through the SHARED scorer
-       (:func:`_verify_pairs_array` with per-side arrays): banding
-       decides only who gets VERIFIED; a band false positive cannot
-       reject a batch doc.
+       (:func:`_verify_pairs_array` with the index's arrays as the
+       corpus side): banding decides only who gets VERIFIED; a band
+       false positive cannot reject a batch doc.
     5. Admission = batch LEFT ANTI join on the ids with a confirmed
        duplicate — the id-only shuffle shape of llm_incremental_dedup.
 
@@ -1223,45 +1222,16 @@ def minhash_incremental_admit(
     shingle (asserted in tests/test_text_ops.py).  Batch docs with no
     corpus band collision are admitted join-free past the verify, and
     sub-shingle docs (no features) are admitted structurally — they
-    never enter the signature frame.
+    never enter the signature frame.  Batch and corpus ids must be
+    disjoint, as the verify attach assumes.
     """
-    if corpus_index is not None:
-        # Persisted-index path (VERDICT r11 #2): the corpus's array
-        # frame + band rows were materialized once per epoch by
-        # :func:`minhash_corpus_index` — only the BATCH pays a
-        # tokenize pass tonight, exactly the production read shape.
-        hv_c, banded_c = corpus_index
-        hv_b, _ = _shingle_hash_arrays(
-            batch.select(id_col, text_col), shingle_n, id_col, text_col
-        )
-    else:
-        # ONE signature-table pass over the union (round-11 sweep
-        # finding: per-side _shingle_hash_arrays calls made this the
-        # cluster-arm max_key — two scans, two tokenize jobs, two
-        # checkpoints for what is one lake in production): both sides
-        # ride a single tokenize → hash → materialize with a side
-        # tag, then split from the checkpoint.  Requires the
-        # documented id-disjointness the verify attach already
-        # assumes.
-        tagged = batch.select(
-            F.col(id_col), F.col(text_col), F.lit(True).alias("_is_batch")
-        ).unionByName(
-            corpus.select(
-                F.col(id_col), F.col(text_col), F.lit(False).alias("_is_batch")
-            )
-        )
-        hv_all, _ = _shingle_hash_arrays(
-            tagged, shingle_n, id_col, text_col, keep_cols=("_is_batch",)
-        )
-        hv_b = hv_all.filter(F.col("_is_batch")).select(id_col, "hv")
-        hv_c = hv_all.filter(~F.col("_is_batch")).select(id_col, "hv")
-        banded_c = _banded_rows(
-            _signatures_from_hash_arrays(hv_c, id_col, num_perm),
-            id_col, num_perm, bands, "doc_b",
-        )
+    hv_c, banded_c = corpus_index
+    hv_b, _ = _shingle_hash_arrays(
+        batch.select(id_col, text_col), SHINGLE_N, id_col, text_col
+    )
     banded_b = _banded_rows(
-        _signatures_from_hash_arrays(hv_b, id_col, num_perm),
-        id_col, num_perm, bands, "doc_a",
+        _signatures_from_hash_arrays(hv_b, id_col, MINHASH_PERM),
+        id_col, MINHASH_PERM, MINHASH_BANDS, "doc_a",
     )
     cands = (
         banded_b.join(banded_c, ["band_idx", "band_hash"])
@@ -1280,10 +1250,7 @@ def minhash_lsh_pairs(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    num_hash_tables: int = 5,
     max_distance: float = 0.6,
-    num_features: int = 1 << 18,
-    shingle_n: int = 3,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate candidate pairs (Spark ML).
 
@@ -1292,7 +1259,8 @@ def minhash_lsh_pairs(
     seeded across engines ⇒ rows-only key (no SQL oracle); invariants
     asserted in unit tests.
 
-    Featurization is over ``shingle_n``-gram SHINGLE sets, not raw
+    Featurization is over :data:`SHINGLE_N`-gram SHINGLE sets, hashed
+    into 2^18 HashingTF features with 5 MinHash tables, not raw
     tokens: raw-token sets of natural-language docs share the common
     vocabulary, so token-Jaccard >= (1 - max_distance) holds for a
     quadratic number of pairs and both the LSH buckets and the OUTPUT
@@ -1300,7 +1268,7 @@ def minhash_lsh_pairs(
     Shingle sets are near-disjoint for unrelated docs ⇒ candidate and
     result sizes stay near-linear — the web-scale MinHash contract.
 
-    Docs shorter than ``shingle_n`` tokens have an empty shingle set;
+    Docs shorter than :data:`SHINGLE_N` tokens have an empty shingle set;
     they FALL BACK to their distinct-token set so identical very-short
     duplicates are still reported (a short doc can only pair with
     another short doc — shingle and token feature spaces are disjoint
@@ -1326,14 +1294,14 @@ def minhash_lsh_pairs(
     # docs get a PER-DOC-UNIQUE dummy token: the vector is valid, and
     # the unique feature set has Jaccard distance 1.0 to everything
     # WITH HIGH PROBABILITY — HashingTF folds the dummy into
-    # num_features buckets, so a collision with another doc's only
+    # 2^18 buckets, so a collision with another doc's only
     # feature (or another dummy) can fake distance < 1 at p ≈
-    # O(1/num_features) per pair (ADVICE r7).  The `_blank` flag below
+    # O(2^-18) per pair (ADVICE r7).  The `_blank` flag below
     # — computed from the raw text, never the hashed features, so no
     # Catalyst reordering can evaluate LSH hashes on it — turns the
     # documented drop contract back into a structural guarantee via a
     # plain post-join filter on both sides.
-    sh = shingles(F.col(text_col), shingle_n)
+    sh = shingles(F.col(text_col), SHINGLE_N)
     tok = F.array_distinct(F.array_remove(tokens(F.col(text_col)), ""))
     blank_token = F.array(F.concat(F.lit("\x00blank\x00"), F.col(id_col).cast("string")))
     # Parallelism guard BEFORE featurization: the shingle + HashingTF +
@@ -1348,10 +1316,10 @@ def minhash_lsh_pairs(
         .alias("_tokens"),
         ((F.size(sh) <= 0) & (F.size(tok) <= 0)).alias("_blank"),
     )
-    tf = HashingTF(inputCol="_tokens", outputCol="_features", numFeatures=num_features)
+    tf = HashingTF(inputCol="_tokens", outputCol="_features", numFeatures=1 << 18)
     featurized = tf.transform(shingled)
     lsh = MinHashLSH(
-        inputCol="_features", outputCol="_sig", numHashTables=num_hash_tables, seed=42
+        inputCol="_features", outputCol="_sig", numHashTables=5, seed=42
     )
     model = lsh.fit(featurized)  # no data pass — draws hash coefficients only
     # Materialize the signed frame ONCE before the self-join.

@@ -14,7 +14,7 @@ from __future__ import annotations
 import re
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: String cells with these exact values are standardized to NULL.
@@ -79,9 +79,9 @@ def cast_columns(df: DataFrame, casts: dict[str, str], safe: bool = True) -> Dat
 def standardize_nulls(
     df: DataFrame,
     cols: Sequence[str] | None = None,
-    sentinels: Sequence[str] = DEFAULT_NULL_SENTINELS,
 ) -> DataFrame:
-    """Replace sentinel strings (``''``, ``'NULL'``, ``'N/A'``, …) with NULL.
+    """Replace the :data:`DEFAULT_NULL_SENTINELS` strings (``''``,
+    ``'NULL'``, ``'N/A'``, …) with NULL.
 
     ``cols`` must be a sequence of STRING column names present in the
     frame (fail-fast contract): a bare string would be set()-exploded
@@ -105,7 +105,7 @@ def standardize_nulls(
                 f"sentinels: {non_string}"
             )
     targets = set(cols) if cols is not None else {c for c, t in df.dtypes if t == "string"}
-    sent = F.array(*[F.lit(s) for s in sentinels])
+    sent = F.array(*[F.lit(s) for s in DEFAULT_NULL_SENTINELS])
     out_cols = []
     for c, t in df.dtypes:
         if c in targets and t == "string":
@@ -215,14 +215,9 @@ def latest_per_key(
     return distinct_on(df, list(keys), order)
 
 
-def null_safe_div(num: Column, den: Column) -> Column:
-    """x / NULLIF(y, 0) — the ingestion-safe division."""
-    return num / F.nullif(den, F.lit(0))
-
-
-def flatten_structs(df: DataFrame, sep: str = "_") -> DataFrame:
+def flatten_structs(df: DataFrame) -> DataFrame:
     """Recursively expand every StructType column into scalar columns
-    named ``parent<sep>child<sep>...`` (schema-driven, purely
+    named ``parent_child_...`` (schema-driven, purely
     declarative — each leaf becomes one ``col("a.b.c").alias("a_b_c")``
     projection, so Catalyst prunes unreferenced leaves at the parquet
     scan and no data is materialized for dropped subtrees).  The
@@ -248,7 +243,7 @@ def flatten_structs(df: DataFrame, sep: str = "_") -> DataFrame:
     def rec(path: str, flat: str, dtype) -> None:
         if isinstance(dtype, T.StructType):
             for f in dtype.fields:
-                rec(f"{path}.`{f.name}`", f"{flat}{sep}{f.name}", f.dataType)
+                rec(f"{path}.`{f.name}`", f"{flat}_{f.name}", f.dataType)
         else:
             emit(F.col(path), flat)
 

@@ -21,10 +21,11 @@ Decode tiers (round 8 split):
   llm_audio_decode / llm_video_decode run them over deterministic
   fixtures whose pixel/sample statistics have closed-form SQL).
 - **Stubbed decoders** — compressed formats (JPEG/PNG/MP4/...) need
-  libjpeg/ffmpeg, absent in this container: ``decode_stub=True``
-  produces a deterministic fake feature vector from the payload
-  hash; ``decode_stub=False`` raises NotImplementedError where the
-  real codec call would go.
+  libjpeg/ffmpeg, which the package does not depend on:
+  :func:`extract_features` derives a deterministic fake feature
+  vector from the payload hash and :func:`sample_frames` slices the
+  payload bytes as frames.  A real codec replaces only the
+  per-payload Python in their ``mapInPandas`` bodies.
 
 The Spark-side plumbing — schema, batching, partitioning — is shared
 by both tiers and tested end-to-end.
@@ -68,9 +69,7 @@ def pack_payload(df: DataFrame, text_col: str = "text", uri_prefix: str = "mem:/
     )
 
 
-def extract_features(
-    df: DataFrame, decode_stub: bool = True, dim: int = 4
-) -> DataFrame:
+def extract_features(df: DataFrame, dim: int = 4) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
     ``mapInPandas``: each batch arrives as a pandas DataFrame of
@@ -89,11 +88,6 @@ def extract_features(
         import hashlib
 
         for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real media decode requires image/audio libs not present "
-                    "in this container; run with decode_stub=True"
-                )
             shas = []
             feats = []
             for payload in pdf["payload"]:
@@ -123,7 +117,6 @@ def sample_frames(
     df: DataFrame,
     frame_bytes: int = 256,
     every: int = 4,
-    decode_stub: bool = True,
 ) -> DataFrame:
     """Frame-sample a media payload: split into fixed-size frames, keep
     every ``every``-th, emit one row per sampled frame (1→N batch
@@ -149,11 +142,6 @@ def sample_frames(
         import hashlib
 
         for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError(
-                    "real frame decode requires ffmpeg/image libs not present "
-                    "in this container; run with decode_stub=True"
-                )
             ids, idxs, shas = [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 raw = bytes(payload)

@@ -280,18 +280,6 @@ def top_n_global(df: DataFrame, order: Sequence[Column], n: int) -> DataFrame:
 
 # ----------------------------------------------------------- grouping
 
-def grouped_agg(
-    df: DataFrame,
-    keys: Sequence[str],
-    aggs: Sequence[Column],
-) -> DataFrame:
-    """groupBy().agg() — hash aggregation with map-side partial
-    aggregation for free (HashAggregate partial → shuffle → final)."""
-    if keys:
-        return df.groupBy(*keys).agg(*aggs)
-    return df.agg(*aggs)
-
-
 def distinct_on(
     df: DataFrame,
     keys: Sequence[str],

@@ -34,6 +34,15 @@ from pyspark.sql import types as T
 
 from data_ingest_utils_spark.operators.exprs import let_bind
 
+#: Decimal places every similarity score is rounded to before it is
+#: ranked, thresholded or returned — the oracles' ``ROUND(…, 4)``, so it
+#: is fixed here rather than per call.  Only SemDeDup's threshold compare
+#: rounds finer (:func:`embedding_near_dup_pairs_gemm`'s ``round_dp``).
+SIM_DP = 4
+
+#: :func:`ivf_pq_topk`'s per-query ADC survivors before the exact rerank.
+IVF_PQ_COARSE_K = 100
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -163,7 +172,6 @@ def cosine_topk(
     k: int = 5,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Exact brute-force cosine top-k for a batch of ``(query_id,
     vector)`` queries — the ladder's ground truth.  Returns
@@ -178,7 +186,7 @@ def cosine_topk(
     rows (padding / failed-encoder vectors) fold to a NULL cosine and
     drop instead of ranking first."""
     qlist = _checked_queries(queries, None, "cosine_topk")
-    return _exact_topk(df, qlist, k, vec_col, id_col, round_dp)
+    return _exact_topk(df, qlist, k, vec_col, id_col)
 
 
 def _exact_topk(
@@ -187,7 +195,6 @@ def _exact_topk(
     k: int,
     vec_col: str,
     id_col: str,
-    round_dp: int,
     probes: list[list[int]] | None = None,
 ) -> DataFrame:
     """The exact rung's body: attach → cosine → per-query cut.  Each
@@ -196,7 +203,7 @@ def _exact_topk(
     only the dot (:func:`_cos_ratio`).  ``probes`` restricts each
     query to its k-means cells (:func:`_with_queries`)."""
     dot = _dot(F.col(vec_col), F.col("_qv"))
-    sim = F.round(_cos_ratio(dot, F.col("_nrm"), F.col("_qn")), round_dp)
+    sim = F.round(_cos_ratio(dot, F.col("_nrm"), F.col("_qn")), SIM_DP)
     rows = [(qid, q, math.sqrt(sum(v * v for v in q))) for qid, q in qlist]
     normed = df.withColumn("_nrm", _norm(F.col(vec_col)))
     scored = _with_queries(
@@ -210,8 +217,6 @@ def cosine_pairs_lsh(
     threshold: float = 0.4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 3,
 ) -> DataFrame:
     """All-pairs near-neighbors via random-projection bucketing —
     candidate pairs come from equal LSH buckets, then exact cosine
@@ -249,8 +254,8 @@ def cosine_pairs_lsh(
         )
     )
     lsh = BucketedRandomProjectionLSH(
-        inputCol="_v", outputCol="_h", bucketLength=bucket_length,
-        numHashTables=num_hash_tables, seed=42,
+        inputCol="_v", outputCol="_h", bucketLength=0.5,
+        numHashTables=3, seed=42,
     )
     model = lsh.fit(feats)
     # Materialize ONCE before the self-join: approxSimilarityJoin
@@ -275,7 +280,7 @@ def cosine_pairs_lsh(
         pairs.select(
             F.col(f"datasetA.{id_col}").alias("vec_a"),
             F.col(f"datasetB.{id_col}").alias("vec_b"),
-            F.round(cos, 4).alias("cos_sim"),
+            F.round(cos, SIM_DP).alias("cos_sim"),
         )
         .filter((F.col("vec_a") < F.col("vec_b")) & (F.col("cos_sim") >= threshold))
     )
@@ -314,7 +319,7 @@ def embedding_near_dup_pairs(
         _dot_wide(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
     )
     return (
-        joined.withColumn("cos_sim", F.round(cos, 4))
+        joined.withColumn("cos_sim", F.round(cos, SIM_DP))
         .filter(F.col("cos_sim") >= threshold)
         .select("vec_a", "vec_b", "cos_sim")
     )
@@ -326,7 +331,7 @@ def embedding_near_dup_pairs_gemm(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     block_col: str = "label",
-    round_dp: int = 4,
+    round_dp: int = SIM_DP,
     strip: int = 2048,
 ) -> DataFrame:
     """Blocked near-dup pairs scored by ONE matrix product per block
@@ -421,7 +426,6 @@ def knn_join_blocked(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     block_col: str = "label",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Blocked kNN join, equi-join + per-pair fold + window top-k —
     the operator-layer BASELINE twin of :func:`knn_join_gemm` (the
@@ -452,7 +456,7 @@ def knn_join_blocked(
         _cos_ratio(
             _dot_wide(F.col("_va"), F.col("_vb")), F.col("_na"), F.col("_nb")
         ),
-        round_dp,
+        SIM_DP,
     )
     scored = pairs.select("vec_id", "nbr_id", cos.alias("cos_sim"))
     return topk_per_group(
@@ -472,7 +476,6 @@ def knn_join_gemm(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     block_col: str = "label",
-    round_dp: int = 4,
     strip: int = 2048,
 ) -> DataFrame:
     """Blocked kNN join scored by ONE matrix product per block
@@ -482,7 +485,7 @@ def knn_join_gemm(
 
     Same exactness posture as the certified near-dup GEMM (see its
     docstring): BLAS pairwise summation differs from the sequential
-    fold only in final-ulp territory, and at ``round_dp=4`` a rank
+    fold only in final-ulp territory, and at :data:`SIM_DP` = 4 a rank
     flip needs a cosine within ~1e-14 of a half-step — re-certified
     against the join path and the SQL oracle on switch.  Rounding is
     HALF-AWAY-FROM-ZERO via floor/ceil on the scaled value (the
@@ -500,7 +503,7 @@ def knn_join_gemm(
     import numpy as np
     import pandas as pd
 
-    scale = float(10 ** round_dp)
+    scale = float(10 ** SIM_DP)
 
     def score(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_id")
@@ -521,7 +524,7 @@ def knn_join_gemm(
         norms = np.sqrt(np.einsum("ij,ij->i", V, V))
         kk = min(k, n - 1)
         # (rounded-sim DESC, nbr_id ASC) as ONE exact int64 sort key:
-        # the rounded sim is an integer on the 10^-round_dp grid
+        # the rounded sim is an integer on the 10^-SIM_DP grid
         # (|ri| <= scale), ids are non-negative and < 2^48 here (the
         # near-dup kernel's sorted-id precondition bounds fixture ids
         # far below), so (scale - ri) << 48 | id is a total order with
@@ -584,7 +587,6 @@ def embedding_incremental_admit(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     block_col: str = "label",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Incremental EMBEDDING-dedup admission (round 12): keep only the
     ``batch`` vectors with NO corpus neighbor at cosine ≥
@@ -625,7 +627,7 @@ def embedding_incremental_admit(
     )
     dup_ids = (
         wb.join(wc, "_blk")
-        .filter(F.round(cos, round_dp) >= threshold)
+        .filter(F.round(cos, SIM_DP) >= threshold)
         .select(F.col("_b_id").alias(id_col))
         .distinct()
     )
@@ -639,7 +641,6 @@ def quantized_rerank_topk(
     coarse_k: int = 50,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Two-stage retrieve-then-rerank for a batch of ``(query_id,
     vector)`` queries: a cheap int8-quantized dot product prunes each
@@ -684,9 +685,7 @@ def quantized_rerank_topk(
             _dot(F.col("_rq"), F.col("_qq")) / (F.col("_rs") * F.col("_qs"))
         ).alias("_coarse"),
     )
-    return _coarse_topk_rerank(
-        df, coarse, qlist, k, coarse_k, vec_col, id_col, round_dp
-    )
+    return _coarse_topk_rerank(df, coarse, qlist, k, coarse_k, vec_col, id_col)
 
 
 def _hamming_words_expr(bits, qbits, words: int):
@@ -917,7 +916,6 @@ def binary_hamming_topk(
     coarse_k: int = 100,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Binary-quantization retrieval for a batch of ``(query_id,
     vector)`` queries: sign-bit codes + Hamming distance prune each
@@ -959,9 +957,7 @@ def binary_hamming_topk(
         # cut, as the DuckDB oracle's ascending order does
         (-hd).cast("double").alias("_coarse"),
     )
-    return _coarse_topk_rerank(
-        df, coarse, qlist, k, coarse_k, vec_col, id_col, round_dp
-    )
+    return _coarse_topk_rerank(df, coarse, qlist, k, coarse_k, vec_col, id_col)
 
 
 def _pq_unit_base(
@@ -1204,7 +1200,6 @@ def pq_rerank_topk(
     coarse_k: int = 100,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_dp: int = 4,
     *,
     codebooks: list[list[list[float]]],
     codes: DataFrame,
@@ -1236,9 +1231,7 @@ def pq_rerank_topk(
     qlist = _checked_queries(queries, _pq_index_dim(codebooks, fn), fn)
     _require_cols(codes, (id_col, "_codes"), fn)
     coarse = _pq_coarse(codes, qlist, codebooks, id_col)
-    return _coarse_topk_rerank(
-        df, coarse, qlist, k, coarse_k, vec_col, id_col, round_dp
-    )
+    return _coarse_topk_rerank(df, coarse, qlist, k, coarse_k, vec_col, id_col)
 
 
 def _coarse_topk_rerank(
@@ -1249,7 +1242,6 @@ def _coarse_topk_rerank(
     coarse_k: int,
     vec_col: str,
     id_col: str,
-    round_dp: int,
 ) -> DataFrame:
     """Shared tail of every coarse retrieval rung: each query's
     top-``coarse_k`` of ``(query_id, id, _coarse)`` (higher is better,
@@ -1272,7 +1264,7 @@ def _coarse_topk_rerank(
     qv = F.element_at(
         F.map_from_entries(_query_rows(qlist, _qv=_VEC)), F.col("query_id")
     )
-    sim = F.round(_cosine(F.col(vec_col), qv), round_dp)
+    sim = F.round(_cosine(F.col(vec_col), qv), SIM_DP)
     rerank = cands.join(df.select(id_col, vec_col), id_col).select(
         "query_id", id_col, sim.alias("sim")
     )
@@ -1316,10 +1308,8 @@ def ivf_pq_topk(
     queries: Sequence[tuple[int, Sequence[float]]],
     k: int = 5,
     nprobe: int = 2,
-    coarse_k: int = 100,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    round_dp: int = 4,
     *,
     centroids: list[list[float]],
     codebooks: list[list[list[float]]],
@@ -1331,8 +1321,8 @@ def ivf_pq_topk(
     ``centroids`` (ties to the lower cell), PQ asymmetric distance
     scores only the code rows in those cells (:func:`_pq_coarse`), and
     the shared :func:`_coarse_topk_rerank` tail exact-reranks each
-    query's top-``coarse_k`` to its ``k``.  Returns ``(query_id, id,
-    sim)``.
+    query's top-:data:`IVF_PQ_COARSE_K` to its ``k``.  Returns
+    ``(query_id, id, sim)``.
 
     ``codes`` is the persisted index ``(id, cell, _codes)`` —
     :func:`pq_encode_packed` output next to its :func:`kmeans_assign`
@@ -1356,7 +1346,7 @@ def ivf_pq_topk(
         codes, qlist, codebooks, id_col, _probe_cells(qlist, centroids, nprobe)
     )
     return _coarse_topk_rerank(
-        df, coarse, qlist, k, coarse_k, vec_col, id_col, round_dp
+        df, coarse, qlist, k, IVF_PQ_COARSE_K, vec_col, id_col
     )
 
 
@@ -1619,9 +1609,7 @@ def ivf_topk_kmeans(
     qlist = _checked_queries(queries, len(centroids[0]), "ivf_topk_kmeans")
     assigned = kmeans_assign(df, centroids, vec_col=vec_col, id_col=id_col)
     probes = _probe_cells(qlist, centroids, nprobe)
-    return _exact_topk(
-        assigned, qlist, k, vec_col, id_col, round_dp=4, probes=probes
-    )
+    return _exact_topk(assigned, qlist, k, vec_col, id_col, probes=probes)
 
 
 def semdedup(

@@ -8,14 +8,13 @@ tokenizes on single spaces (FIXTURES.md).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from data_ingest_utils_spark.operators.exprs import let_bind
 
-#: Stopword list used by quality scoring / language scoring demos.
+#: Stopword list used by quality scoring / language scoring demos; the
+#: oracles read it too (``plans.llm._STOP_SQL``), so it is not a parameter.
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "on", "for", "with")
 
 #: BPE-ish word/number token pattern (dialect-portable: same meaning in
@@ -83,9 +82,9 @@ def distinct_shingles(df: DataFrame, n: int = 3, id_col: str = "doc_id") -> Data
     )
 
 
-def stopword_ratio(text: Column, stopwords: Sequence[str] = STOPWORDS) -> Column:
+def stopword_ratio(text: Column) -> Column:
     t = tokens(text)
-    stop_arr = F.array(*[F.lit(s) for s in stopwords])
+    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_stop = F.size(F.filter(t, lambda x: F.array_contains(stop_arr, x)))
     return n_stop.cast("double") / F.size(t)
 
@@ -297,7 +296,9 @@ def min_shingle_fingerprint(df: DataFrame, n: int = 3, id_col: str = "doc_id") -
 #: is kn/m ≈ 0.1 → false-positive rate ≈ 8e-4 — low enough to be a
 #: useful filter, high enough that false positives actually occur in
 #: the fixture corpus, so the oracle certifies the BLOOM (including
-#: its false positives), not exact membership.
+#: its false positives), not exact membership.  ``build_bloom`` takes a
+#: larger ``m`` for larger reference sets; ``bloom_probe`` reads m from
+#: the word array it is given.
 BLOOM_M = 32768
 BLOOM_K = 3
 
@@ -316,7 +317,6 @@ def build_bloom(
     values: DataFrame,
     col: str = "shingle",
     m: int = BLOOM_M,
-    k: int = BLOOM_K,
 ) -> list[int]:
     """Build an m-bit bloom filter over a value column, returned as
     m/64 longs.  One map + a ≤ m/64-row ``bit_or`` aggregate + a
@@ -327,7 +327,7 @@ def build_bloom(
     memory is O(m) regardless of how many reference values exist."""
     pos = values.select(
         F.explode(
-            F.array(*[bloom_position(F.col(col), j, m) for j in range(k)])
+            F.array(*[bloom_position(F.col(col), j, m) for j in range(BLOOM_K)])
         ).alias("pos")
     )
     words = (
@@ -349,11 +349,11 @@ def bloom_probe(
     df: DataFrame,
     col: str,
     bloom: list[int],
-    m: int = BLOOM_M,
-    k: int = BLOOM_K,
 ) -> DataFrame:
     """Append a boolean ``bloom_hit`` column: true iff ALL k bloom bits
-    of ``col`` are set.  The word array rides as a literal
+    of ``col`` are set.  The bit count m is ``64 * len(bloom)``, the
+    geometry :func:`build_bloom` gave the array, so a bloom built at any
+    m probes at that m and a member never reads as a miss.  The word array rides as a literal
     ``array<bigint>`` (~4 KB at the default geometry) and each bit
     test is one ``element_at & shiftleft`` expression — fully
     JVM-side, map-only, zero shuffle added to the probe scan.
@@ -367,9 +367,10 @@ def bloom_probe(
         raise ValueError(
             "bloom_probe: input already has a 'bloom_hit' column"
         )
+    m = 64 * len(bloom)
     words = F.array(*[F.lit(w).cast("long") for w in bloom])
     hit = None
-    for j in range(k):
+    for j in range(BLOOM_K):
         p = bloom_position(F.col(col), j, m)
         test = (
             F.element_at(words, F.floor(p / 64).cast("int") + 1).bitwiseAND(

@@ -42,13 +42,13 @@ def read_parquet_stream(
     spark: SparkSession,
     path: str,
     schema: str = EVENTS_STREAM_SCHEMA,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Unbounded stream over a directory of parquet files, one file per
-    micro-batch by default (modification-time order)."""
+    micro-batch (modification-time order): the stream-state tests and
+    the staged-source keys rely on that batch sequence."""
     return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
 

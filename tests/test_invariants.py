@@ -312,7 +312,7 @@ def test_stratified_sample_rates(spark):
 def test_connected_components_chain_and_islands(spark):
     """A 30-vertex path (worst-case diameter) plus a separate triangle
     and an isolated pair all collapse to min-id components — pointer
-    jumping must converge well under the max_iter cap."""
+    jumping must converge well under the round cap (dd.CC_MAX_ITER)."""
     edges = [(i, i + 1) for i in range(100, 129)]          # path, min=100
     edges += [(500, 501), (501, 502), (500, 502)]          # triangle, min=500
     edges += [(900, 901)]                                  # pair, min=900

@@ -99,6 +99,20 @@ def test_bloom_probe_is_map_only(spark):
     assert "Exchange" not in plan, plan
 
 
+def test_bloom_probe_reads_m_from_a_larger_bloom(spark):
+    """A bloom built at a non-default m probes at that m with no
+    geometry argument: the probe derives m from the word array, so
+    every member of a 65536-bit bloom hits (testing its bits mod 32768
+    would read some members as misses — a false negative)."""
+    members = spark.range(2000).select(
+        F.concat(F.lit("member "), F.col("id")).alias("shingle")
+    )
+    bloom = tx.build_bloom(members, m=65536)
+    assert len(bloom) == 65536 // 64
+    probed = tx.bloom_probe(members, "shingle", bloom)
+    assert probed.filter(~F.col("bloom_hit")).count() == 0
+
+
 def test_bloom_m_scaling_holds_fp_bound(spark):
     """The m-scaling rule (VERDICT r9 #3): geometry is sized by fill
     rate kn/m, so a real benchmark suite (more reference shingles)
@@ -122,7 +136,7 @@ def test_bloom_m_scaling_holds_fp_bound(spark):
         bloom = tx.build_bloom(members, m=m)
         assert len(bloom) == m // 64
         fp = (
-            tx.bloom_probe(probes, "shingle", bloom, m=m)
+            tx.bloom_probe(probes, "shingle", bloom)
             .filter("bloom_hit")
             .count()
         )
@@ -197,7 +211,9 @@ def test_minhash_incremental_admit_crafted_dups(spark):
     )
     admitted = sorted(
         r.doc_id
-        for r in dd.minhash_incremental_admit(batch, corpus, threshold=0.5).collect()
+        for r in dd.minhash_incremental_admit(
+            batch, dd.minhash_corpus_index(corpus), threshold=0.5
+        ).collect()
     )
     assert admitted == [102, 103]
 
