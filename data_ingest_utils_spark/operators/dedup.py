@@ -729,8 +729,8 @@ def simhash_band_candidates(
     Near-linear at scale — the self-join key is (band_idx,
     band_value), a 2^16-ary partition per band, so the pair space is
     Σ bucket² with hash-sized buckets, never n²; extra signatures add
-    bands WITHOUT changing per-band bucket sizes (the scale property that matters — background
-    collision rate stays 2^-16 per band).
+    bands WITHOUT changing per-band bucket sizes (the scale property
+    that matters — background collision rate stays 2^-16 per band).
 
     Recall geometry (quantified round 15, 8-band form LANDED round
     16): a pair whose shingle-set Jaccard is J has SimHash

@@ -353,10 +353,11 @@ def bloom_probe(
     """Append a boolean ``bloom_hit`` column: true iff ALL k bloom bits
     of ``col`` are set.  The bit count m is ``64 * len(bloom)``, the
     geometry :func:`build_bloom` gave the array, so a bloom built at any
-    m probes at that m and a member never reads as a miss.  The word array rides as a literal
-    ``array<bigint>`` (~4 KB at the default geometry) and each bit
-    test is one ``element_at & shiftleft`` expression — fully
-    JVM-side, map-only, zero shuffle added to the probe scan.
+    m probes at that m and a member never reads as a miss.  The word
+    array rides as a literal ``array<bigint>`` (~4 KB at the default
+    geometry) and each bit test is one ``element_at & shiftleft``
+    expression — fully JVM-side, map-only, zero shuffle added to the
+    probe scan.
 
     The bit tests are built as inline expressions (no intermediate
     ``withColumn`` helpers), so no input column can collide with

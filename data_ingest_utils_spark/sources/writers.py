@@ -58,9 +58,10 @@ def zorder16_nd(*qs):
     used by every lakehouse OPTIMIZE ZORDER).  Pure integer
     shifts/ORs, so any engine reproduces it bit-for-bit; for ``D == 2``
     it is the historical 32-bit two-column interleave (pinned in
-    tests), so the certified 2-col layouts are unchanged.  Coordinates must be quantized to :func:`zorder_bits`
-    (D) bits — 16 for D ≤ 3, 15 for D = 4 (sign-bit hazard; see
-    zorder_bits) — as :func:`zorder_write`'s quant stage guarantees.
+    tests), so the certified 2-col layouts are unchanged.  Coordinates
+    must be quantized to :func:`zorder_bits` (D) bits — 16 for D ≤ 3,
+    15 for D = 4 (sign-bit hazard; see zorder_bits) — as
+    :func:`zorder_write`'s quant stage guarantees.
     ``D`` is capped at 4 — beyond ~4 dims a Z-curve's per-file span
     bound degrades toward 1/n_files^(1/D) of each domain and a
     Hilbert curve or plain column stats serve better; fail loudly
