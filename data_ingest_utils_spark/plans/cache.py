@@ -11,9 +11,10 @@ build.
 
 - ``name`` says what the derivative is and carries its geometry
   (``pq_books_m32k16i2``);
-- ``source`` is :func:`table_fingerprint` of the source table, so a
-  regenerated source, even one with equal row counts, addresses a new
-  entry;
+- ``source`` is :func:`table_fingerprint` of the source table
+  (``sources.readers.path_fingerprint`` of its path, the key the
+  readers' schema memo uses too), so a regenerated source, even one
+  with equal row counts, addresses a new entry;
 - ``code`` is :func:`code_salt`, a digest of this package's sources,
   so any library edit rebuilds every cache once and a change to a
   producer's dependency, however indirect, is never missed.
@@ -43,6 +44,8 @@ import shutil
 import uuid
 from typing import Callable
 
+from data_ingest_utils_spark.sources.readers import path_fingerprint
+
 #: Scratch space for derived caches and sink/read-back round trips
 #: (NOT the read-only testdata tree).
 SCRATCH = os.environ.get("SPARK_GRAFT_SCRATCH", "/tmp/data_ingest_utils_spark")
@@ -51,23 +54,8 @@ _PKG_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def table_fingerprint(sf_dir: str, table: str) -> str:
-    """sha256 over a fixture table's absolute root plus every file's
-    (relpath, size, mtime_ns), for both single-file tables and
-    part-file directories.  Metadata-only: no file contents are read
-    and no Spark job runs."""
-    root = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
-    h = hashlib.sha256(root.encode())
-    if os.path.isdir(root):
-        for dirpath, dirnames, filenames in os.walk(root):
-            dirnames.sort()
-            for fn in sorted(filenames):
-                st = os.stat(os.path.join(dirpath, fn))
-                rel = os.path.relpath(os.path.join(dirpath, fn), root)
-                h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}".encode())
-    elif os.path.exists(root):
-        st = os.stat(root)
-        h.update(f"{st.st_size}|{st.st_mtime_ns}".encode())
-    return h.hexdigest()[:16]
+    """:func:`path_fingerprint` of the fixture table ``table``."""
+    return path_fingerprint(os.path.join(sf_dir, f"{table}.parquet"))
 
 
 @functools.cache

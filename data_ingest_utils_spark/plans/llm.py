@@ -28,7 +28,7 @@ from data_ingest_utils_spark.operators.relational import (
 )
 from data_ingest_utils_spark.plans.cache import SCRATCH, derived_cache
 from data_ingest_utils_spark.plans.registry import plan
-from data_ingest_utils_spark.sources.readers import load_table
+from data_ingest_utils_spark.sources.readers import load_table, read_parquet
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 
 # Derived from the single source the Spark side uses — editing
@@ -142,7 +142,7 @@ def _pq_codes_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
         packed.join(cells, "vec_id").select("vec_id", "cell", "_codes").write.parquet(out)
 
     name = f"pq_codes_m{PQ_M}k{PQ_K}i{PQ_ITERS}_c{IVF_CELLS}ci{IVF_ITERS}"
-    return spark.read.parquet(derived_cache(sf_dir, "embeddings", name, build))
+    return read_parquet(spark, derived_cache(sf_dir, "embeddings", name, build))
 
 
 def _minhash_corpus_index_cached(spark: SparkSession, sf_dir: str):
@@ -166,7 +166,7 @@ def _minhash_corpus_index_cached(spark: SparkSession, sf_dir: str):
     # them can never alias the old entry
     name = f"mh_idx_p{dd.MINHASH_PERM}b{dd.MINHASH_BANDS}n{dd.SHINGLE_N}"
     base = derived_cache(sf_dir, "documents", name, build)
-    return spark.read.parquet(f"{base}/hv"), spark.read.parquet(f"{base}/band")
+    return read_parquet(spark, f"{base}/hv"), read_parquet(spark, f"{base}/band")
 
 
 # ------------------------------------------------------------- dedup

@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 from data_ingest_utils_spark.plans.cache import SCRATCH, derived_cache
 from data_ingest_utils_spark.plans.money import money_sum, money_sum_sql
 from data_ingest_utils_spark.plans.registry import plan
-from data_ingest_utils_spark.sources.readers import load_table, read_csv, read_jsonl
+from data_ingest_utils_spark.sources.readers import (
+    load_table,
+    read_csv,
+    read_jsonl,
+    read_parquet,
+)
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 
 
@@ -187,7 +192,7 @@ def _ensure_zorder_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         zorder_write(li, out, "l_orderkey", "l_partkey", n_files=16)
 
-    return spark.read.parquet(derived_cache(sf_dir, "lineitem", ZORDER_CACHE, build))
+    return read_parquet(spark, derived_cache(sf_dir, "lineitem", ZORDER_CACHE, build))
 
 
 @plan(

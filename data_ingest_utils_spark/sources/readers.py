@@ -5,6 +5,11 @@ Scale notes (100 TB):
   pushdown to row groups / page index, and partition pruning in play —
   every downstream operator declares filters as Column exprs so they
   reach the scan.
+- A parquet read without a schema costs one Spark job that reads
+  footers to infer it, on every call.  :func:`read_parquet` memoizes
+  each path's inferred schema under its :func:`path_fingerprint`, so a
+  read of an unchanged input passes the known schema and runs no job;
+  a rewritten input changes the fingerprint and is inferred again.
 - Schema inference (CSV/JSON) samples the data and is a driver-side
   convenience for ingestion utilities; production loads at scale pass
   an explicit schema (supported by both helpers) so malformed rows
@@ -12,6 +17,9 @@ Scale notes (100 TB):
 """
 
 from __future__ import annotations
+
+import hashlib
+import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -47,6 +55,54 @@ _NS_TO_TS_NTZ = (
 )
 
 
+#: absolute path -> (path_fingerprint, inferred schema) of its last
+#: inferred read; in-process only, one entry per path.
+_SCHEMAS: dict[str, tuple[str, T.StructType]] = {}
+
+
+def path_fingerprint(path: str) -> str:
+    """sha256 over a parquet path's absolute root plus every file's
+    (relpath, size, mtime_ns), for both single files and part-file
+    directories.  Metadata-only: no file contents are read and no
+    Spark job runs."""
+    root = os.path.abspath(path)
+    h = hashlib.sha256(root.encode())
+    if os.path.isdir(root):
+        for dirpath, dirnames, filenames in os.walk(root):
+            dirnames.sort()
+            for fn in sorted(filenames):
+                st = os.stat(os.path.join(dirpath, fn))
+                rel = os.path.relpath(os.path.join(dirpath, fn), root)
+                h.update(f"{rel}|{st.st_size}|{st.st_mtime_ns}".encode())
+    elif os.path.exists(root):
+        st = os.stat(root)
+        h.update(f"{st.st_size}|{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:16]
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` without the schema-inference job
+    when the path's fingerprint equals the one its memoized schema was
+    inferred under.  A miss infers as Spark does and replaces the
+    path's entry; entries of paths that no longer exist are dropped
+    then too."""
+    key = os.path.abspath(path)
+    # Fingerprint BEFORE inferring: a rewrite racing the inference can
+    # only leave a stale fingerprint (a later miss), never a stale
+    # schema.  So every entry is self-consistent and concurrent callers
+    # need no lock: a lost update costs one more inference.
+    fp = path_fingerprint(key)
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fp:
+        return spark.read.schema(hit[1]).parquet(path)
+    for k in list(_SCHEMAS):
+        if k == key or not os.path.exists(k):
+            _SCHEMAS.pop(k, None)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = (fp, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table from ``{sf_dir}/{name}.parquet``.
 
@@ -54,7 +110,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     normalized in exactly one place.
     """
     ensure_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
         df = df.withColumn("ts", F.expr(_NS_TO_TS_NTZ.format(col="ts")))
     return df

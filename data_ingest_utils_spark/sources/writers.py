@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from data_ingest_utils_spark.sources.readers import read_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -33,8 +35,9 @@ def write_partitioned(
 
 
 def read_back(spark: SparkSession, path: str) -> DataFrame:
-    """Read a partitioned dataset back (partition columns from paths)."""
-    return spark.read.parquet(path)
+    """Read a partitioned dataset back (partition columns from paths,
+    last in the schema); an unchanged dataset's schema is memoized."""
+    return read_parquet(spark, path)
 
 
 def zorder_bits(d: int) -> int:
