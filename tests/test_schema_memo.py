@@ -69,6 +69,22 @@ def test_events_ts_still_normalized_from_memo(spark):
     assert _same_rows(df, fresh)
 
 
+def test_ns_events_ts_normalized_from_memo(spark, tmp_path):
+    """An events file storing ts as INT64 TIMESTAMP(NANOS) reads as raw
+    longs; the memoized schema keeps them LongType, so a served read
+    still converts them to TIMESTAMP_NTZ, truncating toward zero."""
+    ns = pa.array([-1500, 0, 1_700_000_000_123_456_789], pa.timestamp("ns"))
+    pq.write_table(pa.table({"event_id": [1, 2, 3], "ts": ns}), tmp_path / "events.parquet")
+    load_table(spark, str(tmp_path), "events")
+    df, n_jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    assert n_jobs == 0
+    assert isinstance(df.schema["ts"].dataType, T.TimestampNTZType)
+    us = df.orderBy("event_id").selectExpr(
+        "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) AS us"
+    )
+    assert [r.us for r in us.collect()] == [-1, 0, 1_700_000_000_123_456]
+
+
 def _write_file(path: str, cols: dict) -> None:
     pq.write_table(pa.table(cols), path)
 
