@@ -18,7 +18,7 @@ from data_ingest_utils_spark.sources import readers
 from data_ingest_utils_spark.sources.readers import TABLES, load_table
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 
-from .conftest import SF_T2
+from tests.conftest import SF_T2
 
 
 def _jobs(spark, fn):
@@ -154,14 +154,14 @@ def test_rewrites_keep_one_entry_per_path(spark, tmp_path):
     for i in range(4):
         _write_dir(spark, f"{sf}/t.parquet", [(i,)], f"c{i} long")
         assert load_table(spark, sf, "t").columns == [f"c{i}"]
-        assert [k for k in readers._SCHEMAS if k.startswith(sf)] == [key]
+        assert [k for k in readers._SCHEMAS if k.startswith(sf + os.sep)] == [key]
 
     _write_dir(spark, f"{sf}/scratch.parquet", [(1,)], "a long")
     load_table(spark, sf, "scratch")
     shutil.rmtree(f"{sf}/scratch.parquet")
     _write_dir(spark, f"{sf}/t.parquet", [(9,)], "z long")
     load_table(spark, sf, "t")
-    assert [k for k in readers._SCHEMAS if k.startswith(sf)] == [key]
+    assert [k for k in readers._SCHEMAS if k.startswith(sf + os.sep)] == [key]
 
 
 def test_read_back_round_trip_is_memoized(spark, tmp_path):
