@@ -184,8 +184,9 @@ def _spin(stop_t: float) -> None:
 
 
 def _loaded_steal_pct(seconds: float = 5.0) -> float | None:
-    """Steal percentage UNDER a full-core spin — the
-    tools/host_noise_probe.py measurement inline (this host's steal is
+    """Steal percentage UNDER a full-core spin — the measurement of the
+    retired host-noise probe (``git show 6d6278f:tools/host_noise_probe.py``)
+    inline (this host's steal is
     load-correlated: ~0% idle, 5-22% under load in bad windows, so an
     idle reading says nothing about a bench window)."""
     import multiprocessing as mp

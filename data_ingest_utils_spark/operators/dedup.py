@@ -548,7 +548,8 @@ def _resolve_broadcast_verify(
     gates eligibility.
 
     The distributed arm is EXECUTED, not just unit-forced (round 9,
-    VERDICT r8 #5): tools/broadcast_verify_ab.py runs both attach
+    VERDICT r8 #5): the A/B in ABCHECK_r09.json
+    (``git show 6d6278f:tools/broadcast_verify_ab.py``) ran both attach
     shapes under ``local-cluster[2,4,4096]`` — separate executor JVMs,
     netty shuffle/torrent broadcast over loopback — at sf1 with
     auto-broadcast disabled in the shuffle arm (the 100 TB simulation;
@@ -561,8 +562,8 @@ def _resolve_broadcast_verify(
     # local[N] / local[*] / local are single-JVM (no serialized
     # exchange to save); local-cluster[n,c,m] spawns REAL executor
     # JVMs with netty shuffle + broadcast over loopback — the
-    # distributed arm, and the harness tools/broadcast_verify_ab.py
-    # uses to exercise it (VERDICT r8 #5).
+    # distributed arm, which ABCHECK_r09.json exercised (VERDICT r8 #5;
+    # git show 6d6278f:tools/broadcast_verify_ab.py).
     if master.startswith("local") and not master.startswith("local-cluster"):
         return False
     max_docs = BROADCAST_VERIFY_MAX_DOCS

@@ -24,35 +24,4 @@ from data_ingest_utils_spark.plans import events  # noqa: E402,F401  (§2j)
 from data_ingest_utils_spark.plans import llm  # noqa: E402,F401  (§2k + brief extras)
 
 
-# ---------------------------------------------------------------------------
-# Driver CORRECTNESS window (round 8+): DERIVED, not hand-written.
-#
-# The driver grades only the FIRST 50 registry entries per round (observed:
-# every CORRECTNESS_r*.json truncates at exactly 50).  Rounds 4-7 rotated
-# keys into that window via hand-maintained _R{N}_WINDOW literals; the list
-# is now computed from the committed CORRECTNESS artifacts themselves —
-# stale-signal oracle keys first, then this round's declared output-changed
-# keys, then the oldest hash-greens as re-certification backfill.  Policy,
-# rationale, and the one remaining manual input (window.OUTPUT_CHANGED) live
-# in plans/window.py; tests/test_parity.py asserts the invariants
-# (first-50 == window, stale keys fronted, oracle-before-rows-only).
-# ---------------------------------------------------------------------------
-from data_ingest_utils_spark.plans.window import derive_window  # noqa: E402
-
-
-def _rotate_front(front: list[str]) -> None:
-    """Stable-reorder QUERIES/ORACLES so ``front`` occupies positions 1..n."""
-    for d in (QUERIES, ORACLES):
-        ordered = {k: d[k] for k in front if k in d}
-        ordered.update((k, v) for k, v in d.items() if k not in ordered)
-        d.clear()
-        d.update(ordered)
-
-
-#: The window the driver grades THIS round — tests assert against this
-#: alias so the window rule stays round-agnostic.
-_CURRENT_WINDOW = derive_window(QUERIES, ORACLES)
-
-_rotate_front(_CURRENT_WINDOW)
-
 __all__ = ["QUERIES", "ORACLES", "plan"]

@@ -35,14 +35,6 @@ from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 # text.STOPWORDS keeps the oracles in lockstep automatically.
 _STOP_SQL = "[" + ",".join(f"'{s}'" for s in tx.STOPWORDS) + "]"
 
-#: Sweep execution profile for keys with a distinct 100 TB formulation
-#: (llm_dedup_clusters).  "exact" = the driver-graded oracle-twin form;
-#: "scale" = the banded production path.  Assigned ONLY by
-#: tools/registry_sweep.py — a module flag, not an env var, so ambient
-#: process state can never change what the correctness driver grades.
-SWEEP_PROFILE = "exact"
-
-
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
     """Fetch ONE query vector (64 floats) — a driver-side literal, the
     deliberate single exception to the no-collect rule."""
@@ -1647,15 +1639,11 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     even this iterative algorithm is hash-checked exactly.
 
     The length-band candidate source is the deterministic ORACLE-TWIN
-    formulation (pure SQL arithmetic, hash-checkable); under the sweep
-    scale profile (module flag ``SWEEP_PROFILE``, set only by
-    tools/registry_sweep.py through an explicit assignment — never by
-    the driver, and deliberately NOT an env var so a stray exported
-    variable can't silently swap a hash-graded plan's formulation)
-    the SAME downstream component code runs off banded-MinHash
-    verified candidates instead, the declared 100 TB path
-    (near-linear candidate volume regardless of the corpus length
-    profile).
+    formulation (pure SQL arithmetic, hash-checkable).  The declared
+    100 TB path — banded-MinHash verified candidates into the SAME
+    ``connected_components`` code, near-linear candidate volume
+    regardless of the corpus length profile — runs end to end as
+    ``llm_dedup_minhash_e2e``.
 
     Like its pair-scoring sibling llm_dedup_ngram_jaccard, the exact
     oracle-twin form is certified on a corpus-size-ADAPTIVE doc_id
@@ -1665,15 +1653,11 @@ def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     past 10 k docs so the ~sf1.0 recursive-CTE oracle stays
     DuckDB-feasible): bounds the within-block pair space while still
     hash-certifying the full candidates → verify →
-    pointer-jumping-components pipeline.  The scale-profile banded
-    form stays full-corpus — it has no quadratic stage to bound."""
+    pointer-jumping-components pipeline."""
     docs = load_table(spark, sf_dir, "documents")
-    if SWEEP_PROFILE == "scale":
-        pairs = dd.minhash_jaccard_verified(docs, threshold=0.1)
-    else:
-        pairs = dd.ngram_jaccard_length_blocked(
-            _demo_slice(docs), n=3, threshold=0.1
-        )
+    pairs = dd.ngram_jaccard_length_blocked(
+        _demo_slice(docs), n=3, threshold=0.1
+    )
     return dd.connected_components(pairs).select(
         F.col("v").alias("doc_id"), "component"
     )

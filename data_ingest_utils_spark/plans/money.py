@@ -47,7 +47,8 @@ to "round half-up of the sum of 1e-6-quantized terms" — a deliberate
 redefinition (quantization drift is < 1e-3 cents even over 1e7 rows,
 and the OLD semantics were not a function of the data at all once the
 sum outgrew the rounding grid).  Every key that switches is appended
-to window.OUTPUT_CHANGED so the driver re-grades the new form.
+to ``OUTPUT_CHANGED`` in the repo-root driver_window.py so the driver
+re-grades the new form.
 
 100 TB: the quantize-and-integer-sum runs entirely in whole-stage
 codegen (floor/cast/decimal-sum are Catalyst built-ins with map-side

@@ -133,8 +133,9 @@ def sink_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping serves predicates on either or both — the footer-span
     property is asserted in tests/test_invariants.py, the box
     filter's scan pushdown in tests/test_explain.py, and the MEASURED
-    pruning benefit vs a 1-D-sorted twin in tools/zorder_prune_ab.py
-    (BASELINE.md round-15 block).
+    pruning benefit vs a 1-D-sorted twin in ZORDER_AB_r15.json
+    (BASELINE.md round-15 block; the retired harness is
+    ``git show 6d6278f:tools/zorder_prune_ab.py``).
 
     The oracle runs the box aggregate AND a full-table
     count + money-sum on the SOURCE table, all against the read-back
@@ -182,8 +183,9 @@ ZORDER_CACHE = "zorder_lineitem_f16"
 def _ensure_zorder_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 16-file z-ordered lineitem layout, a derived cache
     (plans/cache.py) shared by sink_zorder_cluster (round-trip
-    certificate) and scan_zorder_pruned (read-path grade), and reused
-    by tools/zorder_prune_ab.py."""
+    certificate) and scan_zorder_pruned (read-path grade).  The pruning
+    A/B that measured it is ZORDER_AB_r15.json
+    (``git show 6d6278f:tools/zorder_prune_ab.py``)."""
     from data_ingest_utils_spark.sources.writers import zorder_write
 
     def build(out: str) -> None:

@@ -25,12 +25,14 @@ from pyspark.sql import SparkSession
 #: SQL confs required for correctness, applied to ANY session we are
 #: handed (all runtime-settable).
 _RUNTIME_CONFS = {
-    # The driver-generated events.parquet stores ts as INT64
-    # TIMESTAMP(NANOS), which Spark's vectorized reader refuses
-    # (PARQUET_TYPE_ILLEGAL).  With this legacy conf Spark reads the
-    # raw int64 nanoseconds as LongType; sources.readers converts to
-    # TIMESTAMP_NTZ microseconds (matching DuckDB's read of the same
-    # file bit-for-bit — verified).
+    # The fixture events.parquet files (sf0.001, sf0.01, sf0.1) store
+    # ts as INT64 TIMESTAMP(MICROS), not UTC-adjusted: pyarrow reads
+    # timestamp[us] and Spark reads TIMESTAMP_NTZ, with or without
+    # this conf.  An events file that stores ts as TIMESTAMP(NANOS) is
+    # refused by Spark's vectorized reader (PARQUET_TYPE_ILLEGAL);
+    # with this legacy conf Spark reads its raw int64 nanoseconds as
+    # LongType, and sources.readers converts them to TIMESTAMP_NTZ
+    # microseconds (matching DuckDB's read of the same file).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # AQE: runtime shuffle-partition coalescing, skew-join splitting,
     # sort-merge→broadcast conversion.  Default-on in Spark 4; pinned

@@ -42,8 +42,10 @@ TABLES = (
     "embeddings",
 )
 
-# events.ts arrives as raw int64 nanoseconds (see session._RUNTIME_CONFS);
-# convert to TIMESTAMP_NTZ at microsecond precision, anchored at the
+# An events.ts stored as INT64 TIMESTAMP(NANOS) arrives as raw int64
+# nanoseconds (see session._RUNTIME_CONFS; the fixtures store
+# microseconds, which Spark reads as TIMESTAMP_NTZ directly): convert
+# it to TIMESTAMP_NTZ at microsecond precision, anchored at the
 # epoch with timestampadd so the conversion is independent of the
 # session time zone.  `div` truncates toward zero, NOT floor — that is
 # deliberate: DuckDB's ns-parquet read does the same (probed round 7:

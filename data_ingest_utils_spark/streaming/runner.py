@@ -186,53 +186,14 @@ def _waits_on_watermark(df: DataFrame, output_mode: str) -> bool:
     return False
 
 
+#: recentProgress is a ring buffer capped at this conf (default 100): a
+#: >100-file source under maxFilesPerTrigger=1 would silently drop the
+#: early micro-batches' metrics and undercount
+#: numRowsDroppedByWatermark sums.  Drains raise it for their own
+#: query only (the conf is read at query start): leaving it raised
+#: would make every later streaming query on the session retain up to
+#: 10000 progress objects.
 _PROGRESS_CAP = "spark.sql.streaming.numRecentProgressUpdates"
-_CAP_LOCK = threading.Lock()
-_CAP_DEPTH = 0
-_CAP_PRIOR: str | None = None
-
-
-@contextlib.contextmanager
-def _progress_cap_scope(conf):
-    """Refcounted scope for the progress-cap raise.
-
-    recentProgress is a ring buffer capped at
-    spark.sql.streaming.numRecentProgressUpdates (default 100): a
-    >100-file source under maxFilesPerTrigger=1 would silently drop
-    the EARLY micro-batches' metrics and undercount
-    numRowsDroppedByWatermark sums, so drains raise the cap before the
-    query starts (the conf is read at query start) and restore it
-    after — leaving it raised would make every later streaming query
-    on the shared session retain up to 10000 progress objects (ADVICE
-    r7: slow leak in long-lived sessions).
-
-    The refcount + lock make the save/set/restore safe under
-    CONCURRENT drains on one session (a plain read-modify-restore
-    pair can strand the 10000 cap, or restore the default mid-drain
-    and undercount a sibling — round-8 review): the FIRST scope in
-    saves the prior value, the LAST one out restores it, and every
-    nested/overlapping drain inside just rides the raised cap.
-    Python-side only — out-of-process writers to the same conf are
-    outside its reach, like any session conf.
-    """
-    global _CAP_DEPTH, _CAP_PRIOR
-    with _CAP_LOCK:
-        if _CAP_DEPTH == 0:
-            _CAP_PRIOR = conf.get(_PROGRESS_CAP, None)
-            conf.set(_PROGRESS_CAP, "10000")
-        _CAP_DEPTH += 1
-    try:
-        yield
-    finally:
-        with _CAP_LOCK:
-            _CAP_DEPTH -= 1
-            if _CAP_DEPTH == 0:
-                if _CAP_PRIOR is None:
-                    conf.unset(_PROGRESS_CAP)
-                else:
-                    conf.set(_PROGRESS_CAP, _CAP_PRIOR)
-
-
 _SPS_KEY = "spark.sql.shuffle.partitions"
 _ND_KEY = "spark.sql.streaming.noDataMicroBatches.enabled"
 _SPS_LOCK = threading.Lock()
@@ -282,11 +243,15 @@ def _session_conf_scope(spark: SparkSession, conf_key: str, value: str):
     """Scoped session-conf override with stacked, refcounted
     save/restore — the leak-proofing documented on
     :func:`state_partitions_scope`, factored out (round 17) so any
-    drain-scoped conf (shuffle partitions, no-data micro-batches)
-    shares ONE correct implementation instead of drifted copies.
+    drain-scoped conf (shuffle partitions, no-data micro-batches, the
+    progress cap) shares ONE correct implementation instead of drifted
+    copies.
     Within a (session, conf_key) the FIRST scope in saves the session
     value, the LAST one out restores it; each exit re-asserts the most
-    recent still-active scope's value for well-nested use."""
+    recent still-active scope's value for well-nested use.  A conf the
+    session never set is unset again on the way out: ``conf.get(key)``
+    would return Spark's default, and restoring that would leave the
+    key explicitly set after every drain."""
     conf = spark.conf
     token = object()
     key = (_session_key(spark), conf_key)
@@ -294,7 +259,7 @@ def _session_conf_scope(spark: SparkSession, conf_key: str, value: str):
         state = _SPS_STATE.get(key)
         if state is None:
             state = _SPS_STATE[key] = {
-                "prior": conf.get(conf_key),
+                "prior": conf.get(conf_key, None),
                 "active": [],
             }
         state["active"].append((token, str(value)))
@@ -312,7 +277,10 @@ def _session_conf_scope(spark: SparkSession, conf_key: str, value: str):
             if active:
                 conf.set(conf_key, active[-1][1])
             else:
-                conf.set(conf_key, state["prior"])
+                if state["prior"] is None:
+                    conf.unset(conf_key)
+                else:
+                    conf.set(conf_key, state["prior"])
                 del _SPS_STATE[key]
 
 
@@ -371,7 +339,7 @@ def drain_available_now(
     """
     checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     query = None
-    with _progress_cap_scope(df.sparkSession.conf):
+    with _session_conf_scope(df.sparkSession, _PROGRESS_CAP, "10000"):
         try:
             query = (
                 configure(df.writeStream)

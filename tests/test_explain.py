@@ -482,42 +482,6 @@ def test_skew_stress_single_scan_one_join(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_clusters_scale_profile_swaps_candidate_source(spark, monkeypatch):
-    """The sweep's scale profile (llm.SWEEP_PROFILE module flag, set
-    only by tools/registry_sweep.py — deliberately NOT an env var, so
-    ambient process state can't swap a hash-graded formulation) must
-    swap llm_dedup_clusters' candidate source from the length-band
-    oracle-twin to banded-MinHash verified pairs — same downstream
-    component code.  The components loop runs eagerly at plan-call
-    time (localCheckpoint), so the final plan can't show the source;
-    record which candidate operator the branch actually invokes."""
-    from data_ingest_utils_spark.plans import llm as llm_plans
-
-    calls: list[str] = []
-    real_banded = llm_plans.dd.minhash_jaccard_verified
-    real_exact = llm_plans.dd.ngram_jaccard_length_blocked
-
-    def rec(name, fn):
-        def wrapper(*a, **kw):
-            calls.append(name)
-            return fn(*a, **kw)
-        return wrapper
-
-    monkeypatch.setattr(llm_plans.dd, "minhash_jaccard_verified",
-                        rec("banded", real_banded))
-    monkeypatch.setattr(llm_plans.dd, "ngram_jaccard_length_blocked",
-                        rec("exact", real_exact))
-
-    # an exported env var must NOT flip the graded formulation
-    monkeypatch.setenv("SPARK_GRAFT_SWEEP_PROFILE", "scale")
-    QUERIES["llm_dedup_clusters"](spark, SF_T2)
-    assert calls == ["exact"]
-
-    monkeypatch.setattr(llm_plans, "SWEEP_PROFILE", "scale")
-    QUERIES["llm_dedup_clusters"](spark, SF_T2)
-    assert calls == ["exact", "banded"]
-
-
 @pytest.mark.parametrize(
     "key", ["llm_image_decode", "llm_audio_decode", "llm_video_decode"]
 )

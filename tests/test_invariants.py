@@ -1390,8 +1390,8 @@ def test_verify_broadcast_auto_gate(spark, monkeypatch):
     cluster = "spark://host:7077"
     # local-cluster spawns real executor JVMs (netty shuffle/torrent
     # broadcast over loopback) — the DISTRIBUTED arm, despite the
-    # "local" prefix; tools/broadcast_verify_ab.py executes it for
-    # real (ABCHECK_r09.json)
+    # "local" prefix; ABCHECK_r09.json executed it for real
+    # (git show 6d6278f:tools/broadcast_verify_ab.py)
     lc = "local-cluster[2,4,4096]"
     monkeypatch.setattr(dd, "BROADCAST_VERIFY_MAX_DOCS", 100)
     # this suite runs on local[*]: resolves to shuffle

@@ -73,15 +73,19 @@ def _driver_rows():
 
 
 def test_correctness_window_shape():
-    """The driver grades only the first 50 registry entries per round;
-    the current window fronts never-hash-graded oracle keys, then the
-    longest-ungraded greens as re-certification, with rows-only keys
-    parked at the tail (weakest signal lost first on truncation)."""
-    from data_ingest_utils_spark import plans
+    """The driver grades only the first 50 entries of
+    ``__spark_entry__.queries()`` per round; the current window fronts
+    never-hash-graded oracle keys, then the longest-ungraded greens as
+    re-certification, with rows-only keys parked at the tail (weakest
+    signal lost first on truncation)."""
+    import __spark_entry__ as entry
 
-    first50 = list(QUERIES)[:50]
-    assert first50 == plans._CURRENT_WINDOW
-    assert len(plans._CURRENT_WINDOW) == 50
+    first50 = list(entry.queries())[:50]
+    assert first50 == entry.WINDOW
+    assert len(entry.WINDOW) == 50
+    assert list(entry.oracle_sql()) == [
+        k for k in entry.queries() if k in ORACLES
+    ]
     # Oracle-backed keys precede every rows-only key so a truncated run
     # loses the weaker signal first — EXCEPT never-graded rows-only
     # keys, which front once so every registry key accrues at least one
@@ -104,7 +108,7 @@ def test_window_fronts_every_stale_hash_signal():
     failure, or oracle added after its last driver row) must sit in
     the first 10 window positions — graded the round it lands.
     Round-agnostic: merges every committed CORRECTNESS artifact."""
-    from data_ingest_utils_spark import plans
+    import __spark_entry__ as entry
 
     rows = _driver_rows()
     if not rows:
@@ -113,7 +117,7 @@ def test_window_fronts_every_stale_hash_signal():
         k for k in ORACLES
         if not (rows.get(k) or {}).get("hash_match")
     }
-    front = set(plans._CURRENT_WINDOW[:10])
+    front = set(entry.WINDOW[:10])
     assert stale <= front, f"stale-signal keys not fronted: {sorted(stale - front)}"
 
 
@@ -123,7 +127,7 @@ def test_window_derivation_policy():
     follow, and backfill is oldest-green-first — exercised on a
     synthetic history so the policy itself is pinned, not just this
     round's instance of it."""
-    from data_ingest_utils_spark.plans.window import derive_window
+    from driver_window import derive_window
 
     queries = {k: None for k in ["a", "b", "c", "d", "e", "f"]}
     oracles = {k: "sql" for k in ["a", "b", "c", "d", "e"]}  # f rows-only
@@ -190,7 +194,7 @@ def test_window_rotation_tail_multi_slot():
     displacing the NEWEST backfill greens, never the oldest green and
     never fronted signal.  At one slot/round the 12-key rows-only
     class refreshed every ~12 rounds; four slots bound it at ~3."""
-    from data_ingest_utils_spark.plans.window import derive_window
+    from driver_window import derive_window
 
     queries = {k: None for k in
                ["g1", "g2", "g3", "g4", "g5", "g6",
@@ -247,9 +251,8 @@ def test_window_output_changed_consumed():
     every NOT-yet-repruned entry (no hash-green at/after its declared
     round) sits in the fronted region — a typo'd key would otherwise
     be silently dropped by the derivation."""
-    from data_ingest_utils_spark import plans
-    from data_ingest_utils_spark.plans.window import OUTPUT_CHANGED
-    from data_ingest_utils_spark.plans.window import load_driver_history
+    import __spark_entry__ as entry
+    from driver_window import OUTPUT_CHANGED, load_driver_history
 
     missing = [k for k, _ in OUTPUT_CHANGED if k not in QUERIES]
     assert not missing, f"OUTPUT_CHANGED keys not in registry: {missing}"
@@ -258,9 +261,57 @@ def test_window_output_changed_consumed():
         k for k, declared in OUTPUT_CHANGED
         if ((history.get(k) or {}).get("green_round") or -1) < declared
     ]
-    front = plans._CURRENT_WINDOW[:10 + len(pending)]
+    front = entry.WINDOW[:10 + len(pending)]
     not_fronted = [k for k in pending if k not in front]
     assert not not_fronted, f"output-changed keys not fronted: {not_fronted}"
+
+
+def test_plans_import_reads_no_driver_artifacts():
+    """Importing the engine's plans opens no driver CORRECTNESS artifact
+    (the window is ``__spark_entry__``'s concern alone) and leaves
+    ``QUERIES`` in registration order: the plan modules in the order
+    ``plans/__init__.py`` imports them, each in source-line order.
+    Checked in a fresh interpreter under an audit hook, so no earlier
+    import in this process can hide a read."""
+    import ast
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from data_ingest_utils_spark import plans
+
+    code = (
+        "import json, sys\n"
+        "opened = []\n"
+        "def hook(event, args):\n"
+        "    if event == 'open' and 'CORRECTNESS_r' in str(args[0]):\n"
+        "        opened.append(str(args[0]))\n"
+        "sys.addaudithook(hook)\n"
+        "from data_ingest_utils_spark.plans import QUERIES\n"
+        "print(json.dumps({'opened': opened, 'keys': list(QUERIES)}))\n"
+    )
+    repo = Path(__file__).resolve().parent.parent
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=repo, capture_output=True,
+        text=True, timeout=120, check=True,
+    )
+    seen = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert seen["opened"] == []
+
+    tree = ast.parse(Path(plans.__file__).read_text())
+    modules = [
+        f"{node.module}.{alias.name}"
+        for node in tree.body
+        if isinstance(node, ast.ImportFrom) and node.module == plans.__name__
+        for alias in node.names
+    ]
+
+    def origin(key):
+        fn = QUERIES[key]
+        return modules.index(fn.__module__), fn.__code__.co_firstlineno
+
+    assert seen["keys"] == sorted(QUERIES, key=origin)
 
 
 def test_probe_oracles_are_wellformed():

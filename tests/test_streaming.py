@@ -715,6 +715,23 @@ def test_run_available_now_start_failure_restores_session(spark):
     assert set(glob.glob("/tmp/ckpt_failmode_*")) == ckpts_before
 
 
+def test_drain_unsets_confs_the_session_never_set(spark, tmp_path):
+    """A drain scopes its no-data-batch and progress-cap confs to its
+    own query: on a session that never set them, both are unset again
+    afterwards instead of pinned to the value Spark defaults to."""
+    keys = (
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+        "spark.sql.streaming.numRecentProgressUpdates",
+    )
+    for key in keys:
+        spark.conf.unset(key)
+    src = _write_batches(
+        str(tmp_path), [[(1, "2024-01-01 10:00:00", 1, "click", 1.0)]]
+    )
+    run_available_now(read_parquet_stream(spark, src), "conf_unset")
+    assert [spark.conf.get(key, None) for key in keys] == [None, None]
+
+
 def test_state_partitions_scope_restores_and_nests(spark):
     """state_partitions_scope must set shuffle partitions for exactly
     its body — nested scopes win innermost-first and every exit path

@@ -59,6 +59,9 @@ def _strided(df: DataFrame, n: int, strides: dict[str, int]) -> DataFrame:
 
 
 def main() -> int:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return 0
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     dst = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scale/sf1.0"
     n = int(sys.argv[3]) if len(sys.argv) > 3 else 10

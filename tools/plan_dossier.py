@@ -73,6 +73,9 @@ NOTES = {
 
 
 def main() -> None:
+    if {"-h", "--help"} & set(sys.argv[1:]):
+        print(__doc__)
+        return
     from bench import HEADLINE, HEAVY_SF1  # noqa: F401 (bench query lists)
     from data_ingest_utils_spark.plans import QUERIES
     from data_ingest_utils_spark.session import get_session

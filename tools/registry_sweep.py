@@ -6,21 +6,11 @@ one shared SparkSession, each key materialized through the noop sink
 (full distributed execution, no driver row transfer), per-key wall
 time, one JSON summary line on stdout.
 
-Profiles (``--profile`` / ``SPARK_GRAFT_SWEEP_PROFILE``):
-
-- ``exact`` (default): every key exactly as the driver grades it —
-  including the handful whose registry form is a quadratic ORACLE-TWIN
-  formulation (llm_dedup_clusters' τ=0.1 length-band blocking) kept
-  hash-checkable on purpose.
-- ``scale``: those keys switch to their declared 100 TB candidate
-  source (banded MinHash feeding the SAME downstream component code),
-  so the sweep demonstrates the production path end-to-end.  The
-  driver never sees this profile — correctness grading always runs
-  the exact form.
+Every key runs exactly as the driver grades it.
 
 Usage::
 
-    python tools/registry_sweep.py [--profile scale] [--sf DIR] [--keys k1,k2]
+    python tools/registry_sweep.py [--sf DIR] [--keys k1,k2] [--master URL]
 """
 
 from __future__ import annotations
@@ -34,13 +24,6 @@ import time
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument(
-        "--profile",
-        choices=["exact", "scale"],
-        # the env var is the documented fallback for the flag — the
-        # flag wins when both are given
-        default=os.environ.get("SPARK_GRAFT_SWEEP_PROFILE", "exact"),
-    )
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--keys", default="", help="comma-separated subset (default: all)")
     ap.add_argument(
@@ -60,27 +43,8 @@ def main() -> int:
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from data_ingest_utils_spark.plans import QUERIES, llm
+    from data_ingest_utils_spark.plans import QUERIES
     from data_ingest_utils_spark.session import get_session
-
-    # Explicit module-flag assignment — the ONLY place the profile is
-    # threaded into plan bodies (never ambient env: a stray exported
-    # var must not change what the correctness driver grades).  The
-    # --profile flag does default from SPARK_GRAFT_SWEEP_PROFILE, so
-    # make the resolved value AND its source visible in the sweep's
-    # stderr (ADVICE r7): an env-derived 'scale' run must never read
-    # as an exact-profile sweep.
-    src = (
-        "--profile flag"
-        if any(a.startswith("--profile") for a in sys.argv[1:])
-        else (
-            "SPARK_GRAFT_SWEEP_PROFILE env"
-            if "SPARK_GRAFT_SWEEP_PROFILE" in os.environ
-            else "default"
-        )
-    )
-    print(f"sweep: profile={args.profile} (from {src})", file=sys.stderr)
-    llm.SWEEP_PROFILE = args.profile
 
     keys = [k for k in args.keys.split(",") if k] or list(QUERIES)
     unknown = [k for k in keys if k not in QUERIES]
@@ -115,7 +79,7 @@ def main() -> int:
     # 7.96 s cold vs 0.89 s warm).  One cheap untimed scan retires
     # those costs so every recorded per-key number is a real key cost.
     # Two cheap keys, one per fixture family: scan_parquet (lineitem
-    # read path) and evt_tumbling (events nanos→timestamp read +
+    # read path) and evt_tumbling (events timestamp read +
     # window machinery) — the r16 first pass with scan_parquet alone
     # still left ~4 s of events-side cold cost on whatever key graded
     # first.
@@ -149,7 +113,6 @@ def main() -> int:
 
     slowest = sorted(timings.items(), key=lambda kv: -kv[1])[:12]
     payload = {
-        "profile": args.profile,
         "warmup": "scan_parquet + evt_tumbling (untimed first jobs, round 16)",
         "master": spark.sparkContext.master,
         "sf_dir": args.sf,
