@@ -35,6 +35,7 @@ from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 # text.STOPWORDS keeps the oracles in lockstep automatically.
 _STOP_SQL = "[" + ",".join(f"'{s}'" for s in tx.STOPWORDS) + "]"
 
+
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
     """Fetch ONE query vector (64 floats) — a driver-side literal, the
     deliberate single exception to the no-collect rule."""
