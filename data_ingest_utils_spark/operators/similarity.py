@@ -839,8 +839,6 @@ def _checked_queries(
 
 #: ``array<double>``, the query-vector type every rung's literal carries
 _VEC = T.ArrayType(T.DoubleType())
-#: ``array<array<array<double>>>``, an m × k × ds PQ codebook tensor
-_BOOKS = T.ArrayType(T.ArrayType(_VEC))
 
 
 def _plan_literal(value, dtype: T.DataType) -> Column:
@@ -853,8 +851,8 @@ def _plan_literal(value, dtype: T.DataType) -> Column:
     arrays grow the plan with every number and slow planning
     accordingly), and Python's float ``repr`` round-trips every double
     exactly.  The literal travels in each task's closure, so it suits
-    payloads of modest total size, such as a PQ codebook tensor or a
-    query batch (measured up to 256 queries × 64 dims)."""
+    payloads of modest total size, such as a query batch and its PQ
+    lookup tables (measured up to 256 queries × 64 dims)."""
     return F.from_json(F.lit(json.dumps(value)), dtype)
 
 
@@ -992,45 +990,152 @@ def _pq_unit_base(
     return df.filter(norm > 0).select(id_col, unit.alias("_uv"))
 
 
-def _pq_subvectors(base: DataFrame, m: int, dim: int, id_col: str) -> DataFrame:
-    """Explode ``(id, _uv)`` into the ``(id, _sub, _sv)`` per-subspace
-    frame all PQ stages run over."""
-    ds = dim // m
-    return base.select(
-        id_col,
-        F.posexplode(
-            F.array(*[F.slice("_uv", j * ds + 1, ds) for j in range(m)])
-        ).alias("_sub", "_sv"),
-    )
+def _vec_matrix(vecs, dim: int):
+    """``(null, degenerate, rows)`` of the Arrow list column ``vecs``
+    read against a ``dim``-double model: the NULL-vector mask, the
+    mask of rows no model can place (NULL, length ≠ ``dim``, or a NULL
+    element), and ``rows(idx)``, those rows' ``(len(idx), dim)``
+    float64 matrix (float32 → float64 is the Catalyst path's exact
+    widening).  Offsets come from ``list_value_length`` /
+    ``list_flatten``, so sliced record batches stay correct."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    null = pc.is_null(vecs).to_numpy(zero_copy_only=False)
+    lens = pc.list_value_length(vecs).fill_null(-1).to_numpy(
+        zero_copy_only=False
+    ).astype(np.int64)
+    flat = pc.list_flatten(vecs)
+    elem_null_flat = pc.is_null(flat).to_numpy(zero_copy_only=False)
+    vals_flat = flat.fill_null(0).to_numpy(zero_copy_only=False)
+    starts = np.zeros(len(vecs) + 1, dtype=np.int64)
+    np.cumsum(np.where(lens < 0, 0, lens), out=starts[1:])
+    # per-row null-element counts via prefix-sum differences — robust
+    # to empty/NULL rows anywhere (np.add.reduceat mishandles empty
+    # segments and raises on trailing ones)
+    cs = np.zeros(starts[-1] + 1, dtype=np.int64)
+    np.cumsum(elem_null_flat.astype(np.int64), out=cs[1:])
+    elem_null_rows = cs[starts[1:]] - cs[starts[:-1]]
+    degenerate = null | (lens != dim) | (elem_null_rows > 0)
+
+    def rows(idx):
+        gather = (starts[idx][:, None] + np.arange(dim)[None, :]).ravel()
+        return vals_flat[gather].astype(np.float64).reshape(-1, dim)
+
+    return null, degenerate, rows
 
 
-def _pq_encode(sub: DataFrame, books: list[list[list[float]]], id_col: str) -> DataFrame:
-    """Assign each subvector its nearest-codeword index: the codebook
-    tensor rides as one folded literal (:func:`_plan_literal` — plan
-    constant-size in k), argmin ties go to the lower code via the
-    (d, index) struct ordering."""
-    book = F.element_at(_plan_literal(books, _BOOKS), F.col("_sub") + 1)
-    code = _nearest_code(F.col("_sv"), book)
-    return sub.select(id_col, "_sub", "_sv", code.alias("_code"))
+def _nearest(M, C):
+    """``(idx, sq_dist)``: each row of the float64 matrix ``M``'s
+    nearest row of ``C`` by squared L2 — the ONE nearest-centroid
+    argmin of k-means cells, Lloyd updates and PQ codes.  It
+    reproduces the Catalyst argmin ``array_min(transform(C, (c, i) ->
+    struct(aggregate(zip_with(v, c, (a, b) -> (a - b) * (a - b)), 0.0,
+    (acc, x) -> acc + x), i)))`` operation for operation, so indices
+    AND distance doubles are identical (pinned by the literal-form
+    tests in tests/test_invariants.py)."""
+    import numpy as np
+
+    best_d = None
+    best_c = np.zeros(len(M), dtype=np.int32)
+    for c in range(len(C)):
+        diff = M - C[c]
+        sqd = diff * diff
+        # strictly sequential left-fold over dims — the exact
+        # accumulation order of aggregate(..., 0.0, (acc, x) -> acc + x)
+        acc = sqd[:, 0].copy()
+        for i in range(1, M.shape[1]):
+            acc += sqd[:, i]
+        if best_d is None:
+            best_d = acc
+        else:
+            # Spark struct-min semantics: NaN is LARGER than every
+            # double, ties keep the lower index
+            better = (acc < best_d) | (np.isnan(best_d) & ~np.isnan(acc))
+            best_d = np.where(better, acc, best_d)
+            best_c = np.where(better, c, best_c)
+    return best_c, best_d
 
 
-def _nearest_code(sv: Column, book: Column) -> Column:
-    """Index of ``book``'s codeword nearest the subvector ``sv`` by
-    squared L2, ties to the lower index via the (d, index) struct
-    ordering."""
-    return F.array_min(
-        F.transform(
-            book,
-            lambda cv, i: F.struct(
-                F.aggregate(
-                    F.zip_with(sv, cv, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ).alias("d"),
-                i.alias("c"),
-            ),
+def _lloyd_pass(
+    base: DataFrame, vec_col: str, books: list[list[list[float]]]
+) -> tuple[list[list[list[float]]], float]:
+    """One Lloyd iteration in ONE action: assign each ``base[vec_col]``
+    vector to its :func:`_nearest` codeword in every subspace of the
+    m × k × ds ``books`` (m = 1 for k-means), then average per
+    codeword.  Returns the new books and the pass's SSE.
+
+    A ``mapInArrow`` kernel emits per-task ``(sub, cell, n, sum,
+    sse)`` partials; the driver merges the one ``collect`` in
+    partition order and divides.  Each task sums its rows in row order
+    from 0.0, as Spark's partial ``avg`` does, and every mean rounds
+    to 12 dp: that absorbs the ulps (~1e-16 on unit vectors) another
+    partitioning moves a raw mean by, which could flip a code on an
+    exact near-tie, and sits ~1e6× below any real distance margin
+    (ADVICE r11).  An empty cell keeps its codeword; a NULL vector adds
+    nothing; a ragged or NULL-element vector raises ``ValueError``
+    (the kernel counts them in a ``sub = -1`` row)."""
+    m, k, ds = len(books), len(books[0]), len(books[0][0])
+
+    def partials(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        B = np.asarray(books, dtype=np.float64)
+        n = np.zeros((m, k), dtype=np.int64)
+        sums = np.zeros((m, k, ds))
+        sse = np.zeros((m, k))
+        bad = 0
+        for batch in batches:
+            null, degenerate, rows = _vec_matrix(batch.column(0), m * ds)
+            bad += int((degenerate & ~null).sum())
+            M = rows(np.nonzero(~degenerate)[0])
+            for j in range(m):
+                sub = M[:, j * ds : (j + 1) * ds]
+                idx, d = _nearest(sub, B[j])
+                n[j] += np.bincount(idx, minlength=k)
+                # unbuffered np.add.at adds in row order
+                np.add.at(sums[j], idx, sub)
+                np.add.at(sse[j], idx, d)
+
+        def rows_of(sub, cell, cnt, vec_sums, sq):
+            offsets = np.arange(0, len(cnt) * ds + 1, ds, dtype=np.int32)
+            return pa.RecordBatch.from_arrays(
+                [
+                    pa.array(sub, type=pa.int32()),
+                    pa.array(cell, type=pa.int32()),
+                    pa.array(cnt, type=pa.int64()),
+                    pa.ListArray.from_arrays(offsets, pa.array(vec_sums.ravel())),
+                    pa.array(sq, type=pa.float64()),
+                ],
+                names=["sub", "cell", "n", "sum", "sse"],
+            )
+
+        j, c = np.nonzero(n)
+        yield rows_of(j, c, n[j, c], sums[j, c], sse[j, c])
+        if bad:
+            yield rows_of([-1], [-1], [bad], np.zeros(ds), [0.0])
+
+    schema = "sub int, cell int, n long, sum array<double>, sse double"
+    parts = base.select(vec_col).mapInArrow(partials, schema).collect()
+    bad = sum(r["n"] for r in parts if r["sub"] < 0)
+    if bad:
+        raise ValueError(
+            f"{bad} input vectors have a length other than the seeds' dim "
+            f"{m * ds} or a NULL element: no centroid is nearest to them"
         )
-    )["c"]
+    merged: dict[tuple[int, int], tuple[int, list[float]]] = {}
+    for r in parts:  # partition order, as collect returns them
+        key = (r["sub"], r["cell"])
+        if key in merged:
+            cnt, s = merged[key]
+            merged[key] = (cnt + r["n"], [a + b for a, b in zip(s, r["sum"])])
+        else:
+            merged[key] = (r["n"], list(r["sum"]))
+    out = [list(book) for book in books]
+    for (j, c), (cnt, s) in merged.items():
+        out[j][c] = [round(v / cnt, 12) for v in s]
+    return out, sum(r["sse"] for r in parts)
 
 
 def pq_encode_packed(
@@ -1039,32 +1144,44 @@ def pq_encode_packed(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Encode every vector to its PACKED PQ codes — ``(id, _codes)``
-    with ``_codes`` an m-int array — in ONE projection: no subvector
-    explode, no groupBy repack.  This is the persisted-index layout
-    (m·log2(k) bits/vector resident next to the id / IVF cell), built
-    once per corpus epoch and served from parquet by the plan layer's
-    fingerprint-keyed cache (round 13, VERDICT r12 #4).
-
-    Equivalence to the exploded :func:`_pq_encode` is pinned in
-    tests/test_invariants.py: both argmins run the identical widened
-    zip_with distance with ties to the lower code, so packed and
-    exploded codes are bit-identical.
-
-    100 TB: a map stage over the corpus with the codebooks as one
-    folded literal — nested higher-order functions (transform over m
-    subslices, argmin over k codewords) keep the whole encode in one
-    JVM projection; output
-    is |corpus| rows of 16 B codes (m=32, k=16)."""
+    """Encode every vector to its PACKED PQ codes — ``(id, _codes)``,
+    ``_codes`` an m-int array of per-subspace :func:`_nearest`
+    codewords, the argmin the fit (:func:`_lloyd_pass`) runs.  This is
+    the persisted-index layout (m·log2(k) bits/vector next to the id /
+    IVF cell), built once per corpus epoch and served from parquet by
+    the plan layer's fingerprint-keyed cache (round 13, VERDICT r12
+    #4).  One map-only ``mapInArrow`` stage over
+    :func:`_pq_unit_base`'s unit vectors (with its in-plan dim check),
+    codebooks in the task closure: no shuffle at any scale."""
     m = len(codebooks)
     ds = len(codebooks[0][0])
     base = _pq_unit_base(df, vec_col, id_col, expected_dim=m * ds)
-    books = _plan_literal(codebooks, _BOOKS)
-    subs = F.array(*[F.slice("_uv", j * ds + 1, ds) for j in range(m)])
-    codes = F.transform(
-        subs, lambda sv, j: _nearest_code(sv, F.element_at(books, j + 1))
-    )
-    return base.select(id_col, codes.alias("_codes"))
+
+    def encode(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        B = np.asarray(codebooks, dtype=np.float64)
+        for batch in batches:
+            # every row is m·ds non-NULL doubles: the dim check raised
+            # on any other length and the norm filter dropped NULLs
+            _, _, rows = _vec_matrix(batch.column(1), m * ds)
+            M = rows(np.arange(batch.num_rows))
+            codes = np.empty((len(M), m), dtype=np.int32)
+            for j in range(m):
+                codes[:, j], _ = _nearest(M[:, j * ds : (j + 1) * ds], B[j])
+            offsets = np.arange(0, codes.size + 1, m, dtype=np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column(0),
+                    pa.ListArray.from_arrays(offsets, pa.array(codes.ravel())),
+                ],
+                names=[id_col, "_codes"],
+            )
+
+    codes = T.StructField("_codes", T.ArrayType(T.IntegerType()), False)
+    schema = T.StructType([base.schema[id_col], codes])
+    return base.mapInArrow(encode, schema)
 
 
 def _packed_lut_fold(lut_col):
@@ -1122,15 +1239,21 @@ def pq_fit_codebooks(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> list[list[list[float]]]:
-    """Fit the ``m`` product-quantization codebooks in ONE Lloyd loop
-    over the checkpointed exploded subvector frame and return them as
+    """Fit the ``m`` product-quantization codebooks and return them as
     a plain nested list (m × codebook_k × dim/m doubles) — pure JSON,
     so the plan layer can PERSIST them keyed by a source fingerprint
     (VERDICT r11 #2): at 100 TB the fit runs offline on a sample, the
     codebooks persist, and every query pays only ADC+rerank over the
-    packed codes.  Deterministic: lowest-id vectors' subvectors seed
-    each subspace; avg/argmin with pinned tie-breaks and 12-dp
-    order-insensitive updates (ADVICE r11)."""
+    packed codes.
+
+    The unit vectors (:func:`_pq_unit_base`, Catalyst doubles) are
+    checkpointed once; each of the ``iters`` Lloyd iterations is then
+    ONE action, a :func:`_lloyd_pass` over all m subspaces at once
+    whose argmin is :func:`_nearest`, the same one
+    :func:`pq_encode_packed` encodes with — ``iters + 2`` actions in
+    all, with the seed collect.  Deterministic: the lowest-id vectors'
+    subvectors seed each subspace, ties go to the lower code, and
+    updates round to 12 dp.  A ragged vector raises ``ValueError``."""
     base = _pq_unit_base(df, vec_col, id_col).localCheckpoint(eager=True)
     # ONE driver action supplies both the codebook seeds and the
     # dimensionality (a separate size() head() was a whole extra job).
@@ -1144,32 +1267,12 @@ def pq_fit_codebooks(
     if dim % m:
         raise ValueError(f"pq_fit_codebooks: m={m} must divide dim={dim}")
     ds = dim // m
-    sub = _pq_subvectors(base, m, dim, id_col).localCheckpoint(eager=True)
     books = [
         [[float(v) for v in r["_uv"][j * ds : (j + 1) * ds]] for r in seeds]
         for j in range(m)
     ]
     for _ in range(iters):
-        stats = (
-            _pq_encode(sub, books, id_col)
-            .groupBy("_sub", "_code")
-            .agg(*[F.avg(F.col("_sv")[i]).alias(f"m{i}") for i in range(ds)])
-            .collect()
-        )
-        for r in stats:  # empty cells keep their previous centroid
-            # 12-dp rounding makes the update order-INSENSITIVE
-            # (ADVICE r11): F.avg over doubles merges partials in
-            # shuffle-fetch order, which Spark does not pin across
-            # runs, so raw means can drift by ulps (~1e-16 on unit
-            # vectors) and flip an argmin code on an exact near-tie —
-            # flaking the determinism certificate the graded
-            # llm_sim_pq hash rests on.  12 dp absorbs merge-order
-            # ulp (quantization step 5e-13 ≫ accumulated ulp for
-            # fixture-scale cell sums) while perturbing real
-            # centroids ~1e6× below any meaningful distance margin.
-            books[r["_sub"]][r["_code"]] = [
-                round(float(r[f"m{i}"]), 12) for i in range(ds)
-            ]
+        books, _ = _lloyd_pass(base, "_uv", books)
     return books
 
 
@@ -1360,34 +1463,55 @@ def kmeans_assign(
     persisted k-means model.  Returns ``(id, vec, cell, sq_dist)``
     with ties to the lower cell id.
 
-    Execution shape (round 17, guide §4.2 — measured ~5× on the Lloyd
-    stats pass): a vectorized ``mapInArrow`` kernel.  The former
-    broadcast-model form evaluated a nested Catalyst lambda chain
-    (``array_min(transform(cents, aggregate(zip_with(...))))``) —
-    interpreted per ELEMENT, i.e. O(rows·k·dim) lambda-machinery
-    evaluations; numpy does the identical double arithmetic on whole
-    batches.  Bit-exactness contract (pinned by
-    tests/test_invariants.py::test_kmeans_assign_matches_literal_form,
-    which compares against the ORIGINAL literal-expression argmin):
-    the float32→float64 element widening, the (a−b)·(a−b) squared
-    diff, the STRICTLY SEQUENTIAL left-fold over dimensions, and the
-    argmin's Spark struct-ordering semantics (NaN larger than every
-    double, ties to the lower cell id) are reproduced operation for
-    operation, so cells AND sq_dist doubles are identical.  Degenerate
-    rows keep the expression path's exact behavior (probed round 17):
-    NULL vector / null element / length≠dim → (cell 0, NULL sq_dist);
-    NaN elements → NaN distances → (cell 0, NaN).  The stage is
-    map-only (one row in, one row out, centroids ride the task
-    closure — k·dim doubles, plan stays constant-size in k), so
-    nothing shuffles at any scale.
+    A vectorized ``mapInArrow`` kernel (round 17, ~5× over the nested
+    Catalyst lambda chain it replaced) runs :func:`_nearest`, whose
+    cells AND sq_dist doubles equal the original literal-expression
+    argmin (pinned by
+    tests/test_invariants.py::test_kmeans_assign_matches_literal_form).
+    Degenerate rows keep the expression path's behavior (probed round
+    17): NULL vector / null element / length≠dim → (cell 0, NULL
+    sq_dist); NaN elements → (cell 0, NaN).  Map-only, centroids in
+    the task closure (plan constant-size in k): nothing shuffles.
+    Per-chunk memory is bounded (CHUNK rows × k distances plus the
+    chunk's float64 matrix), independent of Arrow batch size.
 
-    Extracted from :func:`kmeans_fit_predict` (round 12) so a FITTED
-    model — centroids persisted per corpus epoch, e.g. the plan
-    layer's fingerprint-keyed JSON cache — can assign without
-    re-running Lloyd: the IVF-PQ index build assigns each code row
-    its cell through exactly this pass.
-    The fit loop calls this same function, so fit-time and read-time
-    assignments cannot drift."""
+    A FITTED model — e.g. the plan layer's fingerprint-keyed JSON
+    cache — assigns through this pass without re-running Lloyd (the
+    IVF-PQ index build assigns each code row its cell here), and the
+    fit's :func:`_lloyd_pass` runs the same :func:`_nearest`, so
+    fit-time and read-time assignments cannot drift."""
+    CHUNK = 4096
+
+    def assign(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        C = np.asarray(centroids, dtype=np.float64)
+        for batch in batches:
+            n = batch.num_rows
+            if n == 0:
+                continue
+            id_arr, vec_arr = batch.column(0), batch.column(1)
+            _, degenerate, rows = _vec_matrix(vec_arr, C.shape[1])
+            for c0 in range(0, n, CHUNK):
+                c1 = min(c0 + CHUNK, n)
+                nn = c1 - c0
+                cell = np.zeros(nn, dtype=np.int32)
+                sq = np.full(nn, np.nan, dtype=np.float64)
+                deg = degenerate[c0:c1]
+                ok = ~deg
+                if ok.any():
+                    cell[ok], sq[ok] = _nearest(rows(np.nonzero(ok)[0] + c0), C)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        id_arr.slice(c0, nn),
+                        vec_arr.slice(c0, nn),
+                        pa.array(cell, type=pa.int32()),
+                        pa.array(sq, type=pa.float64(), mask=deg),
+                    ],
+                    names=[id_col, vec_col, "cell", "sq_dist"],
+                )
+
     base = df.select(id_col, vec_col)
     out_schema = T.StructType(
         [
@@ -1397,108 +1521,7 @@ def kmeans_assign(
             T.StructField("sq_dist", T.DoubleType(), True),
         ]
     )
-    return base.mapInArrow(
-        _kmeans_assign_batches(centroids, vec_col, id_col), out_schema
-    )
-
-
-def _kmeans_assign_batches(centroids: list[list[float]], vec_col: str, id_col: str):
-    """Arrow-batch kernel for :func:`kmeans_assign` — see its
-    docstring for the bit-exactness contract.  Per-chunk memory is
-    bounded (CHUNK rows × k distances, plus the chunk's dim-wide
-    float64 matrix), independent of Arrow batch size; list offsets
-    are re-derived via ``list_value_length``/``list_flatten`` so
-    sliced record batches stay correct."""
-
-    CHUNK = 4096
-
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        C = np.asarray(centroids, dtype=np.float64)
-        k, dim = C.shape
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            names = batch.schema.names
-            id_arr = batch.column(names.index(id_col))
-            vec_arr = batch.column(names.index(vec_col))
-            row_null = pc.is_null(vec_arr).to_numpy(zero_copy_only=False)
-            lens = pc.list_value_length(vec_arr).fill_null(-1).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            flat = pc.list_flatten(vec_arr)
-            elem_null_flat = pc.is_null(flat).to_numpy(zero_copy_only=False)
-            vals_flat = flat.fill_null(0).to_numpy(zero_copy_only=False)
-            starts = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(np.where(lens < 0, 0, lens), out=starts[1:])
-            # a row is DEGENERATE (cell 0, NULL sq_dist — the probed
-            # expression-path behavior) iff the vector is NULL, the
-            # length differs from the model dim, or any element is
-            # NULL (zip_with's null-pad/null-product path)
-            # per-row null-element counts via prefix-sum differences —
-            # robust to empty/NULL rows anywhere (np.add.reduceat
-            # mishandles empty segments and raises on trailing ones)
-            cs = np.zeros(starts[-1] + 1, dtype=np.int64)
-            np.cumsum(elem_null_flat.astype(np.int64), out=cs[1:])
-            elem_null_rows = cs[starts[1:]] - cs[starts[:-1]]
-            degenerate = row_null | (lens != dim) | (elem_null_rows > 0)
-            for c0 in range(0, n, CHUNK):
-                c1 = min(c0 + CHUNK, n)
-                nn = c1 - c0
-                cell = np.zeros(nn, dtype=np.int32)
-                sq = np.full(nn, np.nan, dtype=np.float64)
-                deg = degenerate[c0:c1]
-                ok = ~deg
-                if ok.any():
-                    # gather the chunk's valid rows into an (nv, dim)
-                    # float64 matrix (float32→float64 widening is the
-                    # exact cast the expression path applied)
-                    idx = np.nonzero(ok)[0] + c0
-                    gather = (
-                        starts[idx][:, None] + np.arange(dim)[None, :]
-                    ).ravel()
-                    M = vals_flat[gather].astype(np.float64).reshape(-1, dim)
-                    best_d = None
-                    best_c = None
-                    for c in range(k):
-                        diff = M - C[c]
-                        sqd = diff * diff
-                        # strictly sequential left-fold over dims —
-                        # the exact accumulation order of
-                        # aggregate(..., 0.0, (acc, x) -> acc + x)
-                        acc = sqd[:, 0].copy()
-                        for i in range(1, dim):
-                            acc += sqd[:, i]
-                        if best_d is None:
-                            best_d = acc
-                            best_c = np.zeros(len(acc), dtype=np.int32)
-                        else:
-                            # Spark struct-min semantics: NaN is
-                            # LARGER than every double, ties keep the
-                            # lower cell id
-                            better = (acc < best_d) | (
-                                np.isnan(best_d) & ~np.isnan(acc)
-                            )
-                            best_d = np.where(better, acc, best_d)
-                            best_c = np.where(better, c, best_c)
-                    cell[ok] = best_c
-                    sq[ok] = best_d
-                out = pa.RecordBatch.from_arrays(
-                    [
-                        id_arr.slice(c0, nn),
-                        vec_arr.slice(c0, nn),
-                        pa.array(cell, type=pa.int32()),
-                        pa.array(sq, type=pa.float64(), mask=deg),
-                    ],
-                    names=[id_col, vec_col, "cell", "sq_dist"],
-                )
-                yield out
-
-    return gen
+    return base.mapInArrow(assign, out_schema)
 
 
 def kmeans_fit_predict(
@@ -1512,35 +1535,30 @@ def kmeans_fit_predict(
     cell-builder for IVF search (:func:`ivf_topk_kmeans`,
     :func:`ivf_pq_topk`) and cluster-then-dedup pipelines.
 
-    Per iteration, ONE action: the stats collect — a groupBy(cell)
-    with per-dimension avg aggregates over :func:`kmeans_assign`'s
-    map-only ``mapInArrow`` assignment (centroids in the task closure,
-    so the plan stays constant-size in k — asserted at k=256 in
-    tests/test_invariants.py).  One shuffle per iteration, k·dim
-    doubles per partition; at 100 TB the cost is the scans, not the
-    reduce.  A last SSE pass follows the final update.  Deterministic:
-    seeds are the k lowest-id vectors, argmin/avg carry pinned
-    tie-breaks, and updates round to 12 dp.
-
     The ``(id, vec)`` projection is MATERIALIZED once
-    (``localCheckpoint``) before the loop, so each action reads the
-    cached projection instead of re-deriving the source scan — a full
-    corpus re-read per iteration at 100 TB (lineage-asserted in
-    tests/test_invariants.py).  The call therefore runs Spark jobs
-    eagerly, as seeding's collect already did.
+    (``localCheckpoint``), so no later action re-derives the source
+    scan — a full corpus re-read per iteration at 100 TB
+    (lineage-asserted in tests/test_invariants.py).  Each iteration is
+    then ONE action, a :func:`_lloyd_pass` with m = 1: map-only, no
+    shuffle, centroids in the task closure so the plan stays
+    constant-size in k (asserted at k=256), k·dim partial sums per
+    task.  One more pass after the last update supplies the final
+    SSE: ``iters + 3`` actions per call with the checkpoint and the
+    seed collect.  Deterministic: seeds are the k lowest-id vectors,
+    ties go to the lower cell, and updates round to 12 dp.  A NULL
+    vector adds nothing to any mean; a vector whose length differs
+    from the seeds' or with a NULL element raises ``ValueError``.
 
-    Returns (assignments DataFrame [id, cell], centroids list,
-    sse_history list — one SSE per assignment pass, non-increasing,
+    Returns (assignments DataFrame [id, cell] — :func:`kmeans_assign`
+    under the final centroids, centroids list, sse_history list — one
+    SSE per assignment pass, ``iters + 1`` of them, non-increasing,
     asserted in tests/test_invariants.py).
     """
-    # NO parallelism guard here, deliberately (r10 measured it): the
-    # checkpoint pins the source partitioning, and repartitioning a
-    # fixture-sized input to defaultParallelism doubled the key's
-    # wall time (4.0 → 7.2 s) — (iters+2) actions × 32-task
-    # scheduling swamps the trivial per-row argmin.  At 100 TB the
-    # scan supplies ample partitions and a guard would be a no-op
-    # anyway; ensure_parallelism is for CPU-heavy per-row map stages
-    # (shingling), not k·dim arithmetic.
+    # NO parallelism guard here, deliberately (r10 measured it):
+    # repartitioning a fixture-sized input to defaultParallelism
+    # doubled the key's wall time (4.0 → 7.2 s), since every action's
+    # 32-task scheduling swamps the trivial per-row argmin.  At 100 TB
+    # the scan supplies ample partitions anyway.
     base = df.select(id_col, vec_col).localCheckpoint(eager=True)
     seeds = base.orderBy(id_col).limit(k).collect()
     if len(seeds) < k:
@@ -1548,36 +1566,14 @@ def kmeans_fit_predict(
             f"kmeans_fit_predict: need at least k={k} input rows to "
             f"seed centroids, got {len(seeds)}"
         )
-    centroids = [list(map(float, r[vec_col])) for r in seeds]
-
-    def assign(cents: list[list[float]]) -> DataFrame:
-        return kmeans_assign(base, cents, vec_col=vec_col, id_col=id_col)
-
-    dim = len(centroids[0])
+    books = [[list(map(float, r[vec_col])) for r in seeds]]
     sse_history: list[float] = []
-    assigned = assign(centroids)
     for _ in range(iters):
-        stats = assigned.groupBy("cell").agg(
-            F.sum("sq_dist").alias("sse"),
-            *[
-                F.avg(F.col(vec_col)[i]).alias(f"m{i}")
-                for i in range(dim)
-            ],
-        ).collect()
-        sse_history.append(float(sum(r["sse"] for r in stats)))
-        new_cents = list(centroids)
-        for r in stats:  # empty cells keep their previous centroid
-            # 12-dp rounding for shuffle-merge-order insensitivity —
-            # same rationale as the PQ codebook update above (the
-            # latent form of ADVICE r11's pq finding lived here)
-            new_cents[r["cell"]] = [
-                round(float(r[f"m{i}"]), 12) for i in range(dim)
-            ]
-        centroids = new_cents
-        assigned = assign(centroids)
-    sse_history.append(
-        float(assigned.agg(F.sum("sq_dist")).collect()[0][0])
-    )
+        books, sse = _lloyd_pass(base, vec_col, books)
+        sse_history.append(sse)
+    sse_history.append(_lloyd_pass(base, vec_col, books)[1])
+    centroids = books[0]
+    assigned = kmeans_assign(base, centroids, vec_col=vec_col, id_col=id_col)
     return assigned.select(id_col, "cell"), centroids, sse_history
 
 

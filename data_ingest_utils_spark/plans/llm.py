@@ -86,7 +86,8 @@ def _pq_codebooks_cached(spark: SparkSession, sf_dir: str) -> list:
     #2): the Lloyd fit is FIXTURE state — offline, once per corpus
     epoch in the 100 TB story — while the graded retrieval path is
     encode + ADC + rerank, so the fitted m×k×(dim/m) tensor is cached
-    and every later invocation skips the fit's ~6 driver actions.  The
+    and every later invocation skips the fit's 4 driver actions
+    (checkpoint, seed collect, one per Lloyd iteration).  The
     fit is deterministic (seeded, order-insensitive updates), so a
     cache hit serves bit-identical codebooks to a refit."""
 
@@ -2584,8 +2585,8 @@ def llm_sim_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition column and a probe is partition pruning.  Recall vs
     brute force pinned in tests/test_invariants.py.  Centroids come
     from the fingerprint-keyed JSON cache (round 12) — identical
-    output to a fresh fit (deterministic Lloyd), minus its ~4
-    driver actions per invocation."""
+    output to a fresh fit (deterministic Lloyd), minus its 5 driver
+    actions per invocation (``iters + 3`` at iters=2)."""
     q, _ = _query_vec(spark, sf_dir, 0)
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") != 0)
     cents = _kmeans_centroids_cached(spark, sf_dir, k=8, iters=2)

@@ -3,6 +3,8 @@ connection with fixture views per scale factor."""
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -28,3 +30,17 @@ def duck():
         )
     yield con
     con.close()
+
+
+def count_jobs(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted by job group
+    after the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

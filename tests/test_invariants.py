@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from data_ingest_utils_spark.operators import dedup as dd
 from data_ingest_utils_spark.operators import ingest as ing
 from data_ingest_utils_spark.operators import similarity as sim
-from tests.conftest import SF_T2
+from tests.conftest import SF_T2, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -711,11 +711,16 @@ def test_retrieval_rung_rejects_bad_query(spark, rung, bad, match):
 
 SCALE_SF1 = ".scale/sf1.0"
 
-
-@pytest.mark.skipif(
-    not __import__("os").path.isdir(SCALE_SF1),
-    reason="scale dir absent — run tools/make_scale_data.py",
+#: the sf1.0 tests run only on a COMPLETE scale dir: the generator
+#: writes embeddings last, and Spark's committer writes its _SUCCESS
+#: marker only when that write finished
+needs_scale_sf1 = pytest.mark.skipif(
+    not __import__("os").path.isfile(f"{SCALE_SF1}/embeddings.parquet/_SUCCESS"),
+    reason="scale dir absent or incomplete — run tools/make_scale_data.py",
 )
+
+
+@needs_scale_sf1
 def test_binary_hamming_recall_monotone_in_coarse_k_at_scale(spark):
     """The cheapest retrieval rung's quality AT SCALE (VERDICT r13 #3):
     recall@5 vs exact brute-force cosine over the 20 k-vector sf1.0
@@ -745,10 +750,7 @@ def test_binary_hamming_recall_monotone_in_coarse_k_at_scale(spark):
     assert recalls[-1] >= 4, recalls
 
 
-@pytest.mark.skipif(
-    not __import__("os").path.isdir(SCALE_SF1),
-    reason="scale dir absent — run tools/make_scale_data.py",
-)
+@needs_scale_sf1
 def test_int8_and_pq_recall_monotone_in_coarse_k_at_scale(spark):
     """The OTHER two coarse rungs' quality at scale (round 14,
     completing the ladder after the binary rung's certificate): int8
@@ -780,10 +782,7 @@ def test_int8_and_pq_recall_monotone_in_coarse_k_at_scale(spark):
         assert recalls[-1] >= 4, (rung, recalls)
 
 
-@pytest.mark.skipif(
-    not __import__("os").path.isdir(SCALE_SF1),
-    reason="scale dir absent — run tools/make_scale_data.py",
-)
+@needs_scale_sf1
 def test_banded_jaccard_planted_recall_at_scale(spark):
     """Banded-dedup candidate recall AT SCALE (round 14, same evidence
     pattern as the binary rung's sf1.0 certificate): 15 planted
@@ -949,6 +948,21 @@ def test_scale_data_embedding_replication(spark, tmp_path):
     )
     assert paired.count() == n0
     assert paired.filter(F.col("o.embedding") == F.col("p.embedding")).count() == 0
+
+
+def test_scale_data_bad_source_leaves_no_dst(spark, tmp_path):
+    """A source that cannot be read fails the generator before anything
+    is written: no empty destination is left behind to pass for a scale
+    dir."""
+    import sys as _sys
+
+    _sys.path.insert(0, str(__import__("pathlib").Path(__file__).parents[1]))
+    from tools.make_scale_data import generate
+
+    dst = tmp_path / "dst"
+    with pytest.raises(Exception):
+        generate(spark, str(tmp_path / "missing"), str(dst), 2)
+    assert not dst.exists()
 
 
 def test_kmeans_k256_constant_plan(spark):
@@ -1998,26 +2012,113 @@ def test_pq_plan_shapes(spark):
     assert "CartesianProduct" not in vplan, vplan
 
 
-def test_pq_packed_encode_matches_exploded(spark):
-    """pq_encode_packed (round 13) is bit-identical to the exploded
-    _pq_encode repacked — same widened zip_with distances, same
-    lower-code tie-break — so serving from the cached packed index
-    can never drift from the certified encode."""
-    emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet").limit(200)
+def _nearest_literal(sv, book):
+    """The Catalyst nearest-codeword argmin the PQ encode and fit ran
+    before the shared numpy one, as its ``(d, c)`` struct: squared-L2
+    left fold per codeword, array_min over (d, index) structs — ties
+    to the lower index, NaN above every double."""
+    return F.array_min(
+        F.transform(
+            book,
+            lambda cv, i: F.struct(
+                F.aggregate(
+                    F.zip_with(sv, cv, lambda a, b: (a - b) * (a - b)),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x,
+                ).alias("d"),
+                i.alias("c"),
+            ),
+        )
+    )
+
+
+def test_pq_packed_encode_matches_literal_form(spark):
+    """pq_encode_packed's numpy argmin (similarity._nearest) must give
+    every vector the codes of the literal Catalyst argmin over the same
+    unit subvectors, so serving from the cached packed index can never
+    drift from the expression form it replaced."""
+    from pyspark.sql import types as T
+
+    emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet").filter(
+        F.col("vec_id") < 200
+    )
     books = sim.pq_fit_codebooks(emb, m=8, codebook_k=4, iters=1)
+    ds = len(books[0][0])
     packed = {
         r["vec_id"]: list(r["_codes"])
         for r in sim.pq_encode_packed(emb, books).collect()
     }
+    lit = sim._plan_literal(books, T.ArrayType(T.ArrayType(sim._VEC)))
+    subs = F.array(*[F.slice("_uv", j * ds + 1, ds) for j in range(8)])
+    codes = F.transform(
+        subs, lambda sv, j: _nearest_literal(sv, F.element_at(lit, j + 1))["c"]
+    )
     base = sim._pq_unit_base(emb, "embedding", "vec_id")
-    dim = 8 * len(books[0][0])
-    sub = sim._pq_subvectors(base, 8, dim, "vec_id")
-    exploded = {}
-    for r in sim._pq_encode(sub, books, "vec_id").collect():
-        exploded.setdefault(r["vec_id"], {})[r["_sub"]] = r["_code"]
-    assert set(packed) == set(exploded)
-    for vid, codes in packed.items():
-        assert codes == [exploded[vid][j] for j in range(8)], vid
+    literal = {
+        r["vec_id"]: list(r["_codes"])
+        for r in base.select("vec_id", codes.alias("_codes")).collect()
+    }
+    assert len(packed) == 200
+    assert packed == literal
+
+
+def test_nearest_ties_and_nan_match_struct_min(spark):
+    """similarity._nearest on the cases Spark's struct ordering pins:
+    an exact tie goes to the lower index, a NaN distance loses to every
+    number, and an all-NaN row lands on index 0 — indices AND distance
+    doubles equal the literal argmin's."""
+    import numpy as np
+
+    nan = float("nan")
+    book = [[nan, 0.0], [0.0, 1.0], [1.0, 0.0], [0.0, 1.0]]
+    rows = [[1.0, 1.0], [0.0, 1.0], [nan, 0.0], [0.9, 0.1]]
+    idx, d = sim._nearest(np.asarray(rows), np.asarray(book))
+    df = spark.createDataFrame(list(enumerate(rows)), "i int, v array<double>")
+    lit = F.array(*[F.array(*[F.lit(x) for x in c]) for c in book])
+    want = (
+        df.select("i", _nearest_literal(F.col("v"), lit).alias("b"))
+        .orderBy("i")
+        .select("b.c", "b.d")
+        .collect()
+    )
+    assert list(idx) == [r.c for r in want] == [1, 1, 0, 2]
+    np.testing.assert_array_equal(d, [r.d for r in want])
+
+
+def test_fits_run_one_job_per_lloyd_pass(spark):
+    """Each Lloyd iteration is ONE job (a _lloyd_pass collect): k-means
+    k=8 iters=2 runs checkpoint + seed collect + 2 passes + the final
+    SSE pass, the PQ fit checkpoint + seed collect + 2 passes."""
+    emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet")
+    _, km = count_jobs(spark, lambda: sim.kmeans_fit_predict(emb, k=8, iters=2))
+    _, pq = count_jobs(
+        spark, lambda: sim.pq_fit_codebooks(emb, m=32, codebook_k=16, iters=2)
+    )
+    assert km <= 5 and pq <= 4, (km, pq)
+
+
+def test_fits_reject_ragged_and_skip_null_vectors(spark):
+    """Fit input the model cannot place: a vector of another length
+    than the seeds, or one with a NULL element, raises instead of
+    landing in cell 0 and skewing its means; a NULL vector adds
+    nothing, so an extra high-id NULL row leaves the centroids as they
+    were."""
+    emb = spark.read.parquet(f"{SF_T2}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    top = emb.agg(F.max("vec_id")).collect()[0][0]
+
+    def plus(vec):
+        return emb.union(spark.createDataFrame([(top + 1, vec)], emb.schema))
+
+    _, cents, _ = sim.kmeans_fit_predict(emb, k=8, iters=2)
+    assert sim.kmeans_fit_predict(plus(None), k=8, iters=2)[1] == cents
+    dim = len(cents[0])
+    for bad in ([0.5] * (dim - 1), [None] + [0.5] * (dim - 1)):
+        with pytest.raises(ValueError, match="NULL element"):
+            sim.kmeans_fit_predict(plus(bad), k=8, iters=2)
+    with pytest.raises(ValueError, match="NULL element"):
+        sim.pq_fit_codebooks(plus([0.5] * (dim + 8)), m=8, codebook_k=4, iters=1)
 
 
 def test_pq_dim_mismatch_raises(spark):
@@ -2666,3 +2767,38 @@ def test_knn_join_gemm_matches_join_path(spark):
         sim.knn_join_blocked(base, k=10_000).orderBy("vec_id", "rnk").collect()
     )
     assert [tuple(r) for r in gbig] == [tuple(r) for r in jbig]
+
+
+def test_readme_library_example_binds():
+    """Every library call in README's "Using as a library" block binds
+    to its function's current signature, so the example cannot go
+    stale as parameters are removed or made keyword-only."""
+    import ast
+    import inspect
+    from pathlib import Path
+
+    readme = (Path(__file__).parents[1] / "README.md").read_text()
+    section = readme.split("## Using as a library", 1)[1]
+    tree = ast.parse(section.split("```python", 1)[1].split("```", 1)[0])
+    ns: dict = {}
+    imports = [n for n in tree.body if isinstance(n, (ast.Import, ast.ImportFrom))]
+    exec(compile(ast.Module(imports, []), "README", "exec"), ns)
+
+    def resolve(f):
+        if isinstance(f, ast.Name):
+            return ns.get(f.id)
+        if isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+            return getattr(ns.get(f.value.id), f.attr, None)
+        return None
+
+    bound = set()
+    for call in (n for n in ast.walk(tree) if isinstance(n, ast.Call)):
+        fn = resolve(call.func)
+        if getattr(fn, "__module__", "").startswith("data_ingest_utils_spark"):
+            inspect.signature(fn).bind(
+                *call.args, **{kw.arg: kw.value for kw in call.keywords}
+            )
+            bound.add(fn.__name__)
+    assert {
+        "minhash_jaccard_verified", "kmeans_fit_predict", "ivf_topk_kmeans"
+    } <= bound, bound

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -18,21 +17,7 @@ from data_ingest_utils_spark.sources import readers
 from data_ingest_utils_spark.sources.readers import TABLES, load_table
 from data_ingest_utils_spark.sources.writers import read_back, write_partitioned
 
-from tests.conftest import SF_T2
-
-
-def _jobs(spark, fn):
-    """``(fn(), number of Spark jobs fn ran)``, counted by job group
-    after the listener bus has delivered every event."""
-    sc = spark.sparkContext
-    group = f"memo-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+from tests.conftest import SF_T2, count_jobs
 
 
 def _fields(schema: T.StructType) -> list[tuple]:
@@ -48,10 +33,10 @@ def test_second_load_table_runs_no_job(spark, table):
     """A repeated read of an unchanged fixture table is served from the
     memo: no job, and the schema Spark would infer, field by field."""
     load_table(spark, SF_T2, table)
-    df, n_jobs = _jobs(spark, lambda: load_table(spark, SF_T2, table))
+    df, n_jobs = count_jobs(spark, lambda: load_table(spark, SF_T2, table))
     assert n_jobs == 0
     path = f"{SF_T2}/{table}.parquet"
-    served, n_raw = _jobs(spark, lambda: readers.read_parquet(spark, path))
+    served, n_raw = count_jobs(spark, lambda: readers.read_parquet(spark, path))
     assert n_raw == 0
     assert _fields(served.schema) == _fields(spark.read.parquet(path).schema)
     if table != "events":
@@ -76,7 +61,7 @@ def test_ns_events_ts_normalized_from_memo(spark, tmp_path):
     ns = pa.array([-1500, 0, 1_700_000_000_123_456_789], pa.timestamp("ns"))
     pq.write_table(pa.table({"event_id": [1, 2, 3], "ts": ns}), tmp_path / "events.parquet")
     load_table(spark, str(tmp_path), "events")
-    df, n_jobs = _jobs(spark, lambda: load_table(spark, str(tmp_path), "events"))
+    df, n_jobs = count_jobs(spark, lambda: load_table(spark, str(tmp_path), "events"))
     assert n_jobs == 0
     assert isinstance(df.schema["ts"].dataType, T.TimestampNTZType)
     us = df.orderBy("event_id").selectExpr(
@@ -106,7 +91,7 @@ def test_rewritten_table_is_never_served_a_stale_schema(spark, tmp_path):
     _write_dir(spark, parts_t, [(1,), (2,)], "a long")
     for sf in (single, parts):
         load_table(spark, sf, "t")
-        df, n_jobs = _jobs(spark, lambda sf=sf: load_table(spark, sf, "t"))
+        df, n_jobs = count_jobs(spark, lambda sf=sf: load_table(spark, sf, "t"))
         assert (df.columns, n_jobs) == (["a"], 0)
 
     _write_file(
@@ -173,8 +158,8 @@ def test_read_back_round_trip_is_memoized(spark, tmp_path):
         [(i, i % 3, float(i)) for i in range(12)], "id long, k long, v double"
     )
     write_partitioned(frame, path, ["k"])
-    first, n_first = _jobs(spark, lambda: read_back(spark, path))
-    second, n_second = _jobs(spark, lambda: read_back(spark, path))
+    first, n_first = count_jobs(spark, lambda: read_back(spark, path))
+    second, n_second = count_jobs(spark, lambda: read_back(spark, path))
     assert (n_first >= 1, n_second) == (True, 0)
     assert first.columns == second.columns == ["id", "v", "k"]
     assert first.schema["k"].dataType == second.schema["k"].dataType == T.IntegerType()

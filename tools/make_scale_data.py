@@ -78,8 +78,6 @@ def generate(spark: SparkSession, src: str, dst: str, n: int) -> int:
     embedding replication invariants through this at tiny scale)."""
     from data_ingest_utils_spark.sources.readers import load_table
 
-    os.makedirs(dst, exist_ok=True)
-
     def write(df: DataFrame, name: str, parts: int) -> None:
         df.repartition(parts).write.mode("overwrite").parquet(f"{dst}/{name}.parquet")
         print(f"  {name}: done", file=sys.stderr)
